@@ -165,10 +165,6 @@ def _on_signal(signum, frame):  # noqa: ARG001
     os._exit(0)
 
 
-signal.signal(signal.SIGTERM, _on_signal)
-signal.signal(signal.SIGINT, _on_signal)
-
-
 def skip(section: str, est: float) -> None:
     OUT["skipped_sections"].append(
         {"section": section, "est_secs": est, "remaining_secs": round(remaining(), 1)}
@@ -274,20 +270,21 @@ def wait_for_quiet_host(
         time.sleep(poll)
 
 
-def _run_child(cmd: list[str], timeout: float) -> str:
-    """Run a child process tracked for signal-time cleanup; returns stdout
-    ('' on timeout/kill)."""
+def _run_child(cmd: list[str], timeout: float) -> tuple[str, int | None, str]:
+    """Run a child process tracked for signal-time cleanup; returns
+    (stdout, exit code, stderr). The exit code is None when the child overran
+    ``timeout`` and was killed."""
     p = subprocess.Popen(
         cmd, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True
     )
     _CHILDREN.add(p)
     try:
-        out, _err = p.communicate(timeout=timeout)
-        return out or ""
+        out, err = p.communicate(timeout=timeout)
+        return out or "", p.returncode, err or ""
     except subprocess.TimeoutExpired:
         p.kill()
         p.communicate()
-        return ""
+        return "", None, ""
     finally:
         _CHILDREN.discard(p)
 
@@ -352,8 +349,8 @@ print(json.dumps({{"cores": {cores}, "streaming": {streaming!r},
                    "events_per_sec": round({N_EVENTS} / min(times), 1),
                    "final_rows": rows, "stages": stages}}))
 """
-    out = _run_child([sys.executable, "-c", code],
-                     timeout=max(120.0, remaining() + 60))
+    out, _rc, _err = _run_child([sys.executable, "-c", code],
+                                timeout=max(120.0, remaining() + 60))
     return _last_json(out, {"cores": cores, "error": "no output / timeout"})
 
 
@@ -395,8 +392,8 @@ print(json.dumps({{"cores": {cores}, "merge_mode": {merge_mode!r},
                    "events_per_sec": round(n_tail / secs, 1),
                    "final_rows": rows}}))
 """
-    out = _run_child([sys.executable, "-c", code],
-                     timeout=max(120.0, remaining() + 60))
+    out, _rc, _err = _run_child([sys.executable, "-c", code],
+                                timeout=max(120.0, remaining() + 60))
     return _last_json(out, {"cores": cores, "merge_mode": merge_mode,
                             "error": "no output / timeout"})
 
@@ -513,7 +510,9 @@ def run_bounded(spark, fn, secs: float):
 def oracle_subprocess(name: str, sf_dir: str, timeout: float):
     """Run one catalog entry's DuckDB oracle in a subprocess with a hard
     timeout (a runaway recursive-CTE oracle cannot eat the run); returns
-    the result pandas frame or raises TimeoutError/RuntimeError."""
+    the result pandas frame. Raises TimeoutError only when the child
+    overran; a child that failed raises RuntimeError with its exit code and
+    stderr tail."""
     with tempfile.NamedTemporaryFile(suffix=".pkl", delete=False) as f:
         out_path = f.name
     code = f"""
@@ -528,9 +527,13 @@ with open({out_path!r}, "wb") as f:
 print("OK")
 """
     try:
-        out = _run_child([sys.executable, "-c", code], timeout=timeout)
-        if "OK" not in out:
-            raise TimeoutError(f"oracle for {name} timed out/failed ({timeout}s)")
+        out, rc, err = _run_child([sys.executable, "-c", code], timeout=timeout)
+        if rc is None:
+            raise TimeoutError(f"oracle for {name} timed out ({timeout}s)")
+        if rc != 0 or "OK" not in out:
+            raise RuntimeError(
+                f"oracle for {name} failed (exit {rc}): {err[-300:]}"
+            )
         with open(out_path, "rb") as f:
             return pickle.load(f)
     finally:
@@ -570,7 +573,7 @@ def catalog_sweep(deadline: float) -> dict[str, float]:
             timings[name] = -1.0
         n_done += 1
         if n_done % 25 == 0:
-            OUT["queries"] = dict(timings)
+            OUT["queries"].update(timings)
             emit_partial()
     # stop streaming state-store maintenance before the JVM goes away
     # (round-4 tail showed a post-stop maintenance-thread error)
@@ -664,7 +667,7 @@ def sf1_spot(timings: dict[str, float]) -> dict | None:
                 rec["err"] = "oracle timeout"
             except Exception as e:  # noqa: BLE001
                 rec["ok"] = False
-                rec["err"] = str(e)[:200]
+                rec["err"] = str(e)[:400]
             rec["gate_secs"] = round(time.time() - t1, 3)
         entries[name] = rec
         emit_partial()
@@ -690,6 +693,8 @@ def sf1_spot(timings: dict[str, float]) -> dict | None:
 
 
 def main() -> None:
+    signal.signal(signal.SIGTERM, _on_signal)
+    signal.signal(signal.SIGINT, _on_signal)
     cdc = OUT["cdc"]
     t0 = time.time()
     events_dir = bench_events_dir()

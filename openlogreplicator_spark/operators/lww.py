@@ -7,35 +7,42 @@ this collapses to: the winning event per key is the max over the total order
 ``(warc_ts, seq)`` — ``warc_ts`` is the SCN analogue, ``seq`` breaks ties the
 way (scn, subScn) sorting does (Parser.cpp:1352-1358).
 
-Three implementations, proven equivalent by tests/test_lww.py:
+The rule is fixed; only its plan varies. ``lww_compact_auto`` is the one
+entry point the engine calls, and it picks the plan from the winner-set
+size:
 
-* ``lww_compact``        — ``groupBy(key).agg(max_by(payload, order))``. This is
-  already a TWO-PHASE merge-apply: Catalyst plans partial hash aggregation
-  map-side (each input partition emits at most one candidate per key it saw)
-  before the shuffle, then final aggregation. Hot keys therefore cost O(#input
-  partitions) post-shuffle rows, not O(#events). The plan shows
-  ``HashAggregate(partial) → Exchange(hash(key)) → HashAggregate(final)``.
-* ``lww_compact_salted`` — the explicit salted variant from the north rule:
-  repartition on ``(key, salt)`` with ``salt = pmod(xxhash64(seq), n_salts)``,
-  phase-1 max per (key, salt), then phase-2 max per key. Equivalent because
-  max-by over a total order is associative and commutative; salting only
-  changes the reduction tree shape. Used when the aggregation buffer itself is
-  the bottleneck (e.g. heavier per-group state than max_by).
-* ``lww_compact_window`` — ``row_number() over (partition by key order by
-  order desc) = 1``. The readable spec, but a full sort per key partition and
-  NO partial aggregation — kept as the differential-testing oracle, not the
-  production path (it is exactly what a naive port would do; at 10^10 events a
-  hot key makes a single task sort ~5% of the stream).
+* ``lww_compact_semijoin`` (up to ``BROADCAST_BUDGET_KEYS`` keys) — winners
+  are found on the narrow ``(key, order)`` columns, broadcast as 8-byte
+  hashes and semi-joined back to the payload, so wide rows never shuffle.
+* ``lww_compact_salted`` (above it) — explicit two-phase max per
+  ``(key, salt)`` then per key, with ``N_SALTS`` salts; no broadcast.
+* ``lww_compact`` — one ``max_by`` aggregate; the exact post-compaction of
+  the semijoin and the building block of both phases of the salted form.
+
+Plan shape: ``max_by(struct)`` and ``max(struct)`` buffers are not
+hash-aggregable, so every aggregate here plans as ``Sort → SortAggregate``
+— partial (map-side, before the shuffle) then final. Hot keys therefore
+still cost O(#input partitions) post-shuffle rows, not O(#events).
+
+All forms are value-equivalent (tests/test_lww.py, which also holds the
+row_number and applyInPandas oracles they are checked against).
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_ORDER = ("warc_ts", "_seq")
+
+# Winner-set size (distinct keys) above which the semijoin's broadcast of one
+# 8-byte hash per winner, and the driver-side hash build behind it, is
+# replaced by the salted two-phase form. Read at call time.
+BROADCAST_BUDGET_KEYS = 20_000_000
+# Salt count of the two-phase form. Read at call time.
+N_SALTS = 8
 
 
 def _order_struct(order: Sequence[str]):
@@ -58,14 +65,17 @@ def lww_compact_salted(
     df: DataFrame,
     key: str = "url",
     order: Sequence[str] = DEFAULT_ORDER,
-    n_salts: int = 8,
     salt_source: str = "_seq",
 ) -> DataFrame:
     """Explicit two-phase salted LWW (north_rule: 'salted repartition +
-    two-phase merge-apply'). Deterministic: the salt is a pure function of the
-    event (never rand()), so replays partition identically."""
+    two-phase merge-apply'): phase-1 max per (key, salt) with
+    ``salt = pmod(xxhash64(salt_source), N_SALTS)``, phase-2 max per key.
+    Equivalent to ``lww_compact`` because max over a total order is
+    associative and commutative; salting only changes the reduction tree.
+    Deterministic: the salt is a pure function of the event (never rand()),
+    so replays partition identically."""
     payload = F.struct(*[F.col(c) for c in df.columns])
-    salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts)).cast("int")
+    salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(N_SALTS)).cast("int")
     # phase 1's groupBy plans its own Exchange on (key, salt) — that IS the
     # salted repartition (an explicit .repartition() first would only add a
     # second, redundant shuffle of the full input).
@@ -88,117 +98,53 @@ def lww_compact_semijoin(
     df: DataFrame,
     key: str = "url",
     order: Sequence[str] = DEFAULT_ORDER,
-    mode: str = "hash",
 ) -> DataFrame:
     """Wide-payload LWW: find each key's winning order tuple on NARROW columns
     only (key + order — a few bytes/row), then semi-join the winners back to
     the payload. The payload is never shuffled — for web-page rows (html ≈
     KBs) this removes the dominant shuffle of the max_by/window forms.
 
-    mode="hash" (default, the scale path): broadcast only
-    ``xxhash64(key, order)`` of each winner — 8 bytes/winner, so tens of
-    millions of per-epoch winners broadcast in ~100 MB and the driver-side
-    hash-table build stays cheap. A 64-bit collision could let a LOSER row
-    through the semi-join, so an exact ``max_by`` compaction runs on the
-    (winner-sized) survivor set — the true winner always survives the
-    semi-join, so the post-compaction is exact regardless of collisions, and
-    it only shuffles winner-sized data.
-
-    mode="full": broadcast the full (key, order) winner rows — exact join,
-    no post-compaction; cheaper when the winner set is small.
-
-    Both are equivalent to lww_compact (tests/test_lww.py): the order tuple
-    is unique per event (seq is globally unique).
-    """
+    Only ``xxhash64(key, order)`` of each winner is broadcast — 8 bytes per
+    winner, so tens of millions of per-epoch winners broadcast in ~100 MB and
+    the driver-side hash-table build stays cheap. A 64-bit collision could
+    let a LOSER row through the semi-join, so an exact ``max_by`` compaction
+    runs on the (winner-sized) survivor set — the true winner always survives
+    the semi-join, so the result is exact regardless of collisions."""
     ord_col = _order_struct(order)
     winners = df.groupBy(key).agg(F.max(ord_col).alias("_lww_ord"))
-    if mode == "hash":
-        win_h = F.broadcast(
-            winners.select(
-                F.xxhash64(F.col(key), F.col("_lww_ord")).alias("_lww_h")
-            )
-        )
-        probe_h = F.xxhash64(F.col(key), ord_col)
-        candidates = df.join(win_h, probe_h == F.col("_lww_h"), "leftsemi")
-        return lww_compact(candidates, key=key, order=order)
-    winners = F.broadcast(
-        winners.select(F.col(key).alias("_lww_key"), "_lww_ord")
+    win_h = F.broadcast(
+        winners.select(F.xxhash64(F.col(key), F.col("_lww_ord")).alias("_lww_h"))
     )
-    return (
-        df.join(
-            winners,
-            (F.col(key) == F.col("_lww_key")) & (ord_col == F.col("_lww_ord")),
-            "inner",
-        )
-        .drop("_lww_key", "_lww_ord")
-    )
+    probe_h = F.xxhash64(F.col(key), ord_col)
+    candidates = df.join(win_h, probe_h == F.col("_lww_h"), "leftsemi")
+    return lww_compact(candidates, key=key, order=order)
 
 
 def choose_lww_strategy(
-    df: DataFrame,
-    key: str = "url",
-    broadcast_budget_keys: int = 20_000_000,
-    approx_rows: int | None = None,
+    df: DataFrame, key: str = "url", approx_rows: int | None = None
 ) -> str:
-    """Pick 'semijoin' vs 'salted' by estimated winner-set size (round-1
-    verdict task 6): the semijoin broadcasts ~8 bytes per distinct key, so at
-    billions of keys the broadcast + driver hash build blow past any sane
-    budget and the salted two-phase form is the right plan. Estimation order:
-    ``approx_rows`` (total epoch rows — a free upper bound on distinct keys)
-    short-circuits when already under budget; otherwise one
-    approx_count_distinct job over the narrow key column (2% rsd)."""
-    if approx_rows is not None and approx_rows <= broadcast_budget_keys:
+    """'semijoin' while the winner set fits ``BROADCAST_BUDGET_KEYS``, else
+    'salted'. ``approx_rows`` (rows feeding the fold — a free upper bound on
+    distinct keys, from file footers or the manifest) short-circuits when
+    already under budget; otherwise one approx_count_distinct job over the
+    narrow key column (2% rsd) decides."""
+    budget = BROADCAST_BUDGET_KEYS
+    if approx_rows is not None and approx_rows <= budget:
         return "semijoin"
     est = df.agg(
         F.approx_count_distinct(key, rsd=0.02).alias("n")
     ).collect()[0]["n"]
-    return "semijoin" if est <= broadcast_budget_keys else "salted"
+    return "semijoin" if est <= budget else "salted"
 
 
 def lww_compact_auto(
     df: DataFrame,
     key: str = "url",
     order: Sequence[str] = DEFAULT_ORDER,
-    broadcast_budget_keys: int = 20_000_000,
-    n_salts: int = 8,
     approx_rows: int | None = None,
 ) -> DataFrame:
-    """Single entry point that auto-selects the LWW strategy (all strategies
-    are value-equivalent, tests/test_lww.py — this only changes the plan)."""
-    strategy = choose_lww_strategy(df, key, broadcast_budget_keys, approx_rows)
-    if strategy == "semijoin":
+    """The engine's LWW entry point: the plan ``choose_lww_strategy`` picks,
+    same rows either way."""
+    if choose_lww_strategy(df, key, approx_rows) == "semijoin":
         return lww_compact_semijoin(df, key=key, order=order)
-    return lww_compact_salted(df, key=key, order=order, n_salts=n_salts)
-
-
-def lww_compact_grouped_pandas(
-    df: DataFrame, key: str = "url", order: Sequence[str] = DEFAULT_ORDER
-) -> DataFrame:
-    """applyInPandas grouped-map LWW (SURVEY.md §2.10's per-key fallback
-    surface): one Arrow batch per key group, winner picked in pandas.
-    Functionally identical to the others; use only when the per-group logic
-    outgrows what max_by can express (e.g. multi-row merge of partial
-    images, the reference's row-piece chaining J3) — for plain LWW the
-    JVM-side forms are strictly faster."""
-    import pandas as pd
-
-    cols = list(df.columns)
-    order_cols = list(order)
-
-    def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        w = pdf.sort_values(order_cols, kind="stable").tail(1)
-        return w[cols]
-
-    return df.groupBy(key).applyInPandas(pick, df.schema)
-
-
-def lww_compact_window(
-    df: DataFrame, key: str = "url", order: Sequence[str] = DEFAULT_ORDER
-) -> DataFrame:
-    """row_number()-based LWW — differential-testing oracle for the two above."""
-    w = Window.partitionBy(key).orderBy(*[F.col(c).desc() for c in order])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return lww_compact_salted(df, key=key, order=order)

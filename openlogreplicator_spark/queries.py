@@ -154,7 +154,7 @@ def cdc_lww_latest_salted(spark, sf_dir):
     rule's literal form ('salted repartition + window-over-(key, ts)
     last-writer-wins') and the 10^9-key fallback lww_compact_auto engages
     above the broadcast budget. Phase 1 collapses each (key, salt) group
-    map-side (hot keys split across salts), phase 2 folds the ≤ n_salts
+    map-side (hot keys split across salts), phase 2 folds the ≤ N_SALTS
     survivors per key; shares cdc_lww_latest's oracle, proving the skew
     path is value-identical to the max_by and semijoin twins."""
     from .operators.lww import lww_compact_salted
@@ -8902,7 +8902,7 @@ def engine_zorder_slice(spark, sf_dir):
         )
         p.run_batch_replay()
         t = LakeTable.load(spark, p.table_path)
-        zorder_buckets(t, cat_col="lang", ts_col="warc_ts", bits=8,
+        zorder_buckets(t, cat_col="lang", bits=8,
                        target_rows_per_file=8)
         _ZORDER_REPLAY[ev] = p.table_path
         hit = p.table_path

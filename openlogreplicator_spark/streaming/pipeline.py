@@ -16,7 +16,7 @@ and per epoch (apply_epoch):
       (LakeTable.evolve — metadata only)
     → project ALL dml in one pass (P3-P9 decode; per-row schema_ver resolves
       the versioned column name, so one merge per epoch, not one per version)
-    → salted two-phase LWW compaction (A3)
+    → LWW compaction (A3; plan picked from the footer row count)
     → merge_into target (J5, idempotent)
     → lineage/metrics side table append (A5, Parser.cpp:1482-1512 counters)
 
@@ -44,13 +44,15 @@ from ..operators.decode import (
     parse_ddl_sql,
     project_dml,
 )
-from ..operators.lww import (
-    lww_compact,
-    lww_compact_auto,
-    lww_compact_salted,
-    lww_compact_semijoin,
+from ..operators.lww import lww_compact_auto
+from ..operators.merge import (
+    _stage,
+    compact_table,
+    merge_append,
+    merge_into,
+    read_state,
+    read_state_partial,
 )
-from ..operators.merge import merge_append, merge_into, read_state
 
 # Target-table base schema (log schema_ver = 1). _seq/_op are engine columns:
 # the LWW tie-breaker and the tombstone marker (user reads filter _op='d').
@@ -63,6 +65,38 @@ TARGET_BASE_FIELDS = [
     ("text", "string"),
     ("lang", "string"),
 ]
+
+
+def replay_ddl(batch_df: DataFrame, tables: Iterable[LakeTable]) -> None:
+    """Replay the batch's DDL rows into each table's dictionary in
+    (warc_ts, seq) order, exactly as the reference's system transactions do
+    (§2.9); each table applies only the versions above its own current one.
+    Raw-DDL rows (action NULL, statement in ``text``) are parsed from their
+    SQL (reference OpCode1801 path), fetched in a second pass filtered to
+    those few rows, so the common narrow ddl collect never reads the text
+    column (plan test pins the pruned scan)."""
+    ddl_rows = sorted(
+        ddl_events(batch_df).collect(), key=lambda r: (r["warc_ts"], r["seq"])
+    )
+    sql_texts: dict[int, str] = {}
+    if any(d["action"] is None for d in ddl_rows):
+        sql_texts = {
+            r["seq"]: r["text"]
+            for r in batch_df.filter(
+                (F.col("op") == "ddl") & F.col("action").isNull()
+            ).select("seq", "text").collect()
+        }
+    for t in tables:
+        for d in ddl_rows:
+            if d["schema_ver"] > t.current_schema_ver:
+                action, col, new_name, new_type = (
+                    d["action"], d["col_name"], d["new_name"], d["new_type"],
+                )
+                if action is None:
+                    action, col, new_name, new_type = parse_ddl_sql(
+                        sql_texts[d["seq"]]
+                    )
+                t.evolve(action, col, new_name, new_type, to_ver=d["schema_ver"])
 
 
 class IncarnationError(RuntimeError):
@@ -80,9 +114,6 @@ class CdcPipeline:
         checkpoint_path: str,
         metrics_path: str | None = None,
         n_buckets: int = 16,
-        n_salts: int = 8,
-        lww_strategy: str = "semijoin",
-        lww_broadcast_budget: int = 20_000_000,
         merge_mode: str = "auto",
         compact_every: int = 8,
         recompute_text: bool = False,
@@ -103,9 +134,6 @@ class CdcPipeline:
         self._table: LakeTable | None = None
         self.metrics_path = metrics_path
         self.n_buckets = n_buckets
-        self.n_salts = n_salts
-        self.lww_strategy = lww_strategy
-        self.lww_broadcast_budget = lww_broadcast_budget
         # merge mode: "cow" rewrite-on-merge | "mor" append-deltas |
         # "auto" (default): MoR for streaming epochs (small epoch vs large
         # state — CoW write amplification dominates, round-1 verdict task 2),
@@ -229,13 +257,7 @@ class CdcPipeline:
         target is its branch head, a plain pipeline's is main. Partial-image
         pipelines resolve by the read-time column fold instead of LWW."""
         t = LakeTable.load(self.spark, self.table_path, branch=self.branch)
-        if self.partial_updates:
-            from ..operators.merge import read_state_partial
-
-            return read_state_partial(t)
-        return read_state(
-            t, broadcast_budget_keys=self.lww_broadcast_budget
-        )
+        return read_state_partial(t) if self.partial_updates else read_state(t)
 
     def bootstrap_changelog(self, snapshot: DataFrame) -> dict:
         """Initial-load → tail handoff (the Debezium snapshot→stream /
@@ -264,8 +286,6 @@ class CdcPipeline:
         Scale shape: the snapshot is written as per-bucket MoR deltas —
         O(snapshot) write, no read of existing data, LWW resolves the
         (empty) overlap at read time."""
-        from ..operators.merge import merge_append
-
         table = self.ensure_table()
         if self.partial_updates:
             raise ValueError(
@@ -359,87 +379,34 @@ class CdcPipeline:
             )
         batch_df = batch_df.filter(~bad)
 
-        # Evolution pre-gate: evolve() only ever fires for schema_ver >
-        # current, so when the epoch's global max(schema_ver) doesn't exceed
-        # it there is nothing to replay. When the batch is a plain file scan
-        # the answer comes straight from parquet FOOTER stats (threadpooled
-        # driver walk, O(files)); otherwise one single-int-column Spark
-        # aggregate. Either way the 8-column ddl collect only runs on epochs
-        # that can actually evolve the schema.
-        from ..operators.merge import _stage
-
+        # Evolution pre-gate (_schema_gate): the 8-column ddl collect only
+        # runs on epochs whose max(schema_ver) can actually evolve the schema
         ts = time.time()
-        footer_stats = self._epoch_footer_stats(batch_df, int(epoch_id))
-        if footer_stats is not None:
-            self._schema_gate_stats["footer"] += 1
-            max_ver = footer_stats.get("schema_ver")
-        else:
-            self._schema_gate_stats["agg"] += 1
-            max_ver = batch_df.agg(F.max("schema_ver")).collect()[0][0]
+        footer_stats, max_ver = self._schema_gate(batch_df, int(epoch_id))
         # S5/resetlogs incarnation guard: a rewound source log (same seq
         # range again) must refuse-or-branch, never silently LWW-merge two
         # histories — see _incarnation_guard
         inc_pending = self._incarnation_guard(footer_stats, int(epoch_id))
         ts = _stage("ddl_gate", ts)
-        if max_ver is None or max_ver <= table.current_schema_ver:
-            ddl_rows = []
-        else:
-            ddl_rows = sorted(
-                ddl_events(batch_df).collect(), key=lambda r: (r["warc_ts"], r["seq"])
-            )
-        sql_texts: dict[int, str] = {}
-        if any(d["action"] is None for d in ddl_rows):
-            # raw-DDL rows (action NULL, statement in `text`): second pass,
-            # filtered to those few rows, so the common narrow ddl collect
-            # never reads the text column (plan test pins the pruned scan)
-            sql_texts = {
-                r["seq"]: r["text"]
-                for r in batch_df.filter(
-                    (F.col("op") == "ddl") & F.col("action").isNull()
-                ).select("seq", "text").collect()
-            }
-        for d in ddl_rows:
-            if d["schema_ver"] > table.current_schema_ver:
-                action, col, new_name, new_type = (
-                    d["action"], d["col_name"], d["new_name"], d["new_type"],
-                )
-                if action is None:
-                    # parse the raw SQL statement (reference OpCode1801 path)
-                    action, col, new_name, new_type = parse_ddl_sql(
-                        sql_texts[d["seq"]]
-                    )
-                table.evolve(action, col, new_name, new_type, to_ver=d["schema_ver"])
+        if max_ver is not None and max_ver > table.current_schema_ver:
+            replay_ddl(batch_df, [table])
 
         dml = project_dml(
             dml_events(batch_df), table, recompute_text=self.recompute_text
         )
-        # LWW strategy (all equivalent, tests/test_lww.py):
-        #  * semijoin (default): winners found on narrow columns, payload
-        #    never shuffled — best for wide web-page rows; hot keys collapse
-        #    map-side in the narrow partial agg.
-        #  * salted: explicit two-phase salted repartition (north-rule form) —
-        #    use when the winner set is too large to broadcast.
-        #  * auto: size-based semijoin→salted fallback (the 10^10-key path:
-        #    approx-distinct estimate vs the broadcast budget). Costs one
-        #    extra narrow-column job per epoch, hence not the local default.
-        #  * maxby: single partial+final max_by shuffle of the full payload.
         if self.partial_updates:
             # every version row must reach the table: within-batch partials
             # for one key coalesce at READ time with full history (an
             # in-batch collapse could not see across epochs anyway)
             compacted = dml
         else:
-            compacted = {
-                "semijoin": lambda: lww_compact_semijoin(dml, "url"),
-                "salted": lambda: lww_compact_salted(
-                    dml, "url", n_salts=self.n_salts
-                ),
-                "auto": lambda: lww_compact_auto(
-                    dml, "url", n_salts=self.n_salts,
-                    broadcast_budget_keys=self.lww_broadcast_budget,
-                ),
-                "maxby": lambda: lww_compact(dml, "url"),
-            }[self.lww_strategy]()
+            # the footer row count bounds the key count for free; without
+            # it (DataFrame-fed or jsonl epochs) the plan choice costs one
+            # narrow estimate job
+            compacted = lww_compact_auto(
+                dml, "url",
+                approx_rows=None if footer_stats is None else footer_stats["rows"],
+            )
         mode = self.merge_mode
         if mode == "auto":
             mode = self._runtime_merge_mode or "cow"
@@ -458,14 +425,7 @@ class CdcPipeline:
         if mode == "mor":
             stats = [merge_append(table, compacted, **merge_kwargs)]
         else:
-            stats = [
-                merge_into(
-                    table,
-                    compacted,
-                    broadcast_budget_keys=self.lww_broadcast_budget,
-                    **merge_kwargs,
-                )
-            ]
+            stats = [merge_into(table, compacted, **merge_kwargs)]
         if (
             mode == "mor"
             and self.compact_every
@@ -475,10 +435,8 @@ class CdcPipeline:
             # cadence analogue): collapses accumulated MoR deltas so
             # read-time LWW cost stays bounded. Runs AFTER the epoch commit;
             # carries no epoch_id, so the exactly-once watermark is untouched.
-            from ..operators.merge import compact_table
-
             ts2 = time.time()
-            compact_table(table, broadcast_budget_keys=self.lww_broadcast_budget)
+            compact_table(table)
             _stage("compact", ts2)
         if inc_pending is not None:
             # advance the incarnation/seq watermark only AFTER the epoch
@@ -488,10 +446,13 @@ class CdcPipeline:
         if self.metrics_path:
             self._write_metrics(batch_df, int(epoch_id), time.time() - t0, stats)
 
-    def _max_schema_ver(
+    def _schema_gate(
         self, batch_df: DataFrame, epoch_id: int | None = None
-    ) -> int | None:
-        """Global max(schema_ver) of the batch, from parquet footer
+    ) -> tuple[dict | None, int | None]:
+        """The epoch's footer stats (``_epoch_footer_stats``, None when the
+        file set is unknown) and its global max(schema_ver) — evolve() only
+        ever fires for schema_ver > current, so the DDL replay is skipped
+        when that max does not exceed it. The max comes from parquet footer
         statistics when the batch's file set is known — either directly
         (plain file scan: inputFiles() non-empty) or via the checkpoint's
         FileStreamSource offset log (sources/0/<batchId>, the same durable
@@ -508,15 +469,15 @@ class CdcPipeline:
         stats = self._epoch_footer_stats(batch_df, epoch_id)
         if stats is not None:
             self._schema_gate_stats["footer"] += 1
-            return stats.get("schema_ver")
+            return stats, stats["schema_ver"]
         self._schema_gate_stats["agg"] += 1
-        return batch_df.agg(F.max("schema_ver")).collect()[0][0]
+        return None, batch_df.agg(F.max("schema_ver")).collect()[0][0]
 
     def _epoch_footer_stats(
         self, batch_df: DataFrame, epoch_id: int | None = None
     ) -> dict | None:
-        """Zero-job epoch header read: max(schema_ver), [min,max](seq) and
-        the source incarnation id, all from parquet FOOTERS of the epoch's
+        """Zero-job epoch header read: row count, max(schema_ver),
+        [min,max](seq) and the source incarnation id, all from parquet FOOTERS of the epoch's
         file set (inputFiles() or the checkpoint offset log). The
         incarnation rides as file-level key-value metadata
         (``olr:incarnation`` — the analogue of the resetlogs id in every
@@ -538,7 +499,7 @@ class CdcPipeline:
         def file_stats(uri: str) -> dict:
             path = uri[7:] if uri.startswith("file://") else uri
             md = pq.ParquetFile(path).metadata
-            out: dict = {"incarnation": 0}
+            out: dict = {"incarnation": 0, "rows": md.num_rows}
             kv = md.metadata or {}
             if b"olr:incarnation" in kv:
                 out["incarnation"] = int(kv[b"olr:incarnation"])
@@ -571,10 +532,11 @@ class CdcPipeline:
                 per_file = list(ex.map(file_stats, files))
         except (OSError, ValueError, KeyError):
             return None  # unreadable footer / no stats
-        agg: dict = {"incarnation": 0, "schema_ver": None,
+        agg: dict = {"incarnation": 0, "rows": 0, "schema_ver": None,
                      "seq_min": None, "seq_max": None}
         for fs in per_file:
             agg["incarnation"] = max(agg["incarnation"], fs["incarnation"])
+            agg["rows"] += fs["rows"]
             for k, pick in (("schema_ver", max), ("seq_max", max),
                             ("seq_min", min)):
                 if fs.get(k) is not None:

@@ -30,16 +30,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake.table import LakeTable
-from ..operators.decode import (
-    EVENTS_DDL,
-    ddl_events,
-    dml_events,
-    parse_ddl_sql,
-    project_dml,
-)
+from ..operators.decode import EVENTS_DDL, dml_events, project_dml
 from ..operators.lww import lww_compact_auto
 from ..operators.merge import merge_append, merge_into, read_state
-from .pipeline import TARGET_BASE_FIELDS
+from .pipeline import TARGET_BASE_FIELDS, replay_ddl
 
 
 class TableRouter:
@@ -52,7 +46,6 @@ class TableRouter:
         routes: dict[str, str],
         n_buckets: int = 16,
         merge_mode: str = "mor",
-        lww_broadcast_budget: int = 20_000_000,
     ):
         if not routes:
             raise ValueError("routes must map at least one table name to a predicate")
@@ -63,7 +56,6 @@ class TableRouter:
         self.routes = dict(routes)
         self.n_buckets = n_buckets
         self.merge_mode = merge_mode
-        self.lww_broadcast_budget = lww_broadcast_budget
 
     # ------------------------------------------------------------ lifecycle
     def table_path(self, name: str) -> str:
@@ -84,10 +76,7 @@ class TableRouter:
         return out
 
     def target_state(self, name: str) -> DataFrame:
-        return read_state(
-            LakeTable.load(self.spark, self.table_path(name)),
-            broadcast_budget_keys=self.lww_broadcast_budget,
-        )
+        return read_state(LakeTable.load(self.spark, self.table_path(name)))
 
     # ------------------------------------------------------------ the epoch
     def apply_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -115,36 +104,13 @@ class TableRouter:
         )
         # dictionary replay per pending table (few rows; confirmed tables
         # already hold these versions, late tables catch up here)
-        ddl_rows = sorted(
-            ddl_events(committed).collect(), key=lambda r: (r["warc_ts"], r["seq"])
-        )
-        sql_texts: dict[int, str] = {}
-        if any(d["action"] is None for d in ddl_rows):
-            sql_texts = {
-                r["seq"]: r["text"]
-                for r in committed.filter(
-                    (F.col("op") == "ddl") & F.col("action").isNull()
-                ).select("seq", "text").collect()
-            }
-        for t in pending.values():
-            for d in ddl_rows:
-                if d["schema_ver"] > t.current_schema_ver:
-                    action, col, new_name, new_type = (
-                        d["action"], d["col_name"], d["new_name"], d["new_type"],
-                    )
-                    if action is None:
-                        action, col, new_name, new_type = parse_ddl_sql(
-                            sql_texts[d["seq"]]
-                        )
-                    t.evolve(action, col, new_name, new_type, to_ver=d["schema_ver"])
+        replay_ddl(committed, pending.values())
 
         # decode + LWW once — all pending tables now share the same current
         # schema, so one projection serves every route
         any_table = next(iter(pending.values()))
         dml = project_dml(dml_events(committed), any_table)
-        compacted = lww_compact_auto(
-            dml, "url", broadcast_budget_keys=self.lww_broadcast_budget
-        ).persist()
+        compacted = lww_compact_auto(dml, "url").persist()
         try:
             for name, t in pending.items():
                 sub = compacted.filter(F.expr(self.routes[name]))
@@ -156,11 +122,7 @@ class TableRouter:
                 if self.merge_mode == "mor":
                     merge_append(t, sub, **kwargs)
                 else:
-                    merge_into(
-                        t, sub,
-                        broadcast_budget_keys=self.lww_broadcast_budget,
-                        **kwargs,
-                    )
+                    merge_into(t, sub, **kwargs)
         finally:
             compacted.unpersist()
 

@@ -31,7 +31,10 @@ def make_pyfiles(out: str) -> None:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(
+        description="CDC apply job: log tail -> decode -> LWW -> bucketed "
+                    "MERGE. The LWW plan is chosen per epoch from its row "
+                    "count; there is no strategy option.")
     ap.add_argument("--make-pyfiles", metavar="ZIP")
     ap.add_argument("--events")
     ap.add_argument("--table")
@@ -48,11 +51,6 @@ def main() -> None:
     ap.add_argument("--max-files-per-trigger", type=int, default=32)
     ap.add_argument("--merge-mode", choices=["auto", "cow", "mor"], default="auto")
     ap.add_argument("--compact-every", type=int, default=8)
-    ap.add_argument("--lww-strategy",
-                    choices=["semijoin", "salted", "auto", "maxby"],
-                    default="auto",
-                    help="'auto' falls back semijoin->salted above the "
-                         "broadcast budget (the 10^10-key path)")
     ap.add_argument("--partial-updates", action="store_true",
                     help="change events carry only changed columns (NULL = "
                          "unchanged); forces merge-on-read appends and the "
@@ -110,7 +108,6 @@ def main() -> None:
         filter_config_path=args.filters,
         merge_mode=args.merge_mode,
         compact_every=0 if args.partial_updates else args.compact_every,
-        lww_strategy=args.lww_strategy,
         branch=args.branch,
         source_format=args.format,
         partial_updates=args.partial_updates,

@@ -77,3 +77,37 @@ def test_signal_handler_prints_final_json_once(tmp_path, monkeypatch, capsys):
     # a second signal (or the finally-block) must not print again
     b._on_signal(15, None)
     assert capsys.readouterr().out == ""
+
+
+def test_import_leaves_signal_handlers_alone(tmp_path, monkeypatch):
+    # main() installs the JSON-printing handlers; merely importing bench
+    # (as these tests do) must not take over the test runner's Ctrl-C
+    import signal
+
+    b = _bench(tmp_path, monkeypatch)
+    assert signal.getsignal(signal.SIGINT) is not b._on_signal
+    assert signal.getsignal(signal.SIGTERM) is not b._on_signal
+
+
+def test_run_child_separates_timeout_from_failure(tmp_path, monkeypatch):
+    b = _bench(tmp_path, monkeypatch)
+    code = "import sys; print('x'); sys.stderr.write('boom'); sys.exit(3)"
+    out, rc, err = b._run_child([sys.executable, "-c", code], timeout=60)
+    assert (out.strip(), rc, err) == ("x", 3, "boom")
+    sleeper = [sys.executable, "-c", "import time; time.sleep(30)"]
+    assert b._run_child(sleeper, timeout=0.5) == ("", None, "")
+
+
+def test_oracle_failure_is_not_reported_as_timeout(tmp_path, monkeypatch):
+    import pytest
+
+    b = _bench(tmp_path, monkeypatch)
+    monkeypatch.setattr(b, "_run_child", lambda cmd, timeout: ("", None, ""))
+    with pytest.raises(TimeoutError):
+        b.oracle_subprocess("q", "/nonexistent", 1.0)
+    monkeypatch.setattr(
+        b, "_run_child", lambda cmd, timeout: ("", 1, "Traceback\nBinderError: x")
+    )
+    with pytest.raises(RuntimeError, match="exit 1") as e:
+        b.oracle_subprocess("q", "/nonexistent", 1.0)
+    assert "BinderError" in str(e.value)

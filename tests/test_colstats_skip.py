@@ -184,7 +184,7 @@ def test_zorder_both_dims_prune_same_layout(spark, tmp_path):
     before = sorted(
         (r["url"], r["_seq"]) for r in read_state(t).collect()
     )
-    zorder_buckets(t, cat_col="lang", ts_col="warc_ts", bits=8,
+    zorder_buckets(t, cat_col="lang", bits=8,
                    target_rows_per_file=25)
     t = LakeTable.load(spark, t.path)
     assert len(t.snap["files"]) >= 8  # several files per bucket

@@ -24,7 +24,7 @@ def test_max_schema_ver_footer_matches_aggregate(spark, events_dir, tmp_path):
     p = _pipeline(spark, events_dir, tmp_path)
     df = spark.read.schema(EVENTS_DDL).parquet(str(events_dir))
     assert df.inputFiles()  # plain scan → footer path engages
-    footer = p._max_schema_ver(df)
+    footer = p._schema_gate(df)[1]
     agg = df.agg(F.max("schema_ver")).collect()[0][0]
     assert footer == agg and footer is not None
 
@@ -35,7 +35,7 @@ def test_max_schema_ver_filtered_is_conservative(spark, events_dir, tmp_path):
     p = _pipeline(spark, events_dir, tmp_path)
     df = spark.read.schema(EVENTS_DDL).parquet(str(events_dir))
     filtered = df.filter(F.col("schema_ver") < 0)  # empty
-    assert p._max_schema_ver(filtered) >= (
+    assert p._schema_gate(filtered)[1] >= (
         df.agg(F.max("schema_ver")).collect()[0][0]
     )
 
@@ -45,7 +45,7 @@ def test_max_schema_ver_fallback_without_files(spark, events_dir, tmp_path):
     df = spark.read.schema(EVENTS_DDL).parquet(str(events_dir))
     synthetic = df.limit(50).localCheckpoint(eager=True)  # no scan → no files
     assert synthetic.inputFiles() == []
-    assert p._max_schema_ver(synthetic) == (
+    assert p._schema_gate(synthetic)[1] == (
         synthetic.agg(F.max("schema_ver")).collect()[0][0]
     )
 
@@ -122,5 +122,5 @@ def test_schema_gate_offset_log_bound_is_conservative(
     true_max = df.agg(F.max("schema_ver")).collect()[0][0]
     derived = df.limit(10).localCheckpoint(eager=True)  # inputFiles() == []
     assert derived.inputFiles() == []
-    assert p._max_schema_ver(derived, epoch_id=3) >= true_max
+    assert p._schema_gate(derived, epoch_id=3)[1] >= true_max
     assert p._schema_gate_stats["agg"] == 0

@@ -4,10 +4,12 @@
   rewrites exactly 1 bucket, untouched buckets' files survive by reference
   (reference analogue: checkpoint GC touches only stale files,
   /root/reference/src/metadata/Metadata.cpp:505-554);
-* read_state / compact_table / merge_into all route LWW through the
-  auto-selector: above the broadcast budget the salted two-phase plan engages
-  (no winner-hash broadcast of every distinct key — the 10^9-key wall),
-  below it the payload-sparing semijoin stays the plan.
+* read_state / read_state_since / compact_table / merge_into and the
+  pipeline's epoch fold all route LWW through the auto-selector: above the
+  broadcast budget (``lww.BROADCAST_BUDGET_KEYS``, monkeypatched here) the
+  salted two-phase plan engages (no winner-hash broadcast of every distinct
+  key — the 10^9-key wall), below it the payload-sparing semijoin stays the
+  plan.
 """
 
 import datetime as dt
@@ -92,25 +94,57 @@ def test_read_state_resolves_only_dirty_buckets(spark, seeded):
     assert _plan(read_state(t)).count("BroadcastHashJoin") == 1
 
 
-def test_salted_path_engages_above_budget_at_all_call_sites(spark, seeded):
+def test_salted_path_engages_above_budget_at_all_call_sites(
+    spark, seeded, monkeypatch, events_dir, tmp_path
+):
+    from openlogreplicator_spark.operators import lww
+    from openlogreplicator_spark.operators.merge import read_state_since
+    from openlogreplicator_spark.streaming.pipeline import CdcPipeline
+
     t = seeded
     merge_append(t, _batch(spark, [("u1", TS, 100, "u", "w1")]), epoch_id=1)
+    # the reference replay runs under the default budget (semijoin plans)
+    p_ref = CdcPipeline(spark, events_dir, str(tmp_path / "tr"), str(tmp_path / "cr"))
+    p_ref.run_batch_replay()
 
-    # read_state: budget 0 → salted (no broadcast of the winner set)
-    df = read_state(t, broadcast_budget_keys=0)
+    # budget 0 → every fold plans salted (no broadcast of the winner set)
+    monkeypatch.setattr(lww, "BROADCAST_BUDGET_KEYS", 0)
+    salted = []
+    real_salted = lww.lww_compact_salted
+
+    def spy(*a, **k):
+        salted.append(1)
+        return real_salted(*a, **k)
+
+    monkeypatch.setattr(lww, "lww_compact_salted", spy)
+
+    df = read_state(t)
     assert "BroadcastHashJoin" not in _plan(df)
     assert {r["url"]: r["text"] for r in df.collect()}["u1"] == "w1"
 
+    # read_state_since: the same fold over a ts-pruned scan
+    since = read_state_since(t, 0)
+    assert "BroadcastHashJoin" not in _plan(since)
+    assert {r["url"]: r["text"] for r in since.collect()}["u1"] == "w1"
+
     # compact_table: same selector, state unchanged, dirty cleared
-    compact_table(t, broadcast_budget_keys=0)
+    compact_table(t)
     t2 = LakeTable.load(spark, t.path)
     assert t2.dirty_buckets() == set()
     assert {r["url"]: r["text"] for r in read_state(t2).collect()}["u1"] == "w1"
 
     # merge_into reconcile: salted above budget, winner still correct
-    merge_into(t2, _batch(spark, [("u1", TS, 200, "u", "w2")]),
-               epoch_id=3, broadcast_budget_keys=0)
+    merge_into(t2, _batch(spark, [("u1", TS, 200, "u", "w2")]), epoch_id=3)
     assert {r["url"]: r["text"] for r in read_state(t2).collect()}["u1"] == "w2"
+    assert len(salted) >= 4
+
+    # the pipeline's epoch LWW: a salted batch replay reaches the same state
+    n = len(salted)
+    p = CdcPipeline(spark, events_dir, str(tmp_path / "ts"), str(tmp_path / "cs"))
+    p.run_batch_replay()
+    assert len(salted) > n
+    got = sorted(map(tuple, p.target_state().collect()))
+    assert got == sorted(map(tuple, p_ref.target_state().collect()))
 
 
 def test_semijoin_stays_default_under_budget(spark, seeded):
