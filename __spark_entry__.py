@@ -25,7 +25,7 @@ from openlogreplicator_spark.queries import ORACLES, QUERIES  # noqa: E402
 # arranged to span one flagship per family — CDC core + monitors, the
 # engine replay/DDL/sink-parity family, charset decode, the streaming
 # gates, every dedup family, ANN, BPE/quality/PII, and a TPC-H spread —
-# instead of the round-1 registration order. The full 293-entry catalog is
+# instead of the round-1 registration order. The full 294-entry catalog is
 # unchanged and still strict-gated locally (scripts/check_oracle.py).
 _CURATED_HEAD = [
     # CDC core operators + monitors
@@ -58,6 +58,20 @@ _CURATED_HEAD = [
     # TPC-H spread
     "tpch_q1_pricing", "tpch_q9_variant_profit",
 ]
+
+
+def _check_curated_head(head: list[str], catalog: dict) -> None:
+    """The head must be exactly 50 distinct catalog names: a renamed or
+    deleted entry would otherwise drop out of the driver's sample silently."""
+    missing = [n for n in head if n not in catalog]
+    if len(head) != 50 or len(set(head)) != len(head) or missing:
+        raise ValueError(
+            f"_CURATED_HEAD must be 50 distinct catalog entries: "
+            f"{len(head)} names, {len(set(head))} distinct, missing {missing}"
+        )
+
+
+_check_curated_head(_CURATED_HEAD, QUERIES)
 
 
 def _curated(d: dict) -> dict:

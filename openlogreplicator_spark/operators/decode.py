@@ -101,21 +101,17 @@ def dml_events(df: DataFrame) -> DataFrame:
     return df.filter((F.col("op") != "ddl") & (~F.col("rolled_back")))
 
 
-def ddl_events(df: DataFrame, with_sql_text: bool = False) -> DataFrame:
+def ddl_events(df: DataFrame) -> DataFrame:
     """Schema-evolution control rows, in log order (SURVEY.md §2.9).
 
-    ``with_sql_text`` additionally selects ``text``, where a ddl row may
-    carry a raw SQL statement instead of the structured (action, ...) fields
-    (reference OpCode1801 / Builder raw-DDL emission). Off by default so the
-    common collect stays on the narrow pruned scan — the pipeline fetches
-    texts in a second, action-IS-NULL-filtered pass only when needed."""
-    cols = [
+    The structured (action, ...) fields only, so the collect stays on the
+    narrow pruned scan; a ddl row carrying a raw SQL statement in ``text``
+    instead (reference OpCode1801 / Builder raw-DDL emission) is fetched by
+    the pipeline's own action-IS-NULL-filtered pass."""
+    return df.filter(F.col("op") == "ddl").select(
         "schema_ver", "action", "col_name", "new_name", "new_type",
         "warc_ts", "seq",
-    ]
-    if with_sql_text:
-        cols.append("text")
-    return df.filter(F.col("op") == "ddl").select(*cols)
+    )
 
 
 _DDL_PATTERNS = [

@@ -17,10 +17,14 @@ Conventions (driver compare is column-name + value-hash based):
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import re
+import shutil
 import tempfile
-import time
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1465,6 +1469,92 @@ def _ensure_replay_events() -> str:
 
 _ensure_replay_events()
 
+# Engine-gate harness. Every gate's scratch is `olr_<prefix>_<pid>_<rand>`
+# under _REPLAY_BASE, removed at interpreter exit — not earlier: gates
+# return lazy DataFrames backed by files under it. A SIGKILLed process never
+# runs its exit hook, so the first scratch a process takes prunes the
+# scratch of dead pids. The pid test is liveness, never age: a concurrent
+# process's scratch survives, and a reused pid only leaks a directory. The
+# content-addressed fixtures (olr_<name>_<12 hex>) carry no pid and never
+# match the pattern.
+_SCRATCH_NAME = re.compile(r"olr_.+_(\d+)_[a-z0-9_]{8}")
+_SCRATCH: list[str] = []
+
+
+def _scratch_pid(name: str) -> int | None:
+    m = _SCRATCH_NAME.fullmatch(name)
+    return int(m.group(1)) if m else None
+
+
+def _prune_dead_scratch() -> None:
+    for name in os.listdir(_REPLAY_BASE):
+        pid = _scratch_pid(name)
+        if pid is None:
+            continue
+        try:
+            os.kill(pid, 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(_REPLAY_BASE, name), ignore_errors=True)
+        except (OSError, OverflowError):
+            pass  # alive under another uid, or not a pid at all
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    for d in _SCRATCH:
+        # a forked child inherits the list; only the owner removes
+        if _scratch_pid(os.path.basename(d)) == os.getpid():
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def _gate_scratch(prefix: str) -> str:
+    """A fresh pid-stamped scratch directory, removed at interpreter exit."""
+    if not _SCRATCH:
+        _prune_dead_scratch()
+    d = tempfile.mkdtemp(prefix=f"olr_{prefix}_{os.getpid()}_", dir=_REPLAY_BASE)
+    _SCRATCH.append(d)
+    return d
+
+
+def _gate_pipeline(spark, prefix: str, events_path: str, **kw):
+    """A CdcPipeline on ``<scratch>/target`` + ``<scratch>/ckpt``, with the
+    session pinned to UTC like T() (gate values are hashed against the
+    tz-naive DuckDB oracles)."""
+    from .streaming.pipeline import CdcPipeline
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    d = _gate_scratch(prefix)
+    return CdcPipeline(
+        spark, events_path, os.path.join(d, "target"), os.path.join(d, "ckpt"),
+        **kw,
+    )
+
+
+def _event_files(events_path: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(events_path, "*.parquet")))
+
+
+def _apply_files(p, files: list[str], start: int = 0) -> None:
+    """Apply each change file as its own epoch, numbered from ``start``."""
+    from .operators.decode import EVENTS_DDL
+
+    for i, f in enumerate(files, start=start):
+        p.apply_epoch(p.spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+
+
+# Gates that ask several questions of one materialized table build it once
+# per process, keyed by (gate, fixture path). The value is the table path,
+# or a tuple led by it; a path whose directory is gone is rebuilt.
+_REPLAYS: dict[tuple[str, str], object] = {}
+
+
+def _replay_memo(gate: str, events_path: str, build):
+    hit = _REPLAYS.get((gate, events_path))
+    if hit is None or not os.path.isdir(hit if isinstance(hit, str) else hit[0]):
+        hit = _REPLAYS[(gate, events_path)] = build()
+    return hit
+
+
 # Drop + re-add fixture: the 4 replay files plus a synthesized 5th epoch
 # whose DDLs DROP http_status (schema_ver 5) and re-ADD it under the same
 # NAME (schema_ver 6, fresh field id), followed by a handful of v6 DML rows
@@ -1556,36 +1646,26 @@ _ensure_drop_readd_events()
 # staging) must NOT use it and build their own. Cache survives session
 # restarts within the process: the value is an on-disk path + the version
 # confirmed after each epoch, both session-independent.
-_SHARED_REPLAY: dict[str, tuple[str, list[int], str]] = {}
-
-
 def _shared_mor_replay(spark) -> tuple[str, list[int], str]:
     """(table_path, per-epoch confirmed versions, metrics_path) of the shared
     read-only replay; built on first use per process."""
-    import glob as _glob
-
     from .lake.table import LakeTable
-    from .operators.decode import EVENTS_DDL
-    from .streaming.pipeline import CdcPipeline
 
     ev = _ensure_replay_events()
-    hit = _SHARED_REPLAY.get(ev)
-    if hit is not None and os.path.isdir(hit[0]):
-        return hit
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    d = tempfile.mkdtemp(prefix="olr_shared_replay_")
-    metrics = os.path.join(d, "metrics")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-        metrics_path=metrics, merge_mode="mor", compact_every=0,
-    )
-    marks = []
-    for i, f in enumerate(files):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
-        marks.append(LakeTable.current_version(p.table_path))
-    _SHARED_REPLAY[ev] = (p.table_path, marks, metrics)
-    return _SHARED_REPLAY[ev]
+
+    def build():
+        metrics = _gate_scratch("shared_metrics")
+        p = _gate_pipeline(
+            spark, "shared_replay", ev,
+            metrics_path=metrics, merge_mode="mor", compact_every=0,
+        )
+        marks = []
+        for i, f in enumerate(_event_files(ev)):
+            _apply_files(p, [f], start=i)
+            marks.append(LakeTable.current_version(p.table_path))
+        return p.table_path, marks, metrics
+
+    return _replay_memo("shared_replay", ev, build)
 
 
 # DuckDB twin of the full pipeline replay over the same fixed log:
@@ -1620,14 +1700,7 @@ def engine_replay_state(spark, sf_dir):
     state. Golden equivalence vs the pandas replayer is asserted in tests;
     the driver additionally value-hashes it against a DuckDB replay of the
     SAME fixed parquet log (round-1 task 3)."""
-    from .streaming.pipeline import CdcPipeline
-
-    # pin UTC like T() does: this query's warc_ts values are value-hashed
-    # against the tz-naive DuckDB replay
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_replay_")
-    p = CdcPipeline(spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"))
+    p = _gate_pipeline(spark, "replay", _ensure_replay_events())
     p.run_batch_replay()
     state = p.target_state()
     return state.select("url", "warc_ts", "_seq", "text", "lang", "http_status")
@@ -1790,7 +1863,7 @@ def engine_incremental_minhash(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table_path, marks, _metrics = _shared_mor_replay(spark)
     versions = LakeTable.load(spark, table_path).versions()
-    base = tempfile.mkdtemp(prefix="olr_inc_minhash_")
+    base = _gate_scratch("inc_minhash")
     sig_path = None
     from_v = min(versions)
     for i, to_v in enumerate(marks):
@@ -1888,21 +1961,15 @@ def engine_partial_update_state(spark, sf_dir):
     re-creates after a delete inherit nothing. The DuckDB twin replays the
     identical fold; a single wrongly-carried column anywhere hash-fails.
     Shape at 100 TB: one key exchange serves both fold windows."""
-    import glob as _glob
-
     from .operators.decode import EVENTS_DDL
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    d = tempfile.mkdtemp(prefix="olr_partial_")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
+    p = _gate_pipeline(
+        spark, "partial", ev,
         merge_mode="mor", compact_every=0, partial_updates=True,
     )
     is_u = F.col("op") == "u"
-    for i, f in enumerate(files):
+    for i, f in enumerate(_event_files(ev)):
         batch = (
             spark.read.schema(EVENTS_DDL).parquet(f)
             .withColumn(
@@ -1973,29 +2040,20 @@ def engine_follow_changes(spark, sf_dir):
     duplicated, or misclassified change anywhere in the chain fails.
     Shape at 100 TB: each poll costs one snapshot_diff (quiet buckets
     pruned driver-side), never a rescan of history."""
-    import glob as _glob
-
     from .lake.table import LakeTable
-    from .operators.decode import EVENTS_DDL
     from .operators.merge import follow_changes
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    d = tempfile.mkdtemp(prefix="olr_follow_")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-        merge_mode="mor", compact_every=0,
-    )
-    p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(files[0]), epoch_id=0)
+    files = _event_files(ev)
+    p = _gate_pipeline(spark, "follow", ev, merge_mode="mor", compact_every=0)
+    _apply_files(p, files[:1])
     base = min(LakeTable.load(spark, p.table_path).versions())
     gen = follow_changes(
         spark, p.table_path, from_version=base, poll_secs=0.05, max_polls=3
     )
     batches = [next(gen)]
     for i, f in enumerate(files[1:], start=1):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+        _apply_files(p, [f], start=i)
         batches.append(next(gen))
     out = None
     prev_to = base
@@ -2094,7 +2152,7 @@ def engine_scd2_from_cdf(spark, sf_dir):
     from .lake.table import LakeTable
 
     base = min(LakeTable.load(spark, path).versions())
-    d = tempfile.mkdtemp(prefix="olr_scd2_")
+    d = _gate_scratch("scd2")
     cols = ["url", "ver_no", "valid_from", "valid_to", "is_current",
             "_seq", "text", "lang"]
     scd_path = None
@@ -2174,24 +2232,18 @@ def engine_partial_compact_state(spark, sf_dir):
     in-flight; the oracle proves the shrinkage changed nothing. This is
     the read-cost bound for partial tables at 10^10 events: history is
     bounded by watermark lag, not stream length."""
-    import glob as _glob
-
     from .lake.table import LakeTable
     from .operators.decode import EVENTS_DDL
     from .operators.merge import compact_partial
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    d = tempfile.mkdtemp(prefix="olr_pcompact_")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
+    p = _gate_pipeline(
+        spark, "pcompact", ev,
         merge_mode="mor", compact_every=0, partial_updates=True,
     )
     is_u = F.col("op") == "u"
     hi_ts = None
-    for i, f in enumerate(files):
+    for i, f in enumerate(_event_files(ev)):
         batch = (
             spark.read.schema(EVENTS_DDL).parquet(f)
             .withColumn(
@@ -2234,8 +2286,6 @@ def _ensure_masked_replay_events() -> str:
     would scramble the ordered-archive file boundaries (ROUND3 notes:
     DDL-before-its-base-column hazard) — and mtimes touched strictly
     ascending in name order so FileStreamSource delivers archive order."""
-    import glob as _glob
-
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -2245,8 +2295,7 @@ def _ensure_masked_replay_events() -> str:
     def _write(d: str) -> None:
         import numpy as np
 
-        files = sorted(_glob.glob(os.path.join(src, "*.parquet")))
-        for k, f in enumerate(files):
+        for k, f in enumerate(_event_files(src)):
             t = pq.read_table(f)
             is_u = pc.fill_null(
                 pc.equal(t["op"].combine_chunks(), pa.scalar("u")), False
@@ -2284,13 +2333,8 @@ def engine_partial_stream_state(spark, sf_dir):
     property survives — the oracle applies the same seq%3 rule in SQL over
     the unmasked fixture, so fixture masking and SQL masking are also
     cross-checked against each other."""
-    from .streaming.pipeline import CdcPipeline
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_masked_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_pstream_")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
+    p = _gate_pipeline(
+        spark, "pstream", _ensure_masked_replay_events(),
         merge_mode="mor", compact_every=0, partial_updates=True,
     )
     p.run_available_now(max_files_per_trigger=1)
@@ -2317,37 +2361,24 @@ def engine_bootstrap_tail(spark, sf_dir):
     no overlap, no resurrection. Shape at 100 TB: the snapshot bulk load
     is O(state) MoR appends (no event decode, no read of existing data);
     the tail is the normal incremental path."""
-    import glob as _glob
-
     from .lake.table import LakeTable
     from .operators.decode import EVENTS_DDL
     from .operators.lww import lww_compact_auto
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
+    files = _event_files(ev)
     boundary = 3  # files [0, 3) are source history, file 3 is the tail
 
     # the "source database": replay history to materialize its state
-    d_src = tempfile.mkdtemp(prefix="olr_boot_src_")
-    src = CdcPipeline(
-        spark, ev, os.path.join(d_src, "t"), os.path.join(d_src, "c")
-    )
-    for i in range(boundary):
-        src.apply_epoch(
-            spark.read.schema(EVENTS_DDL).parquet(files[i]), epoch_id=i
-        )
+    src = _gate_pipeline(spark, "boot_src", ev)
+    _apply_files(src, files[:boundary])
     st = LakeTable.load(spark, src.table_path)
     snap = lww_compact_auto(st.read(), key="url", order=("warc_ts", "_seq"))
     if snap.filter(F.col("_op") == "d").limit(1).count() == 0:
         raise AssertionError("boundary changelog carries no tombstones")
 
     # the new consumer: metadata-only epochs -> bulk bootstrap -> tail
-    d_tgt = tempfile.mkdtemp(prefix="olr_boot_tgt_")
-    tgt = CdcPipeline(
-        spark, ev, os.path.join(d_tgt, "t"), os.path.join(d_tgt, "c")
-    )
+    tgt = _gate_pipeline(spark, "boot_tgt", ev)
     for i in range(boundary):
         ddl_only = (
             spark.read.schema(EVENTS_DDL)
@@ -2362,10 +2393,7 @@ def engine_bootstrap_tail(spark, sf_dir):
             f"!= {st.current_schema_ver}"
         )
     tgt.bootstrap_changelog(snap)
-    for i in range(boundary, len(files)):
-        tgt.apply_epoch(
-            spark.read.schema(EVENTS_DDL).parquet(files[i]), epoch_id=i
-        )
+    _apply_files(tgt, files[boundary:], start=boundary)
     return tgt.target_state().select(
         "url", "warc_ts", "_seq", "text", "lang", "http_status"
     )
@@ -2385,22 +2413,12 @@ def engine_purge_replay(spark, sf_dir):
     dropping obsolete undo once the scn horizon passes,
     Metadata.cpp:505-554."""
     import datetime as _dt
-    import glob as _glob
 
-    from .operators.decode import EVENTS_DDL
     from .operators.merge import purge_tombstones
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    d = tempfile.mkdtemp(prefix="olr_purge_")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-        merge_mode="mor", compact_every=0,
-    )
-    for i, f in enumerate(files):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    p = _gate_pipeline(spark, "purge", ev, merge_mode="mor", compact_every=0)
+    _apply_files(p, _event_files(ev))
     purge_tombstones(p.ensure_table(), _dt.datetime(2100, 1, 1))
     return p.target_state().select(
         "url", "warc_ts", "_seq", "text", "lang", "http_status"
@@ -2801,14 +2819,8 @@ def engine_replay_state_streaming(spark, sf_dir):
     Stale-suppression stays OFF so before-images ride untouched; the
     epoch re-read optimization (checkpoint offset log → plain batch scan,
     AQE restored) is on the path, so its exactness is gated here too."""
-    from .streaming.pipeline import CdcPipeline
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    with _stream_harness(spark) as d:
-        p = CdcPipeline(
-            spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt")
-        )
+    p = _gate_pipeline(spark, "stream_replay", _ensure_replay_events())
+    with _stream_harness(spark):
         p.run_available_now(max_files_per_trigger=1)
     return p.target_state().select(
         "url", "warc_ts", "_seq", "text", "lang", "http_status"
@@ -3009,17 +3021,11 @@ def engine_replay_state_url_filtered(spark, sf_dir):
     decoded — the reference's motivation for filtering at the parser."""
     import json as _json
 
-    from .streaming.pipeline import CdcPipeline
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_filtered_")
-    cfg = os.path.join(d, "filters.json")
+    cfg = os.path.join(_gate_scratch("filters"), "filters.json")
     with open(cfg, "w") as f:
         _json.dump({"url_rlike": _FILTER_RLIKE}, f)
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-        filter_config_path=cfg,
+    p = _gate_pipeline(
+        spark, "filtered", _ensure_replay_events(), filter_config_path=cfg
     )
     p.run_batch_replay()
     return p.target_state().select(
@@ -3041,12 +3047,8 @@ def engine_rebucket_replay(spark, sf_dir):
     outgrows its creation-time n_buckets."""
     from .lake.table import LakeTable
     from .operators.merge import rebucket
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_rebucket_")
-    p = CdcPipeline(spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"))
+    p = _gate_pipeline(spark, "rebucket", _ensure_replay_events())
     p.run_batch_replay()
     t = LakeTable.load(spark, p.table_path)
     old_n = t.n_buckets
@@ -3064,8 +3066,6 @@ def engine_rebucket_replay(spark, sf_dir):
 # at v5) must read NULL, across BOTH code paths that could resurface it
 # (project_dml's per-version extras CASE for log rows, and the field-id
 # read projection for rows already materialized in files under the old id).
-_DROP_READD_REPLAY: dict[str, str] = {}
-
 _DROP_READD_SQL = f"""
     WITH ev AS (
       SELECT * FROM read_parquet('{_DROP_READD_EVENTS}/*.parquet')
@@ -3098,29 +3098,20 @@ def engine_drop_readd_column(spark, sf_dir):
     field id) hash-fails. In-flight asserts pin the fresh field id and
     that exactly the v6-touched urls carry a value."""
     from .lake.table import LakeTable
-    from .streaming.pipeline import CdcPipeline
-
-    import glob as _glob
-
-    from .operators.decode import EVENTS_DDL
+    from .operators.merge import read_state
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_drop_readd_events()
-    hit = _DROP_READD_REPLAY.get(ev)
-    if hit is None or not os.path.isdir(hit):
-        d = tempfile.mkdtemp(prefix="olr_dropreadd_")
+
+    def build():
         # per-file MoR epochs, NOT one batch replay: epochs 0-3 must
         # MATERIALIZE data files under the pre-drop schemas (old field id
         # bound in parquet) before epoch 4 drops/re-adds — that is the
         # resurface hazard the read path's field-id projection guards.
-        p = CdcPipeline(
-            spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-            merge_mode="mor", compact_every=0,
+        p = _gate_pipeline(
+            spark, "dropreadd", ev, merge_mode="mor", compact_every=0
         )
-        for i, f in enumerate(sorted(_glob.glob(os.path.join(ev, "*.parquet")))):
-            p.apply_epoch(
-                spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i
-            )
+        _apply_files(p, _event_files(ev))
         t = LakeTable.load(spark, p.table_path)
         assert t.current_schema_ver == 6
         old_fid = next(
@@ -3134,11 +3125,9 @@ def engine_drop_readd_column(spark, sf_dir):
             p.target_state().filter(F.col("http_status").isNotNull()).count()
         )
         assert n_valued == 9  # 8 v6 updates + 1 v6 create, nothing else
-        _DROP_READD_REPLAY[ev] = p.table_path
-        hit = p.table_path
-    from .operators.merge import read_state
+        return p.table_path
 
-    t = LakeTable.load(spark, hit)
+    t = LakeTable.load(spark, _replay_memo("dropreadd", ev, build))
     return read_state(t).select(
         "url", "warc_ts", "_seq", "text", "lang", "http_status"
     )
@@ -3189,7 +3178,7 @@ def engine_multi_table_state(spark, sf_dir):
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_routed_")
+    d = _gate_scratch("routed")
     bucket = "CAST(conv(substring(md5(url), 1, 8), 16, 10) AS BIGINT) % 2"
     r = TableRouter(
         spark, ev, os.path.join(d, "tables"), os.path.join(d, "ckpt"),
@@ -3252,7 +3241,7 @@ def engine_incremental_inverted_index(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table_path, marks, _metrics = _shared_mor_replay(spark)
     versions = LakeTable.load(spark, table_path).versions()
-    base = tempfile.mkdtemp(prefix="olr_inc_invidx_")
+    base = _gate_scratch("inc_invidx")
     idx_path = None
     from_v = min(versions)
     for to_v in marks:
@@ -3301,28 +3290,22 @@ def engine_replay_state_wap(spark, sf_dir):
     the data. Isolation is asserted in-flight (main's version must not move
     while the audit is open); the published state must equal the plain
     four-file replay, which is exactly the DuckDB oracle."""
-    import glob as _glob
-
     from .lake.table import LakeTable
-    from .operators.decode import EVENTS_DDL
     from .operators.merge import read_state
     from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    d = tempfile.mkdtemp(prefix="olr_wap_")
-    table = os.path.join(d, "target")
-    p = CdcPipeline(spark, ev, table, os.path.join(d, "ckpt_main"))
-    for i, f in enumerate(files[:2]):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    files = _event_files(ev)
+    p = _gate_pipeline(spark, "wap", ev)
+    table = p.table_path
+    _apply_files(p, files[:2])
     main_ver = LakeTable.current_version(table)
 
     bp = CdcPipeline(
-        spark, ev, table, os.path.join(d, "ckpt_wap"), branch="wap_audit"
+        spark, ev, table, os.path.join(os.path.dirname(table), "ckpt_wap"),
+        branch="wap_audit",
     )
-    for i, f in enumerate(files[2:], start=2):
-        bp.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    _apply_files(bp, files[2:], start=2)
     if LakeTable.current_version(table) != main_ver:
         raise AssertionError("WAP isolation violated: main moved during audit")
     # the audit gate: the staged head must be readable and non-empty
@@ -8260,8 +8243,6 @@ def cdc_json_messages(spark, sf_dir):
 # delete_where gate: one batch replay of the fixed log, then an ENGINE
 # predicate delete of every winner whose lang is 'de'; result must equal
 # the plain replay minus exactly those winners. Built once per process.
-_DELETE_REPLAY: dict[str, str] = {}
-
 _DELETE_WHERE_SQL = f"""
     WITH base AS ({_REPLAY_SQL})
     SELECT url, warc_ts, _seq, text, lang, http_status
@@ -8285,25 +8266,21 @@ def engine_delete_where(spark, sf_dir):
     (OpCode 11.3); the engine-originated twin is what a lake target adds."""
     from .lake.table import LakeTable
     from .operators.merge import delete_where, read_state
-    from .streaming.pipeline import CdcPipeline
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    hit = _DELETE_REPLAY.get(ev)
-    if hit is None or not os.path.isdir(hit):
-        d = tempfile.mkdtemp(prefix="olr_delete_")
-        p = CdcPipeline(
-            spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt")
-        )
+
+    def build():
+        p = _gate_pipeline(spark, "delete", ev)
         p.run_batch_replay()
         t = LakeTable.load(spark, p.table_path)
         before = t.last_epoch()
         delete_where(t, "lang = 'de'")
         # the watermark must not move: engine deletes are not source epochs
         assert LakeTable.load(spark, p.table_path).last_epoch() == before
-        _DELETE_REPLAY[ev] = p.table_path
-        hit = p.table_path
-    t = LakeTable.load(spark, hit)
+        return p.table_path
+
+    t = LakeTable.load(spark, _replay_memo("delete", ev, build))
     return read_state(t).select(
         "url", "warc_ts", "_seq", "text", "lang", "http_status"
     )
@@ -8314,8 +8291,6 @@ def engine_delete_where(spark, sf_dir):
 # whose newest version violates must fall back to its newest CONFORMING
 # version (or disappear, or keep a delete tombstone): filtering after the
 # window would be the wrong semantics and hash-fails. Built once per process.
-_CONSTRAINT_REPLAY: dict[str, tuple[str, str]] = {}
-
 _CONSTRAINT_SQL = f"""
     WITH ev AS (
       SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
@@ -8350,17 +8325,14 @@ def engine_constraint_replay(spark, sf_dir):
     dead-letter rows + surviving events partition the committed log."""
     from .lake.table import LakeTable
     from .operators.merge import read_state
-    from .streaming.pipeline import CdcPipeline
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    hit = _CONSTRAINT_REPLAY.get(ev)
-    if hit is None or not os.path.isdir(hit[0]):
-        d = tempfile.mkdtemp(prefix="olr_constraint_")
-        dead = os.path.join(d, "dead")
-        p = CdcPipeline(
-            spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-            dead_letter_path=dead,
+
+    def build():
+        dead = _gate_scratch("constraint_dead")
+        p = _gate_pipeline(
+            spark, "constraint", ev, dead_letter_path=dead,
             constraints={"lang_allowed": "lang <> 'ja'"},
         )
         p.run_batch_replay()
@@ -8376,13 +8348,12 @@ def engine_constraint_replay(spark, sf_dir):
             .count()
         )
         assert n_dead == n_ja
-        _CONSTRAINT_REPLAY[ev] = (p.table_path, dead)
-        hit = _CONSTRAINT_REPLAY[ev]
-    t = LakeTable.load(spark, hit[0])
-    state = read_state(t).select(
+        return p.table_path
+
+    t = LakeTable.load(spark, _replay_memo("constraint", ev, build))
+    return read_state(t).select(
         "url", "warc_ts", "_seq", "text", "lang", "http_status"
     )
-    return state
 
 
 def _pca_comp_sql(c: int, cov: str) -> str:
@@ -8637,8 +8608,6 @@ def docs_dedup_method_agreement(spark, sf_dir):
 # eq-skip gate: replay, cluster with lang leading so files carry narrow
 # lang bounds, then serve a lang slice through the PRUNED read — the value
 # hash proves the skipped files contained nothing the slice needed.
-_LANG_SLICE_REPLAY: dict[str, str] = {}
-
 _LANG_SLICE_SQL = f"""
     WITH base AS ({_REPLAY_SQL})
     SELECT url, warc_ts, _seq, text, lang, http_status
@@ -8664,23 +8633,19 @@ def engine_lang_slice_pruned(spark, sf_dir):
     generalized here beyond the time column."""
     from .lake.table import LakeTable
     from .operators.merge import cluster_buckets
-    from .streaming.pipeline import CdcPipeline
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    hit = _LANG_SLICE_REPLAY.get(ev)
-    if hit is None or not os.path.isdir(hit):
-        d = tempfile.mkdtemp(prefix="olr_langslice_")
-        p = CdcPipeline(
-            spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt")
-        )
+
+    def build():
+        p = _gate_pipeline(spark, "langslice", ev)
         p.run_batch_replay()
         t = LakeTable.load(spark, p.table_path)
         cluster_buckets(t, target_rows_per_file=64,
                         sort_cols=("lang", "warc_ts"))
-        _LANG_SLICE_REPLAY[ev] = p.table_path
-        hit = p.table_path
-    t = LakeTable.load(spark, hit)
+        return p.table_path
+
+    t = LakeTable.load(spark, _replay_memo("langslice", ev, build))
     pruned = t.read(eq={"lang": "de"})
     assert len(pruned.inputFiles()) < len(t.read().inputFiles()), \
         "eq bounds must skip files after the lang-leading cluster rewrite"
@@ -8811,7 +8776,7 @@ def engine_incremental_join(spark, sf_dir):
     versions = LakeTable.load(spark, table_path).versions()
     host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
     side_a = F.substring(F.md5(F.col("url")), 1, 1) <= "7"
-    base = tempfile.mkdtemp(prefix="olr_inc_join_")
+    base = _gate_scratch("inc_join")
     j_path = None
     from_v = min(versions)
     for to_v in marks:
@@ -8860,8 +8825,6 @@ def engine_incremental_join(spark, sf_dir):
 # Z-order gate: replay, z-order rewrite on (lang, warc_ts), then serve a
 # slice constrained on BOTH dimensions through the pruned read — asserting
 # each dimension's prune engaged before returning.
-_ZORDER_REPLAY: dict[str, str] = {}
-
 _ZORDER_SLICE_SQL = f"""
     WITH base AS ({_REPLAY_SQL})
     SELECT url, warc_ts, _seq, text, lang, http_status
@@ -8886,27 +8849,22 @@ def engine_zorder_slice(spark, sf_dir):
     lake-side generalization to two."""
     from .lake.table import LakeTable
     from .operators.merge import zorder_buckets
-    from .streaming.pipeline import CdcPipeline
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    hit = _ZORDER_REPLAY.get(ev)
-    if hit is None or not os.path.isdir(hit):
-        d = tempfile.mkdtemp(prefix="olr_zorder_")
+
+    def build():
         # one bucket + small files: each lang region spans several files,
         # so the time dimension can split WITHIN a region (a region that
         # fits one file has whole-range ts bounds and ts never prunes)
-        p = CdcPipeline(
-            spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-            n_buckets=1,
-        )
+        p = _gate_pipeline(spark, "zorder", ev, n_buckets=1)
         p.run_batch_replay()
         t = LakeTable.load(spark, p.table_path)
         zorder_buckets(t, cat_col="lang", bits=8,
                        target_rows_per_file=8)
-        _ZORDER_REPLAY[ev] = p.table_path
-        hit = p.table_path
-    t = LakeTable.load(spark, hit)
+        return p.table_path
+
+    t = LakeTable.load(spark, _replay_memo("zorder", ev, build))
     lo_us = 1_578_009_600_000_000  # 2020-01-03 00:00:00 UTC in micros
     plan = t.plan_scan(ts_between=(lo_us, None), eq={"lang": "en"})
     assert plan["skipped_ts"] > 0 and plan["skipped_eq"] > 0, plan
@@ -9452,22 +9410,14 @@ def engine_rollback_replay(spark, sf_dir):
     re-applies it; the final state must equal the plain four-file replay,
     which is exactly the DuckDB oracle. Shape at 100 TB: rollback is O(1)
     metadata; re-delivery cost is the epochs replayed, same as any resume."""
-    import glob as _glob
-
     from .lake.table import LakeTable
-    from .operators.decode import EVENTS_DDL
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    d = tempfile.mkdtemp(prefix="olr_rollback_")
-    p = CdcPipeline(spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"))
-    restore_ver = None
-    for i, f in enumerate(files):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
-        if i == 1:
-            restore_ver = LakeTable.current_version(p.table_path)
+    files = _event_files(ev)
+    p = _gate_pipeline(spark, "rollback", ev)
+    _apply_files(p, files[:2])
+    restore_ver = LakeTable.current_version(p.table_path)
+    _apply_files(p, files[2:], start=2)
 
     rolled = LakeTable.load(spark, p.table_path).rollback_to(restore_ver)
     if rolled.last_epoch() != (1, True):
@@ -9475,8 +9425,7 @@ def engine_rollback_replay(spark, sf_dir):
             f"rollback did not regress the watermark: {rolled.last_epoch()}"
         )
     # re-delivery: the SAME epochs from the source converge idempotently
-    for i, f in enumerate(files[2:], start=2):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    _apply_files(p, files[2:], start=2)
     return p.target_state().select(
         "url", "warc_ts", "_seq", "text", "lang", "http_status"
     )
@@ -9561,14 +9510,9 @@ def engine_bloom_lookup(spark, sf_dir):
     extends that idea to hash membership."""
     from .lake.table import LakeTable
     from .operators.merge import cluster_buckets, lookup_keys
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_bloom_")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-        bloom_cols=("url",),
+    p = _gate_pipeline(
+        spark, "bloom", _ensure_replay_events(), bloom_cols=("url",)
     )
     p.run_batch_replay()
     t = LakeTable.load(spark, p.table_path)
@@ -9769,23 +9713,13 @@ def engine_maintain_replay(spark, sf_dir):
     ingest pipeline (reference analogue: the checkpoint GC thread,
     Metadata.cpp checkpoint retention)."""
     import datetime as _dt
-    import glob as _glob
 
     from .lake.table import LakeTable
-    from .operators.decode import EVENTS_DDL
     from .operators.merge import maintain
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_maint_")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-        merge_mode="mor", compact_every=0,
-    )
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    for i, f in enumerate(files):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    p = _gate_pipeline(spark, "maint", ev, merge_mode="mor", compact_every=0)
+    _apply_files(p, _event_files(ev))
     t = LakeTable.load(spark, p.table_path)
     if not t.dirty_buckets():
         raise AssertionError("MoR replay left no dirty buckets to maintain")
@@ -9823,19 +9757,14 @@ def engine_clone_continue(spark, sf_dir):
     clone's own data root. Exactly-once also transfers: the clone inherits
     the confirmed-epoch watermark, so re-delivering epoch 1 to it would be
     suppressed while epochs 2-3 apply."""
-    import glob as _glob
-
     from .lake.table import LakeTable
-    from .operators.decode import EVENTS_DDL
     from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    d = tempfile.mkdtemp(prefix="olr_clone_")
-    p = CdcPipeline(spark, ev, os.path.join(d, "src"), os.path.join(d, "c1"))
-    for i, f in enumerate(files[:2]):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    files = _event_files(ev)
+    p = _gate_pipeline(spark, "clone", ev)
+    _apply_files(p, files[:2])
+    d = os.path.dirname(p.table_path)
     src = LakeTable.load(spark, p.table_path)
     src_rows = p.target_state().count()
 
@@ -9851,8 +9780,7 @@ def engine_clone_continue(spark, sf_dir):
         raise AssertionError(f"clone copied data files: {copied[:3]}")
 
     p2 = CdcPipeline(spark, ev, clone_path, os.path.join(d, "c2"))
-    for i, f in enumerate(files[2:], start=2):
-        p2.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    _apply_files(p2, files[2:], start=2)
 
     if p.target_state().count() != src_rows:
         raise AssertionError("source state changed under the clone's writes")
@@ -10654,63 +10582,19 @@ def _replay_stream(spark, files_per_trigger: int = 1) -> DataFrame:
     )
 
 
-from contextlib import contextmanager
-
-# Scratch dirs created by _stream_harness cannot be deleted in its finally
-# block (several gates return lazy DataFrames backed by files under them), so
-# they are registered here and removed at interpreter exit; stale dirs from
-# PRIOR interpreter runs (mtime before this process started) are pruned at
-# harness entry — /dev/shm is RAM-backed and accumulation on the
-# memory-sensitive bench VMs is real cost.
-_STREAM_SCRATCH_DIRS: list[str] = []
-_PROCESS_T0 = time.time()
-
-
-def _cleanup_stream_scratch() -> None:
-    import shutil as _shutil
-
-    for d in _STREAM_SCRATCH_DIRS:
-        _shutil.rmtree(d, ignore_errors=True)
-
-
-def _prune_stale_stream_scratch(base: str) -> None:
-    import shutil as _shutil
-
-    try:
-        for name in os.listdir(base):
-            if not name.startswith("olr_stream_gate_"):
-                continue
-            p = os.path.join(base, name)
-            try:
-                if os.path.getmtime(p) < _PROCESS_T0:
-                    _shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                continue
-    except OSError:
-        pass
-
-
-import atexit
-
-atexit.register(_cleanup_stream_scratch)
-
-
 @contextmanager
-def _stream_harness(spark, n_partitions: int = 8):
+def _stream_harness(spark):
     """Shared harness dial for the streaming gates (round-3 verdict
     "amortize the streaming harness cost"): stateful queries commit one
     state store PER shuffle partition PER micro-batch, so the session
     default (4×cores) multiplies fixture-scale runs by ~16× of empty-store
-    overhead. Yields a /dev/shm scratch dir for the checkpoint/sink and
-    pins shuffle partitions low for the duration; values are unaffected
+    overhead. Yields a gate scratch dir for the checkpoint/sink and pins
+    shuffle partitions to 8 for the duration; values are unaffected
     (partitioning never changes an emitted set), the session default is
     restored on exit."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    _prune_stale_stream_scratch(base or tempfile.gettempdir())
-    d = tempfile.mkdtemp(prefix="olr_stream_gate_", dir=base)
-    _STREAM_SCRATCH_DIRS.append(d)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
+    d = _gate_scratch("stream_gate")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         yield d
     finally:
@@ -11173,22 +11057,13 @@ def engine_dead_letter_quarantine(spark, sf_dir):
     overwrite-partitioned, so checkpoint re-delivery cannot duplicate
     quarantined rows. Shape at 100 TB: the classifier is a pure
     expression on the ingest scan; the side write shuffles nothing."""
-    from .streaming.pipeline import CdcPipeline
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    import glob as _glob
-
-    from .operators.decode import EVENTS_DDL
-
     ev = _ensure_deadletter_events()
-    d = tempfile.mkdtemp(prefix="olr_deadletter_")
-    dl = os.path.join(d, "dead_letter")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
+    dl = _gate_scratch("dead_letter")
+    p = _gate_pipeline(
+        spark, "deadletter", ev,
         max_html_bytes=_DL_MAX_HTML, dead_letter_path=dl,
     )
-    for i, f in enumerate(sorted(_glob.glob(os.path.join(ev, "*.parquet")))):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    _apply_files(p, _event_files(ev))
     return spark.read.parquet(dl).select(
         F.col("epoch_id").cast("int").alias("epoch_id"),
         "seq", "op", "url", "_dl_reason",
@@ -12753,8 +12628,6 @@ _RETRANS_EVENTS = fixture_path(_REPLAY_BASE, "replay_retrans", _RETRANS_SPEC)
 
 
 def _ensure_retransmit_replay_events() -> str:
-    import glob as _glob
-
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -12762,7 +12635,7 @@ def _ensure_retransmit_replay_events() -> str:
     src = _ensure_replay_events()
 
     def _write(d: str) -> None:
-        files = sorted(_glob.glob(os.path.join(src, "*.parquet")))
+        files = _event_files(src)
         running_max = None
         carry = None
         day_us = np.timedelta64(24 * 3600 * 1_000_000, "us")
@@ -13603,12 +13476,8 @@ def engine_symlink_manifest(spark, sf_dir):
     checkpoint file-list handoff (Metadata.cpp) is the same contract —
     a consumer must be able to resume from metadata alone."""
     from .lake.table import LakeTable
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_symlink_")
-    p = CdcPipeline(spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"))
+    p = _gate_pipeline(spark, "symlink", _ensure_replay_events())
     p.run_batch_replay()
     t = LakeTable.load(spark, p.table_path)
     man = t.write_symlink_manifest()
@@ -14846,12 +14715,8 @@ def engine_table_stats(spark, sf_dir):
     Schema.cpp."""
     from .lake.table import LakeTable
     from .operators.merge import analyze, table_stats
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_stats_")
-    p = CdcPipeline(spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"))
+    p = _gate_pipeline(spark, "stats", _ensure_replay_events())
     p.run_batch_replay()
     analyze(LakeTable.load(spark, p.table_path), columns=_TABLE_STATS_COLS)
     stats = table_stats(LakeTable.load(spark, p.table_path))
@@ -15289,17 +15154,12 @@ def engine_import_replay(spark, sf_dir):
     new table's data/ root holds no parquet. Reference analogue:
     Metadata.cpp checkpoint adoption — resuming over files the engine
     did not write."""
-    import glob as _glob
-
     from .lake.table import LakeTable
     from .operators.merge import import_files, read_state
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_import_")
-    p = CdcPipeline(spark, ev, os.path.join(d, "src"), os.path.join(d, "ckpt"))
+    p = _gate_pipeline(spark, "import", _ensure_replay_events())
     p.run_batch_replay()
+    d = os.path.dirname(p.table_path)
     src = LakeTable.load(spark, p.table_path)
     ext = os.path.join(d, "external_dump")
     src.read().write.parquet(ext)
@@ -15311,8 +15171,8 @@ def engine_import_replay(spark, sf_dir):
         key_col=src.key_col,
         n_buckets=src.n_buckets,
     )
-    import_files(dst, sorted(_glob.glob(os.path.join(ext, "*.parquet"))))
-    assert not _glob.glob(
+    import_files(dst, sorted(glob.glob(os.path.join(ext, "*.parquet"))))
+    assert not glob.glob(
         os.path.join(dst_path, "data", "**", "*.parquet"), recursive=True
     ), "import must copy nothing"
     state = read_state(LakeTable.load(spark, dst_path))
@@ -15750,11 +15610,8 @@ def engine_network_replay(spark, sf_dir):
     from .sinks.builders import build_json_messages
     from .sinks.network import NetworkConfirmSink, ReferenceConsumer
 
-    import glob as _glob
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
+    files = _event_files(_ensure_replay_events())
     committed_of = lambda f: (
         spark.read.schema(EVENTS_DDL).parquet(f)
         .filter(
@@ -15766,7 +15623,7 @@ def engine_network_replay(spark, sf_dir):
     )
     srv = ReferenceConsumer()
     try:
-        d = tempfile.mkdtemp(prefix="olr_net_")
+        d = _gate_scratch("net")
         sink = NetworkConfirmSink(
             "127.0.0.1", srv.port, confirmed_path=os.path.join(d, "wm")
         )
@@ -15839,11 +15696,8 @@ def engine_kafka_replay(spark, sf_dir):
     from .sinks.builders import build_json_messages
     from .sinks.kafka_wire import KafkaBrokerStub, KafkaConfirmSink
 
-    import glob as _glob
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
+    files = _event_files(_ensure_replay_events())
     committed_of = lambda f: (
         spark.read.schema(EVENTS_DDL).parquet(f)
         .filter(
@@ -15855,7 +15709,7 @@ def engine_kafka_replay(spark, sf_dir):
     )
     srv = KafkaBrokerStub({"olr-changes": 4}, refuse_produces=10_000)
     try:
-        d = tempfile.mkdtemp(prefix="olr_kafka_")
+        d = _gate_scratch("kafka")
         sink = KafkaConfirmSink(
             "127.0.0.1", srv.port, confirmed_path=os.path.join(d, "wm")
         )
@@ -15920,14 +15774,8 @@ def engine_stream_suppressed_replay(spark, sf_dir):
     OFF — together they pin that the stateful operator changes row
     VOLUME only). Reference analogue: T5 in-memory transaction state,
     OpenLogReplicator.cpp:218-249."""
-    from .streaming.pipeline import CdcPipeline
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    with _stream_harness(spark) as d:
-        p = CdcPipeline(
-            spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt")
-        )
+    p = _gate_pipeline(spark, "stream_suppressed", _ensure_replay_events())
+    with _stream_harness(spark):
         p.run_available_now(max_files_per_trigger=2, suppress_stale=True)
     return p.target_state().select(
         "url", "warc_ts", "_seq", "text", "lang", "http_status"
@@ -16064,31 +15912,24 @@ def engine_branch_diff(spark, sf_dir):
     own table (branch creation mutates refs — the shared replay is
     read-only). Reference analogue: the confirm protocol's
     changes-since-position contract, WriterStream.cpp."""
-    import glob as _glob
-
     from .lake.table import LakeTable
-    from .operators.decode import EVENTS_DDL
     from .operators.merge import snapshot_diff
     from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    files = sorted(_glob.glob(os.path.join(ev, "*.parquet")))
-    d = tempfile.mkdtemp(prefix="olr_branch_diff_")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-        merge_mode="mor", compact_every=0,
+    files = _event_files(ev)
+    p = _gate_pipeline(
+        spark, "branch_diff", ev, merge_mode="mor", compact_every=0
     )
-    for i, f in enumerate(files[:2]):
-        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    _apply_files(p, files[:2])
     main_head = LakeTable.current_version(p.table_path)
     LakeTable.load(spark, p.table_path).create_branch("audit")
     pb = CdcPipeline(
-        spark, ev, p.table_path, os.path.join(d, "ckpt2"),
+        spark, ev, p.table_path,
+        os.path.join(os.path.dirname(p.table_path), "ckpt2"),
         merge_mode="mor", compact_every=0, branch="audit",
     )
-    for i, f in enumerate(files[2:], start=2):
-        pb.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
+    _apply_files(pb, files[2:], start=2)
     branch_head = LakeTable.load(spark, p.table_path, branch="audit").snap[
         "version"
     ]
@@ -16768,8 +16609,6 @@ def emb_pq_code_balance(spark, sf_dir):
 # winners co-locate into all-null files, then serve an IS-NOT-NULL read
 # through the PRUNED scan — the value hash proves the skipped files held
 # nothing but NULLs for the column.
-_NULL_PRUNE_REPLAY: dict[str, str] = {}
-
 _NULL_PRUNE_SQL = f"""
     WITH base AS ({_REPLAY_SQL})
     SELECT url, warc_ts, _seq, text, lang, http_status
@@ -16799,24 +16638,19 @@ def engine_null_prune(spark, sf_dir):
     nullability, the lakehouse scan dimension."""
     from .lake.table import LakeTable
     from .operators.merge import cluster_buckets
-    from .streaming.pipeline import CdcPipeline
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _ensure_replay_events()
-    hit = _NULL_PRUNE_REPLAY.get(ev)
-    if hit is None or not os.path.isdir(hit):
-        d = tempfile.mkdtemp(prefix="olr_nullprune_")
-        p = CdcPipeline(
-            spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-            n_buckets=2,
-        )
+
+    def build():
+        p = _gate_pipeline(spark, "nullprune", ev, n_buckets=2)
         p.run_batch_replay()
         t = LakeTable.load(spark, p.table_path)
         cluster_buckets(t, target_rows_per_file=8,
                         sort_cols=("http_status", "warc_ts"))
-        _NULL_PRUNE_REPLAY[ev] = p.table_path
-        hit = p.table_path
-    t = LakeTable.load(spark, hit)
+        return p.table_path
+
+    t = LakeTable.load(spark, _replay_memo("nullprune", ev, build))
     st = t.plan_scan(not_null=("http_status",))
     assert st["skipped_null"] > 0, \
         "null_counts must skip all-null files after the status-led rewrite"
@@ -16901,15 +16735,8 @@ def engine_posdelete_replay(spark, sf_dir):
     vectors) the Spark re-expression adds."""
     from .lake.table import LakeTable
     from .operators.merge import delete_positions, read_state
-    from .streaming.pipeline import CdcPipeline
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = _ensure_replay_events()
-    d = tempfile.mkdtemp(prefix="olr_posdel_")
-    p = CdcPipeline(
-        spark, ev, os.path.join(d, "target"), os.path.join(d, "ckpt"),
-        merge_mode="mor",
-    )
+    p = _gate_pipeline(spark, "posdel", _ensure_replay_events(), merge_mode="mor")
     # one epoch per source file: per-epoch net-effect collapse leaves each
     # key's per-epoch winners physically on disk — the version set the
     # oracle's `projected` CTE models and resurrection draws from

@@ -40,13 +40,13 @@ produce requests to exercise the not-confirmed path.
 
 from __future__ import annotations
 
-import os
 import socket
 import struct
 import threading
 import zlib
 
-from .network import _recv_exact
+from .network import ConfirmWatermark
+from .zmtp import _recv_exact
 
 API_PRODUCE = 0
 API_METADATA = 3
@@ -264,7 +264,7 @@ class KafkaWireProducer:
 
 
 # ---------------------------------------------------------------- confirm sink
-class KafkaConfirmSink:
+class KafkaConfirmSink(ConfirmWatermark):
     """Produce change messages to a Kafka-protocol peer, exactly-once by
     confirmed-epoch watermark — the Kafka twin of NetworkConfirmSink.
 
@@ -283,37 +283,13 @@ class KafkaConfirmSink:
         self.confirmed_path = confirmed_path
         self.timeout = timeout
 
-    def last_confirmed_epoch(self) -> int:
-        if self.confirmed_path and os.path.exists(self.confirmed_path):
-            with open(self.confirmed_path) as f:
-                return int(f.read().strip())
-        return -1
-
-    def _advance_watermark(self, epoch_id: int) -> None:
-        if not self.confirmed_path:
-            return
-        tmp = self.confirmed_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(int(epoch_id)))
-        os.replace(tmp, self.confirmed_path)
-
     def send_epoch(self, messages, epoch_id: int) -> bool:
         """Stream one epoch (DataFrame with a ``message`` column) and gate
         the watermark on the delivery reports. Returns True iff confirmed;
         an already-confirmed epoch is skipped idempotently."""
         epoch_id = int(epoch_id)
-        last = self.last_confirmed_epoch()
-        if epoch_id <= last:
+        if self._already_confirmed(epoch_id):
             return True
-        # Sequential-epoch contract: the watermark is a single max-epoch
-        # integer, so skipping past an unconfirmed epoch would silently mark
-        # it confirmed forever. Callers must confirm epochs in order once a
-        # watermark exists (a fresh sink accepts any starting epoch).
-        if last >= 0 and epoch_id > last + 1:
-            raise ValueError(
-                f"non-sequential epoch {epoch_id} (last confirmed {last}): "
-                f"epoch {last + 1} was never confirmed and would be lost"
-            )
         host, port, topic, timeout = self.host, self.port, self.topic, self.timeout
         with KafkaWireProducer(host, port, timeout) as probe:
             n_parts = len(probe.metadata(topic)["partitions"])

@@ -41,7 +41,7 @@ import socket
 import struct
 import threading
 
-from openlogreplicator_spark.sinks.zmtp import ZmtpPair
+from openlogreplicator_spark.sinks.zmtp import ZmtpPair, _recv_exact
 
 
 def send_frame(sock: socket.socket, payload: bytes) -> None:
@@ -54,16 +54,6 @@ def recv_frame(sock: socket.socket) -> bytes | None:
         return None
     (n,) = struct.unpack(">I", head)
     return _recv_exact(sock, n)
-
-
-def _recv_exact(sock: socket.socket, n: int) -> bytes | None:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return buf
 
 
 class _RawTransport:
@@ -107,7 +97,46 @@ def _control(chan, msg: dict) -> dict:
     return json.loads(resp)
 
 
-class NetworkConfirmSink:
+class ConfirmWatermark:
+    """The durable confirmed-epoch watermark both push sinks gate on: one
+    integer in ``confirmed_path`` (-1 before any confirm; no path keeps no
+    watermark), advanced by an atomic replace only after the peer confirmed
+    the epoch."""
+
+    confirmed_path: str | None
+
+    def last_confirmed_epoch(self) -> int:
+        if self.confirmed_path and os.path.exists(self.confirmed_path):
+            with open(self.confirmed_path) as f:
+                return int(f.read().strip())
+        return -1
+
+    def _advance_watermark(self, epoch_id: int) -> None:
+        if not self.confirmed_path:
+            return
+        tmp = self.confirmed_path + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(str(int(epoch_id)))
+        os.replace(tmp, self.confirmed_path)
+
+    def _already_confirmed(self, epoch_id: int) -> bool:
+        """True for the re-delivery of a confirmed epoch (a no-op send).
+        Sequential-epoch contract: a max-epoch watermark cannot represent a
+        hole, so jumping past an epoch that was never confirmed raises
+        instead of silently marking it confirmed forever (a fresh sink
+        accepts any starting epoch)."""
+        last = self.last_confirmed_epoch()
+        if epoch_id <= last:
+            return True
+        if last >= 0 and epoch_id > last + 1:
+            raise ValueError(
+                f"non-sequential epoch {epoch_id} (last confirmed {last}): "
+                f"epoch {last + 1} was never confirmed and would be lost"
+            )
+        return False
+
+
+class NetworkConfirmSink(ConfirmWatermark):
     """Push change messages to a confirming TCP client, exactly-once by
     confirmed-epoch watermark.
 
@@ -127,21 +156,6 @@ class NetworkConfirmSink:
         self.timeout = timeout
         self.framing = framing
 
-    # ------------------------------------------------------------ watermark
-    def last_confirmed_epoch(self) -> int:
-        if self.confirmed_path and os.path.exists(self.confirmed_path):
-            with open(self.confirmed_path) as f:
-                return int(f.read().strip())
-        return -1
-
-    def _advance_watermark(self, epoch_id: int) -> None:
-        if not self.confirmed_path:
-            return
-        tmp = self.confirmed_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(int(epoch_id)))
-        os.replace(tmp, self.confirmed_path)
-
     # ------------------------------------------------------------- protocol
     def handshake_info(self) -> dict:
         """INFO exchange: report our durable watermark, learn the client's
@@ -160,17 +174,8 @@ class NetworkConfirmSink:
         binary). Returns True when the epoch was confirmed (watermark
         advanced); an already-confirmed epoch is skipped idempotently."""
         epoch_id = int(epoch_id)
-        last = self.last_confirmed_epoch()
-        if epoch_id <= last:
-            return True  # re-delivery of a confirmed epoch: no-op
-        # sequential-epoch contract (same as KafkaConfirmSink): a max-epoch
-        # watermark cannot represent a hole — refuse to jump past an epoch
-        # that was never confirmed rather than silently losing it
-        if last >= 0 and epoch_id > last + 1:
-            raise ValueError(
-                f"non-sequential epoch {epoch_id} (last confirmed {last}): "
-                f"epoch {last + 1} was never confirmed and would be lost"
-            )
+        if self._already_confirmed(epoch_id):
+            return True
         host, port, timeout, framing = (
             self.host, self.port, self.timeout, self.framing
         )

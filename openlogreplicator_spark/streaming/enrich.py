@@ -31,8 +31,9 @@ from ..lake.table import LakeTable
 from ..operators.merge import read_state
 
 # Broadcasting a dimension costs ~(row width)·rows on every executor; the
-# default keeps well under typical auto-broadcast limits for the replay
-# schema. At 10^9-key dimensions the shuffle join engages instead.
+# budget keeps well under typical auto-broadcast limits for the replay
+# schema. At 10^9-key dimensions the shuffle join engages instead. Read at
+# refresh time, so tests can monkeypatch it.
 DEFAULT_BROADCAST_ROWS = 2_000_000
 
 
@@ -51,7 +52,6 @@ class DimensionLookup:
         spark: SparkSession,
         table_path: str,
         dim_cols: dict[str, str] | list[str] | None = None,
-        broadcast_budget_rows: int = DEFAULT_BROADCAST_ROWS,
         stamp_version: bool = False,
         pin_version: int | None = None,
     ) -> None:
@@ -64,7 +64,6 @@ class DimensionLookup:
             self.dim_cols = dict(dim_cols)
         else:
             self.dim_cols = {c: c for c in dim_cols}
-        self.broadcast_budget_rows = broadcast_budget_rows
         self.stamp_version = stamp_version
         self._version: int | None = None
         self._state: DataFrame | None = None
@@ -111,7 +110,7 @@ class DimensionLookup:
         self._state = new_state
         self._version = current
         self._broadcastable = (
-            table.rows_in_buckets() <= self.broadcast_budget_rows
+            table.rows_in_buckets() <= DEFAULT_BROADCAST_ROWS
         )
         return current
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from openlogreplicator_spark.lake.table import LakeTable
 from openlogreplicator_spark.operators.decode import EVENTS_DDL
 from openlogreplicator_spark.replayer import replay
+from openlogreplicator_spark.streaming import enrich
 from openlogreplicator_spark.streaming.enrich import DimensionLookup
 from openlogreplicator_spark.streaming.pipeline import CdcPipeline
 
@@ -100,7 +101,7 @@ def test_enrich_unknown_key_is_null_and_inner_drops(spark, dim_table):
     look.close()
 
 
-def test_enrich_broadcasts_small_dim_only(spark, dim_table):
+def test_enrich_broadcasts_small_dim_only(spark, dim_table, monkeypatch):
     p, files = dim_table
     _apply(spark, p, files[0], 0)
     facts = spark.range(10).select(
@@ -124,9 +125,8 @@ def test_enrich_broadcasts_small_dim_only(spark, dim_table):
                 plan_small
         finally:
             small.close()
-        big = DimensionLookup(
-            spark, p.table_path, dim_cols=["text"], broadcast_budget_rows=0
-        )
+        monkeypatch.setattr(enrich, "DEFAULT_BROADCAST_ROWS", 0)
+        big = DimensionLookup(spark, p.table_path, dim_cols=["text"])
         try:
             plan_big = (
                 big.enrich(facts)._jdf.queryExecution()

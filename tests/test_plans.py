@@ -381,19 +381,18 @@ def test_url_canonical_dedup_no_join(spark):
     assert p.count("Exchange") == 2, p
 
 
-def test_partial_update_state_single_exchange(spark):
+def test_partial_update_state_single_exchange(spark, tmp_path):
     """engine_partial_update_state's fold: the (key, life) fill window and
     the key-ordered pick window both run on the ONE key exchange
     (HashPartitioning(url) satisfies the refined clustering), so the full
     history shuffles exactly once — plus the scan-side union only."""
     import datetime as dt
-    import tempfile as tf
 
     from openlogreplicator_spark.operators.decode import EVENTS_DDL
     from openlogreplicator_spark.operators.merge import read_state_partial
     from openlogreplicator_spark.streaming.pipeline import CdcPipeline
 
-    d = tf.mkdtemp(prefix="olr_partial_plan_")
+    d = str(tmp_path)
     rows = [(i, dt.datetime(2020, 1, 1, 0, 0, i), "c",
              f"https://s.example/{i % 3}", None, "t", "en", None, None, 1,
              False, None, None, None, None) for i in range(6)]
