@@ -1,22 +1,22 @@
-"""Benchmark harness (driver contract): runs the headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line.
+"""Benchmark harness: runs the CDC apply and the catalog queries at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) and prints ONE JSON line.
+Sized for the host it runs on: 4 cores, 15 GB of RAM.
 
-Timeout-proof by construction (round-5 verdict task 1 — BENCH_r04 was
-rc=124/parsed=null because the single JSON line printed only at the very end
-of a run that had outgrown the driver's wall clock):
+Timeout-proof by construction (BENCH_r04 was rc=124/parsed=null because the
+single JSON line printed only at the very end of a run that had outgrown
+the caller's timeout):
 
 * **One JSON line, always.** The line is printed either at normal completion
   or from a SIGTERM/SIGINT handler (exactly one of the two fires) — a driver
-  timeout now yields rc=0 and a parseable artifact carrying every section
-  that completed, with ``truncated`` recording the signal. The JSON-so-far is
+  timeout yields rc=0 and a parseable artifact carrying every section that
+  completed, with ``truncated`` recording the signal. The JSON-so-far is
   additionally mirrored to BENCH_partial.json after every section.
 * **Total wall-clock budget** ($SPARK_GRAFT_BENCH_BUDGET, default 3000 s)
-  with sections in priority order: headline 1→4 scaling pair and the 8-core
-  apply (+stage split) FIRST, then streaming/peak/MoR-CoW tails and the 2→8
-  transparency pair, then the catalog sweep as a budget-bounded sample
-  (rotating start cursor; full sweep when budget remains), sf1 spot LAST.
-  Skipped sections are listed in ``skipped_sections``, never silent.
+  with sections in priority order: the 1→4 scaling pairs FIRST, then
+  streaming and the MoR/CoW tails, then the catalog sweep as a
+  budget-bounded sample (rotating start cursor; full sweep when budget
+  remains), sf1 spot LAST. Skipped sections are listed in
+  ``skipped_sections``, never silent.
 * **Hard per-gate timeouts at sf1**: each DuckDB oracle runs in its own
   subprocess (a 2,957 s runaway recursive-CTE oracle observed in round 4
   cannot eat the run), and each Spark entry runs under a cancelAllJobs
@@ -26,24 +26,19 @@ Sections
 --------
 * CDC end-to-end — the north-rule metric: change-events applied/sec for the
   full log-tail → decode → LWW → bucketed-MERGE pipeline over a deterministic
-  synthesized change log (seed 42, vectorized generator), measured at:
-    - N=1 and 4N=4 cores → headline scaling efficiency (the BASELINE.md
-      criterion; both levels draw far under even a contended membw ceiling),
-    - N=2 and 4N=8 cores → transparency pair (rounds-1/2 continuity),
-    - $SPARK_GRAFT_CPUS cores → peak throughput,
-    - a multi-epoch Structured Streaming replay.
-* catalog queries — every driver-visible operator at the bench sf (seconds
-  each; correctness is the driver's DuckDB gate, this measures time only).
+  synthesized change log (seed 42, vectorized generator):
+    - ``PAIRS`` interleaved N=1 / 4N=4 runs → scaling efficiency (the
+      BASELINE.md criterion); the fastest 4-core run is also the batch apply
+      number and its stage split,
+    - a multi-epoch Structured Streaming replay and the MoR/CoW steady-state
+      tails, at the pair's 4 cores.
+* catalog queries — every catalog entry at the bench sf on
+  $SPARK_GRAFT_CPUS cores (seconds each; correctness is the DuckDB oracle
+  gate of scripts/check_oracle.py, this measures time only).
 
-Measurement protocol (BASELINE.md): each parallelism level runs in its OWN
-subprocess (fresh JVM — shared-JVM JIT warmup otherwise biases whichever
-config runs second), does one warmup apply then takes the min of the repeats.
-Why N=2 vs 8 and not 8 vs 32: this sandbox VM's aggregate memory bandwidth
-measures ~8-9 GB/s (probe included in the output); a columnar scan job is
-memory-bound past ~8 threads HERE, which says nothing about the engine — on a
-real cluster each executor node brings its own memory channels. The 2→8 pair
-keeps both runs below the ceiling so the efficiency number measures the
-engine.
+Measurement protocol (BASELINE.md): every run is its OWN subprocess (fresh
+JVM — shared-JVM JIT warmup otherwise biases whichever config runs second)
+that warms up on a 1/8 subset of the log, then times one full apply.
 """
 
 from __future__ import annotations
@@ -55,7 +50,6 @@ import signal
 import subprocess
 import sys
 import tempfile
-import threading
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -64,41 +58,24 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 SF_NAME = os.path.basename(SF_DIR.rstrip("/"))
-# sf0.1 = 64M events (round 3, was 32M in round 2, 16M in round 1): the
-# ~4-5 s/run serial share (driver planning + job barriers + broadcast build +
-# snapshot commit) is FIXED per run, so a longer parallel phase measures the
-# engine, not the constant.
-N_EVENTS = {"sf0.001": 100_000, "sf0.01": 1_000_000, "sf0.1": 64_000_000}.get(
+# sf0.1 = 8M events, sized by memory only: the largest power of two whose
+# generation (~6.5 GB peak RSS) plus the /dev/shm fixture (~1.6 GB) plus a
+# local[4] child fits in 15 GB. The fixed ~4-5 s serial share per run weighs
+# more here than at the 64M events of rounds 3-5.
+N_EVENTS = {"sf0.001": 100_000, "sf0.01": 1_000_000, "sf0.1": 8_000_000}.get(
     SF_NAME, 1_000_000
 )
 N_URLS = max(2_000, N_EVENTS // 50)
-N_REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-SCALE_LO = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "2"))
-SCALE_HI = int(os.environ.get("SPARK_GRAFT_SCALE_HI", "8"))
-# Headline efficiency pair (round 3): N=1 → 4N=4. Both levels draw well under
-# even a CONTENDED bandwidth ceiling (1-core ≈ 1 GB/s, 4-core ≈ 3 GB/s), and
-# the 4×-longer parallel phase amortizes the fixed serial share that caps the
-# 2→8 pair near 0.8 on a quiet host — so this number measures the engine
-# under ANY host condition (validated at probes of 2-30 GB/s: 0.83-0.90).
-EFF_LO = int(os.environ.get("SPARK_GRAFT_EFF_LO", "1"))
-EFF_HI = int(os.environ.get("SPARK_GRAFT_EFF_HI", "4"))
-PROBE_MIN = float(os.environ.get("SPARK_GRAFT_PROBE_MIN", "8.0"))
-PROBE_WAIT = int(os.environ.get("SPARK_GRAFT_PROBE_WAIT", "240"))
-EFF_TARGET = float(os.environ.get("SPARK_GRAFT_EFF_TARGET", "0.8"))
-# An efficiency ABOVE this is as suspect as one below target: contention
-# landing on the (4x-longer) 1-core run inflates the ratio past 1.0 — a
-# physically super-linear reading means the host, not the engine, was
-# measured, so the pair retries under the same quiet-window gate.
-EFF_SUSPECT = float(os.environ.get("SPARK_GRAFT_EFF_SUSPECT", "1.05"))
-EFF_RETRIES = int(os.environ.get("SPARK_GRAFT_EFF_RETRIES", "2"))
-# Total wall-clock budget (seconds). The round-3 driver run completed in
-# ~55 min; round 4 (which added the sf1 spot sweep) hit the driver's
-# timeout — 3000 s forces the low-priority tail (catalog sample size, sf1
-# slice) to shrink instead.
+# The scaling pair N=1 → 4N=4 uses the whole host; streaming and the tails
+# run at its 4 cores. Its fastest 4-core run is the batch apply number.
+LO, HI = 1, min(4, CPUS)
+PAIRS = 3
+# Total wall-clock budget (seconds): the caller's timeout; the low-priority
+# tail (catalog sample size, sf1 slice) shrinks to fit.
 BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "3000"))
-SF1_SLICE = int(os.environ.get("SPARK_GRAFT_SF1_SLICE", "25"))
-SF1_ENTRY_TIMEOUT = float(os.environ.get("SPARK_GRAFT_SF1_ENTRY_TIMEOUT", "180"))
-SF1_GATE_TIMEOUT = float(os.environ.get("SPARK_GRAFT_SF1_GATE_TIMEOUT", "150"))
+SF1_SLICE = 25
+SF1_ENTRY_TIMEOUT = 180.0
+SF1_GATE_TIMEOUT = 150.0
 CURSOR_PATH = os.path.join(REPO, ".bench_cursor.json")
 PARTIAL_PATH = os.path.join(REPO, "BENCH_partial.json")
 
@@ -214,62 +191,6 @@ def bench_events_dir() -> str:
     )
 
 
-def _membw_burn(_):
-    import numpy as np
-
-    a = np.zeros(100_000_000 // 8)
-    for _ in range(5):
-        a = a + 1.0
-    return float(a[0])
-
-
-def membw_probe() -> dict:
-    """~5 s aggregate-memory-bandwidth probe (documents the VM ceiling)."""
-    import multiprocessing as mp
-
-    out = {}
-    for n in (1, 8):
-        t0 = time.time()
-        with mp.Pool(n) as p:
-            p.map(_membw_burn, range(n))
-        out[f"gbps_{n}w"] = round(n * 1.0 / (time.time() - t0), 1)
-    return out
-
-
-def quick_probe(n: int = 8) -> float:
-    """One-shot aggregate-bandwidth reading (~2-3 s)."""
-    import multiprocessing as mp
-
-    t0 = time.time()
-    with mp.Pool(n) as p:
-        p.map(_membw_burn, range(n))
-    return round(n * 1.0 / (time.time() - t0), 1)
-
-
-def wait_for_quiet_host(
-    min_gbps: float = PROBE_MIN, max_wait: float = PROBE_WAIT, poll: int = 30
-) -> dict:
-    """Block (bounded by max_wait AND the global budget) until the membw
-    probe clears ``min_gbps``; this VM's bandwidth swings 0.5-30 GB/s with
-    neighbor load, and a scaling pair sampled in a trough measures the host,
-    not the engine. Returns the gate record either way (gated=False on
-    timeout)."""
-    t0 = time.time()
-    history = []
-    max_wait = min(max_wait, max(0.0, remaining() - 60))
-    while True:
-        g = quick_probe()
-        history.append(g)
-        if g >= min_gbps or time.time() - t0 >= max_wait:
-            return {
-                "gbps_8w": g,
-                "waited_secs": round(time.time() - t0, 1),
-                "history": history,
-                "gated": g >= min_gbps,
-            }
-        time.sleep(poll)
-
-
 def _run_child(cmd: list[str], timeout: float) -> tuple[str, int | None, str]:
     """Run a child process tracked for signal-time cleanup; returns
     (stdout, exit code, stderr). The exit code is None when the child overran
@@ -298,10 +219,10 @@ def _last_json(stdout: str, fallback: dict) -> dict:
     return fallback
 
 
-def cdc_subprocess(cores: int, events_dir: str, streaming: bool = False,
-                   n_repeats: int | None = None, warmup: int = 1) -> dict:
-    """Run the CDC apply in an isolated process: warmup + min of n_repeats."""
-    n_repeats = N_REPEATS if n_repeats is None else n_repeats
+def cdc_subprocess(cores: int, events_dir: str, streaming: bool = False) -> dict:
+    """Run the CDC apply in a fresh process: a JIT warmup on a 1/8 subset
+    (the identical code paths at a fraction of the cost), then one timed
+    apply with its per-stage split."""
     code = f"""
 import sys, time, tempfile, json, shutil, glob, os
 sys.path.insert(0, {REPO!r})
@@ -310,43 +231,31 @@ from openlogreplicator_spark.streaming.pipeline import CdcPipeline
 from openlogreplicator_spark.operators import merge as _merge
 spark = build_session(app_name="olr-bench-{cores}", cores={cores},
                       shuffle_partitions={4 * cores})
-# JIT warmup on a 1/8 subset: compiles the identical code paths at a
-# fraction of the wall cost of a full warmup apply
-warm_src = sorted(glob.glob(os.path.join({events_dir!r}, "*.parquet")))[:16]
-warm_dir = tempfile.mkdtemp(dir={scratch_base()!r}, prefix="olr_bench_warm_")
-warm_ev = os.path.join(warm_dir, "events"); os.makedirs(warm_ev)
-for f in warm_src:
-    os.link(f, os.path.join(warm_ev, os.path.basename(f)))
-times = []
-rows = 0
-stages = {{}}
-for rep in range({warmup + n_repeats}):
-    warm_rep = rep < {warmup}
-    work = tempfile.mkdtemp(dir={scratch_base()!r}, prefix="olr_bench_run_")
-    p = CdcPipeline(spark, warm_ev if warm_rep else {events_dir!r},
-                    work + "/t", work + "/c", n_buckets=64)
+def apply(events, work):
+    p = CdcPipeline(spark, events, work + "/t", work + "/c", n_buckets=64)
     # per-stage apply breakdown (bucket_discovery/write/footer_walk/commit/
-    # ddl_gate) — resets each repeat, the fastest repeat's split is reported
-    _merge.STAGE_PROFILE = {{}} if not warm_rep else None
+    # ddl_gate)
+    _merge.STAGE_PROFILE = {{}}
     t0 = time.time()
     if {streaming!r}:
         p.run_available_now(max_files_per_trigger=32)
     else:
         p.run_batch_replay()
-    secs = time.time() - t0
-    if not warm_rep:
-        if not times or secs < min(times):
-            stages = dict(_merge.STAGE_PROFILE or {{}})
-        times.append(secs)
-        rows = p.target_state().count() if not rows else rows
-    _merge.STAGE_PROFILE = None
-    shutil.rmtree(work, ignore_errors=True)
-shutil.rmtree(warm_dir, ignore_errors=True)
+    return p, time.time() - t0, _merge.STAGE_PROFILE
+warm = tempfile.mkdtemp(dir={scratch_base()!r}, prefix="olr_bench_warm_")
+os.makedirs(warm + "/events")
+for f in sorted(glob.glob(os.path.join({events_dir!r}, "*.parquet")))[:16]:
+    os.link(f, os.path.join(warm, "events", os.path.basename(f)))
+apply(warm + "/events", warm)
+shutil.rmtree(warm, ignore_errors=True)
+work = tempfile.mkdtemp(dir={scratch_base()!r}, prefix="olr_bench_run_")
+p, secs, stages = apply({events_dir!r}, work)
+rows = p.target_state().count()
+shutil.rmtree(work, ignore_errors=True)
 spark.stop()
 print(json.dumps({{"cores": {cores}, "streaming": {streaming!r},
-                   "secs_min": round(min(times), 3),
-                   "secs_all": [round(t, 2) for t in times],
-                   "events_per_sec": round({N_EVENTS} / min(times), 1),
+                   "secs_min": round(secs, 3),
+                   "events_per_sec": round({N_EVENTS} / secs, 1),
                    "final_rows": rows, "stages": stages}}))
 """
     out, _rc, _err = _run_child([sys.executable, "-c", code],
@@ -398,113 +307,45 @@ print(json.dumps({{"cores": {cores}, "merge_mode": {merge_mode!r},
                             "error": "no output / timeout"})
 
 
-def measure_pair_series(
-    lo_cores: int, hi_cores: int, n_pairs: int, events_dir: str,
-    est_pair: float, reserve: float, max_retries: int = 0,
-) -> dict:
-    """Interleaved scaling pairs: lo/hi alternate (hi,lo) × repeats so both
-    levels sample the SAME minutes of host contention — sequential blocks
-    let a contention spike hit one level only and skew the ratio either way.
-    hi runs FIRST within a pair: quiet windows on this VM last ~1-2 min and
-    the higher-core run is the bandwidth-hungry one; probes are recorded
-    before AND after each pair (contention arriving mid-pair slows the lo
-    run and would INFLATE eff — trust pairs whose both probes are sane).
+def measure_pairs(events_dir: str, reserve: float) -> dict:
+    """``PAIRS`` interleaved (hi, lo) scaling pairs: the levels alternate so
+    both sample the same minutes of host load, and a load spike cannot land
+    on one level only. Every pair is reported and none is retried; the
+    efficiency divides each level's fastest run, and the fastest hi run is
+    returned whole (its stage split included).
 
-    Budget-aware: the first pair always runs (if the caller admitted the
-    section); later pairs/retries run only while the measured per-pair cost
-    fits in ``remaining() - reserve``."""
-    lo_times: list[float] = []
-    hi_times: list[float] = []
-    lo: dict = {}
-    hi: dict = {}
+    Budget-aware: the first pair always runs; later pairs run only while
+    the measured cost of a pair fits in ``remaining() - reserve``."""
+    def eff(lo_secs: float, hi_secs: float) -> float:
+        return round((lo_secs / hi_secs) / (HI / LO), 3)
+
+    runs: dict[str, list[dict]] = {"hi": [], "lo": []}
     records: list[dict] = []
-    est = est_pair
-
-    def run_pair() -> None:
-        nonlocal est
-        t0 = time.time()
-        rec = {"probe_gbps": quick_probe()}
-        r_hi = cdc_subprocess(hi_cores, events_dir, n_repeats=1, warmup=1)
-        r_lo = cdc_subprocess(lo_cores, events_dir, n_repeats=1, warmup=1)
-        if "secs_min" in r_lo:
-            lo_times.append(r_lo["secs_min"])
-            lo.update(r_lo)
-            rec["lo_secs"] = r_lo["secs_min"]
-        if "secs_min" in r_hi:
-            hi_times.append(r_hi["secs_min"])
-            hi.update(r_hi)
-            rec["hi_secs"] = r_hi["secs_min"]
-        if "lo_secs" in rec and "hi_secs" in rec:
-            rec["eff"] = round(
-                (rec["lo_secs"] / rec["hi_secs"]) / (hi_cores / lo_cores), 3
-            )
-        rec["probe_after_gbps"] = quick_probe()
-        records.append(rec)
-        est = time.time() - t0  # refine the estimate from the measured pair
-
-    def current_eff():
-        if not (lo_times and hi_times):
-            return None
-        return round(
-            (min(lo_times) / min(hi_times)) / (hi_cores / lo_cores), 3
-        )
-
-    for i in range(n_pairs):
-        if i > 0 and remaining() - reserve < est * 1.1:
-            skip(f"pair_{lo_cores}_{hi_cores}_extra", est)
+    est = 0.0
+    for i in range(PAIRS):
+        if i and remaining() - reserve < est * 1.1:
+            skip(f"pair_{LO}_{HI}_extra", round(est, 1))
             break
-        run_pair()
+        t0 = time.time()
+        rec = {}
+        for level, cores in (("hi", HI), ("lo", LO)):
+            r = cdc_subprocess(cores, events_dir)
+            if "secs_min" in r:
+                runs[level].append(r)
+                rec[f"{level}_secs"] = r["secs_min"]
+        if "lo_secs" in rec and "hi_secs" in rec:
+            rec["eff"] = eff(rec["lo_secs"], rec["hi_secs"])
+        records.append(rec)
+        est = time.time() - t0
         emit_partial()
-    retries = 0
-    while (
-        current_eff() is not None
-        and (current_eff() < EFF_TARGET or current_eff() > EFF_SUSPECT)
-        and retries < max_retries
-        and remaining() - reserve > est * 1.1 + 30
-    ):
-        retries += 1
-        wait_for_quiet_host()
-        run_pair()
-        emit_partial()
-    if lo_times:
-        lo = {**lo, "secs_min": round(min(lo_times), 3),
-              "secs_all": [round(t, 2) for t in lo_times],
-              "events_per_sec": round(N_EVENTS / min(lo_times), 1)}
-    if hi_times:
-        hi = {**hi, "secs_min": round(min(hi_times), 3),
-              "secs_all": [round(t, 2) for t in hi_times],
-              "events_per_sec": round(N_EVENTS / min(hi_times), 1)}
-    return {"pair": [lo_cores, hi_cores], "lo": lo, "hi": hi,
-            "eff": current_eff(), "records": records, "retries": retries}
-
-
-def run_bounded(spark, fn, secs: float):
-    """Run fn() with a watchdog that cancels all Spark jobs at ``secs``;
-    raises TimeoutError if the watchdog fired."""
-    fired = threading.Event()
-    done = threading.Event()
-
-    def watchdog():
-        if not done.wait(secs):
-            fired.set()
-            try:
-                spark.sparkContext.cancelAllJobs()
-            except Exception:  # noqa: BLE001
-                pass
-
-    th = threading.Thread(target=watchdog, daemon=True)
-    th.start()
-    try:
-        result = fn()
-    except Exception:
-        if fired.is_set():
-            raise TimeoutError(f"spark entry exceeded {secs}s") from None
-        raise
-    finally:
-        done.set()
-    if fired.is_set():
-        raise TimeoutError(f"spark entry exceeded {secs}s")
-    return result
+    best = {
+        level: {**min(rs, key=lambda r: r["secs_min"]),
+                "secs_all": [r["secs_min"] for r in rs]} if rs else {}
+        for level, rs in runs.items()
+    }
+    lo, hi = best["lo"], best["hi"]
+    return {"lo": lo, "hi": hi, "pairs": records,
+            "eff": eff(lo["secs_min"], hi["secs_min"]) if lo and hi else None}
 
 
 def oracle_subprocess(name: str, sf_dir: str, timeout: float):
@@ -589,7 +430,7 @@ def catalog_sweep(deadline: float) -> dict[str, float]:
     return timings
 
 
-def sf1_spot(timings: dict[str, float]) -> dict | None:
+def sf1_spot(timings: dict[str, float]) -> dict:
     """Scale-evidence rung: re-run a rotating slice of the sf-table-backed
     catalog entries at 10× the bench scale (deterministically scaled facts,
     sf_scale.ensure_scaled_dir), each through the SAME strict DuckDB value
@@ -597,22 +438,19 @@ def sf1_spot(timings: dict[str, float]) -> dict | None:
     cancelAllJobs watchdog. The rotation cursor persists so successive
     rounds accumulate full-catalog 10× coverage. Any entry whose
     sf0.1→sf1 scaling is super-linear is the round's plan-note candidate.
-    Disable with SPARK_GRAFT_SF1_SPOT=0."""
-    if os.environ.get("SPARK_GRAFT_SF1_SPOT", "1") == "0":
-        return None
-    import inspect
-
-    from openlogreplicator_spark.oracle_check import frames_equal, normalize
+    Entries the budget cuts short (before the Spark side, or before the
+    gate) are listed in ``skipped_for_budget``, not counted as timeouts."""
+    from openlogreplicator_spark.oracle_check import (
+        frames_equal,
+        normalize,
+        run_bounded,
+        sf_backed_entries,
+    )
     from openlogreplicator_spark.queries import ORACLES, QUERIES
     from openlogreplicator_spark.session import build_session
     from openlogreplicator_spark.sf_scale import ensure_scaled_dir
 
-    # sf-table-backed entries only: fixture-backed engine_*/replay entries
-    # are sf-independent and would waste sweep slots
-    sf_backed = [
-        n for n in QUERIES
-        if "T(spark, sf_dir" in inspect.getsource(QUERIES[n])
-    ]
+    sf_backed = sf_backed_entries()
     cur = load_cursor()
     start = int(cur.get("sf1", 0)) % len(sf_backed)
     order = sf_backed[start:] + sf_backed[:start]
@@ -660,8 +498,10 @@ def sf1_spot(timings: dict[str, float]) -> dict | None:
                     name, scaled,
                     min(SF1_GATE_TIMEOUT, max(30.0, remaining() - 30)),
                 )
-                ok, _msg = frames_equal(normalize(got), normalize(want))
+                ok, msg = frames_equal(normalize(got), normalize(want))
                 rec["ok"] = bool(ok)
+                if not ok:
+                    rec["err"] = msg[:200]
             except TimeoutError:
                 rec["ok"] = None
                 rec["err"] = "oracle timeout"
@@ -669,6 +509,8 @@ def sf1_spot(timings: dict[str, float]) -> dict | None:
                 rec["ok"] = False
                 rec["err"] = str(e)[:400]
             rec["gate_secs"] = round(time.time() - t1, 3)
+        elif name in ORACLES:
+            skipped.append(name)
         entries[name] = rec
         emit_partial()
     try:
@@ -684,9 +526,9 @@ def sf1_spot(timings: dict[str, float]) -> dict | None:
         "slice_start": start,
         "n_sf_backed": len(sf_backed),
         "n_fail": sum(1 for v in entries.values() if v.get("ok") is False),
-        "n_gated": sum(1 for v in entries.values() if v.get("ok") is True
-                       or v.get("ok") is False),
-        "n_timeout": sum(1 for v in entries.values() if v.get("ok") is None),
+        "n_gated": sum(1 for v in entries.values() if v.get("ok") is not None),
+        "n_timeout": sum(1 for v in entries.values()
+                         if v.get("err") in ("spark timeout", "oracle timeout")),
         "entries": entries,
         "skipped_for_budget": skipped,
     }
@@ -699,99 +541,40 @@ def main() -> None:
     t0 = time.time()
     events_dir = bench_events_dir()
     cdc["fixture_secs"] = round(time.time() - t0, 1)
-    cdc["membw_ceiling"] = membw_probe()
     emit_partial()
 
-    # ---- priority 1: headline 1→4 scaling pair (the north-rule number) ----
-    # contention-immune by construction; reserve enough budget for the
-    # 8-core apply section that follows.
-    head = measure_pair_series(
-        EFF_LO, EFF_HI, max(2, N_REPEATS - 1), events_dir,
-        est_pair=420.0, reserve=200.0, max_retries=EFF_RETRIES,
-    )
-    cdc["scaling_pair"] = head["pair"]
-    cdc["scaling_efficiency"] = head["eff"]
-    cdc["scale_1_4"] = {"lo": head["lo"], "hi": head["hi"], "eff": head["eff"],
-                        "pairs": head["records"], "retries": head["retries"]}
+    # ---- priority 1: the 1→4 scaling pairs (the north-rule number); the
+    # fastest 4-core run is the batch apply and its stage split. Reserve
+    # the budget of the streaming and tail sections that follow. ----
+    pairs = measure_pairs(events_dir, reserve=510.0)
+    cdc["scaling_pair"] = [LO, HI]
+    cdc["scaling_efficiency"] = pairs["eff"]
+    cdc["scale_1_4"] = pairs
+    cdc["scale_hi"] = pairs["hi"]
+    cdc["apply_stages"] = pairs["hi"].get("stages")
+    OUT["queries"]["cdc_apply_batch"] = pairs["hi"].get("secs_min", -1.0)
     emit_partial()
 
-    # ---- priority 2: 8-core batch apply + per-stage split ----
-    apply8 = {}
-    if remaining() > 150:
-        apply8 = cdc_subprocess(8, events_dir, n_repeats=1, warmup=1)
-        cdc["scale_hi"] = apply8
-        cdc["apply_stages"] = apply8.get("stages")
-        OUT["queries"]["cdc_apply_batch"] = apply8.get("secs_min", -1.0)
-    else:
-        skip("apply_8core", 150)
-    emit_partial()
-
-    # ---- priority 3: streaming / peak / MoR-CoW tails ----
+    # ---- priority 2: streaming and the MoR/CoW tails at the pair's 4 cores ----
     if remaining() > 140:
-        stream = cdc_subprocess(min(CPUS, 8), events_dir, streaming=True,
-                                n_repeats=1, warmup=1)
+        stream = cdc_subprocess(HI, events_dir, streaming=True)
         cdc["streaming"] = stream
         OUT["queries"]["cdc_apply_streaming"] = stream.get("secs_min", -1.0)
     else:
         skip("streaming", 140)
-    if remaining() > 90:
-        cdc["peak"] = (
-            cdc_subprocess(CPUS, events_dir, n_repeats=1, warmup=1)
-            if CPUS != 8 or not apply8 else apply8
-        )
-        cdc["peak_events_per_sec"] = cdc["peak"].get("events_per_sec")
-    else:
-        skip("peak", 90)
-    emit_partial()
     for mode, est in (("mor", 150), ("cow", 220)):
         if remaining() > est + 60:
             cdc[f"streaming_tail_{mode}"] = cdc_tail_subprocess(
-                min(CPUS, 8), events_dir, mode
+                HI, events_dir, mode
             )
         else:
             skip(f"tail_{mode}", est)
     emit_partial()
 
-    # ---- priority 4: 2→8 transparency pair (contention-sensitive; gets a
-    # quiet-window gate, bounded) ----
-    if remaining() > 500:
-        # gate wait + extra pairs must not starve the catalog + sf1 tail:
-        # leave ~1100 s for them when the budget allows
-        cdc["probe_gate"] = wait_for_quiet_host(
-            max_wait=min(PROBE_WAIT, max(0.0, remaining() - 1100))
-        )
-        side = measure_pair_series(
-            SCALE_LO, SCALE_HI, N_REPEATS, events_dir,
-            est_pair=260.0, reserve=900.0,
-        )
-        cdc["scaling_efficiency_2_8"] = side["eff"]
-        cdc["scaling_pairs"] = side["records"]
-        cdc["eff_retries"] = side["retries"]
-        if side["lo"]:
-            cdc["scale_lo"] = side["lo"]
-        # the 8-core batch number: best of the dedicated apply and the
-        # series' hi runs (same config, fresh JVMs)
-        if side["hi"] and (
-            not apply8
-            or side["hi"].get("secs_min", 9e9) < apply8.get("secs_min", 9e9)
-        ):
-            merged = dict(side["hi"])
-            if apply8.get("stages"):
-                merged["stages"] = apply8["stages"]
-            cdc["scale_hi"] = merged
-            OUT["queries"]["cdc_apply_batch"] = merged.get("secs_min", -1.0)
-        if head["eff"] is None:
-            cdc["scaling_pair"] = side["pair"]
-            cdc["scaling_efficiency"] = side["eff"]
-    else:
-        skip("pair_2_8", 500)
-    emit_partial()
-
-    # ---- priority 5: catalog sweep (budget-bounded sample, rotating) ----
-    sf1_reserve = 0.0 if os.environ.get("SPARK_GRAFT_SF1_SPOT", "1") == "0" else 420.0
+    # ---- priority 3: catalog sweep (budget-bounded sample, rotating) ----
     if remaining() > 90:
         timings = catalog_sweep(
-            deadline=T_START + BUDGET - min(sf1_reserve, remaining() * 0.3) - 30
+            deadline=T_START + BUDGET - min(420.0, remaining() * 0.3) - 30
         )
         OUT["queries"].update(timings)
     else:
@@ -799,7 +582,7 @@ def main() -> None:
         timings = {}
     emit_partial()
 
-    # ---- priority 6: sf1 spot (rotating slice, hard-timeout gates) ----
+    # ---- priority 4: sf1 spot (rotating slice, hard-timeout gates) ----
     if remaining() > 120:
         cdc["sf1_spot"] = sf1_spot(timings)
     else:

@@ -2,12 +2,16 @@
 pytest suite: run a catalog query on Spark and its SQL twin on DuckDB over
 the same parquet, compare row count + column names + order-insensitive
 values. Mirrors the driver's CORRECTNESS gate and the reference's
-dump-diffing strategy (SURVEY.md §5)."""
+dump-diffing strategy (SURVEY.md §5). Also the scale-gate plumbing the
+sf1 runs share (bench.py's sf1 spot, scripts/sf1_sweep.py): the Spark-side
+watchdog and the sf-table-backed entry filter."""
 
 from __future__ import annotations
 
+import inspect
 import math
 import os
+import threading
 
 import duckdb
 import pandas as pd
@@ -89,3 +93,42 @@ def check_query(spark, con, name: str, sf_dir: str) -> tuple[bool, str]:
     want = normalize(con.execute(ORACLES[name]).df())
     ok, msg = frames_equal(got, want)
     return ok, f"{len(got)} rows vs {len(want)} — {msg}"
+
+
+def sf_backed_entries() -> list[str]:
+    """Catalog entries that read the sf tables, in registration order.
+    Fixture-backed engine_*/replay entries are sf-independent, so a
+    scale run skips them."""
+    from .queries import QUERIES
+
+    return [
+        n for n in QUERIES if "T(spark, sf_dir" in inspect.getsource(QUERIES[n])
+    ]
+
+
+def run_bounded(spark, fn, secs: float):
+    """Run fn() with a watchdog that cancels all Spark jobs at ``secs``;
+    raises TimeoutError if the watchdog fired."""
+    fired = threading.Event()
+    done = threading.Event()
+
+    def watchdog():
+        if not done.wait(secs):
+            fired.set()
+            try:
+                spark.sparkContext.cancelAllJobs()
+            except Exception:  # noqa: BLE001
+                pass
+
+    threading.Thread(target=watchdog, daemon=True).start()
+    try:
+        result = fn()
+    except Exception:
+        if fired.is_set():
+            raise TimeoutError(f"spark side exceeded {secs}s") from None
+        raise
+    finally:
+        done.set()
+    if fired.is_set():
+        raise TimeoutError(f"spark side exceeded {secs}s")
+    return result

@@ -16,7 +16,6 @@ Env:   SF1_SWEEP_SPARK_TIMEOUT (default 300), SF1_SWEEP_GATE_TIMEOUT
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
 import sys
@@ -25,32 +24,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-def run_bounded(spark, fn, secs: float):
-    fired = threading.Event()
-    done = threading.Event()
-
-    def watchdog():
-        if not done.wait(secs):
-            fired.set()
-            try:
-                spark.sparkContext.cancelAllJobs()
-            except Exception:  # noqa: BLE001
-                pass
-
-    threading.Thread(target=watchdog, daemon=True).start()
-    try:
-        out = fn()
-    except Exception:
-        if fired.is_set():
-            raise TimeoutError(f"spark side exceeded {secs}s") from None
-        raise
-    finally:
-        done.set()
-    if fired.is_set():
-        raise TimeoutError(f"spark side exceeded {secs}s")
-    return out
 
 
 def oracle_bounded(con, sql: str, secs: float):
@@ -82,16 +55,14 @@ def main() -> int:
         duckdb_connection,
         frames_equal,
         normalize,
+        run_bounded,
+        sf_backed_entries,
     )
     from openlogreplicator_spark.queries import ORACLES, QUERIES
     from openlogreplicator_spark.session import build_session
     from openlogreplicator_spark.sf_scale import ensure_scaled_dir
 
-    sf_backed = [
-        n for n in QUERIES
-        if "T(spark, sf_dir" in inspect.getsource(QUERIES[n])
-        and (not only or n in only)
-    ]
+    sf_backed = [n for n in sf_backed_entries() if not only or n in only]
     t0 = time.time()
     scaled = ensure_scaled_dir(src, 10)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
