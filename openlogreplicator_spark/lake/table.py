@@ -15,8 +15,19 @@ Iceberg's public design (snapshots + manifests + field-id schema evolution):
   solve; round-2 verdict "What's wrong #3"). Reads resolve the manifest chain
   in order; once the chain exceeds ``manifest_merge_threshold`` refs it is
   collapsed into a single base manifest (amortized O(total)/threshold).
-  The ``_current`` pointer is swapped with an atomic ``os.replace`` — readers
-  see either the old or the new snapshot, never a torn state.
+  Every metadata file (manifest, snapshot JSON, ``_current`` pointer, tags,
+  branches) is published by :func:`atomic_write` — tmp file + ``os.replace``
+  — so readers see either the old or the new snapshot, never a torn state.
+* Manifest entries carry per-file stats read from the parquet footers (row
+  count, ``warc_ts`` bounds, short-string column bounds, null counts, Bloom
+  bitmaps): :meth:`LakeTable.manifest_entries` builds them and
+  :meth:`LakeTable._select_files` prunes on them.
+* Dirty buckets (uncompacted merge-on-read deltas) are the table's to track:
+  after every commit, dirty = (parent's dirty − replaced buckets) ∪ the
+  buckets of the new files, where the new files count only for a pure
+  append (no replaced buckets) or on a ``partial_images`` table. A
+  copy-on-write rewrite therefore leaves its buckets clean, and a commit
+  re-applied after a conflict derives the set from the head it lands on.
 * Snapshot summaries carry ``epoch_id`` + ``final`` — the commit-snapshot dedup
   gate for exactly-once (reference ``isNewData``, Metadata.cpp:592-603).
 * Schema evolution by field id: ``add_column`` / ``rename_column`` /
@@ -42,6 +53,8 @@ conflicted.
 
 from __future__ import annotations
 
+import concurrent.futures
+import datetime as _dt
 import fcntl
 import json
 import os
@@ -51,10 +64,11 @@ import uuid
 from contextlib import contextmanager
 from typing import Any, Iterable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .bloom import bloom_might_contain
+from .bloom import bloom_build, bloom_might_contain
 
 
 class CommitConflict(RuntimeError):
@@ -78,6 +92,130 @@ def _ref_lock(path: str):
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)
         os.close(fd)
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Publish ``text`` at ``path`` all at once: write ``<path>.tmp``, then
+    ``os.replace`` it into place. Readers see the old or the new content,
+    never a torn file; a crash in between leaves only the ``.tmp``, which
+    ``expire_snapshots`` sweeps."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+# File-level stats column: the LWW event-time order column. Its per-file
+# [min,max] rides in each manifest entry so time-windowed reads can skip
+# whole files from metadata alone (Iceberg's value_counts/bounds analogue;
+# the reference's checkpoint headers carry first/next scn per redo file for
+# exactly the same skip — Metadata.cpp checkpoint schema).
+STATS_COL = "warc_ts"
+_EPOCH0 = _dt.datetime(1970, 1, 1)
+
+
+def ts_micros(v) -> int | None:
+    """Tz-naive-UTC datetime (or date) → integer epoch micros; None if not
+    convertible. Integer micros are the only cross-safe JSON encoding for
+    parquet timestamp statistics (naive datetimes have no portable str)."""
+    if isinstance(v, _dt.datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        return (v - _EPOCH0) // _dt.timedelta(microseconds=1)
+    return None
+
+
+def _file_ts_bounds(md, stats_col: str) -> tuple[int | None, int | None]:
+    """[min,max] epoch-micros of ``stats_col`` across a file's row groups,
+    (None, None) when any row group lacks usable min/max (INT96 timestamps,
+    stats disabled, column absent) — absent bounds mean 'never prune'."""
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        rgm = md.row_group(rg)
+        col = None
+        for ci in range(rgm.num_columns):
+            c = rgm.column(ci)
+            if c.path_in_schema == stats_col:
+                col = c
+                break
+        if col is None:
+            return None, None
+        st = col.statistics
+        if st is None or not st.has_min_max:
+            return None, None
+        mn, mx = ts_micros(st.min), ts_micros(st.max)
+        if mn is None or mx is None:
+            return None, None
+        lo = mn if lo is None else min(lo, mn)
+        hi = mx if hi is None else max(hi, mx)
+    return lo, hi
+
+
+# String-column manifest bounds: values longer than this are NOT recorded —
+# a truncated max would under-report the file's upper bound and make the
+# equality prune unsound, so long columns (text, html) simply never prune.
+_COL_BOUNDS_MAX_LEN = 64
+
+
+def _file_col_bounds(md) -> dict[str, list[str]]:
+    """Per-file [min, max] for every short STRING column whose statistics
+    are usable in EVERY row group (Iceberg lower_bounds/upper_bounds
+    analogue). Missing stats in any row group drop the column — absent
+    bounds mean 'never prune'."""
+    bounds: dict[str, list[str]] | None = None
+    for rg in range(md.num_row_groups):
+        rgm = md.row_group(rg)
+        rg_bounds: dict[str, list[str]] = {}
+        for ci in range(rgm.num_columns):
+            c = rgm.column(ci)
+            st = c.statistics
+            if st is None or not st.has_min_max:
+                continue
+            mn, mx = st.min, st.max
+            if not (isinstance(mn, str) and isinstance(mx, str)):
+                continue
+            if len(mn) > _COL_BOUNDS_MAX_LEN or len(mx) > _COL_BOUNDS_MAX_LEN:
+                continue
+            rg_bounds[c.path_in_schema] = [mn, mx]
+        if bounds is None:
+            bounds = rg_bounds
+        else:
+            # keep only columns usable in every row group, widen the rest
+            bounds = {
+                col: [min(b[0], rg_bounds[col][0]),
+                      max(b[1], rg_bounds[col][1])]
+                for col, b in bounds.items()
+                if col in rg_bounds
+            }
+    return bounds or {}
+
+
+def _file_null_counts(md) -> dict[str, int]:
+    """Per-file total null count for every column whose statistics report
+    it in EVERY row group (Iceberg null_value_counts analogue). Absent
+    stats drop the column — a missing count means 'never prune'. Unlike
+    col_bounds this applies to any type (parquet null counts are
+    type-agnostic), so IS-NOT-NULL pruning works on int columns too."""
+    counts: dict[str, int] | None = None
+    for rg in range(md.num_row_groups):
+        rgm = md.row_group(rg)
+        rg_counts: dict[str, int] = {}
+        for ci in range(rgm.num_columns):
+            c = rgm.column(ci)
+            st = c.statistics
+            if st is None or st.null_count is None:
+                continue
+            rg_counts[c.path_in_schema] = st.null_count
+        if counts is None:
+            counts = rg_counts
+        else:
+            counts = {
+                col: n + rg_counts[col]
+                for col, n in counts.items()
+                if col in rg_counts
+            }
+    return counts or {}
+
 
 _WIDENINGS = {
     ("int", "long"),
@@ -203,8 +341,7 @@ class LakeTable:
         (Iceberg tag ref), or a named ``branch`` head — commits on a
         branch-loaded handle advance the branch ref, not ``_current``
         (write-audit-publish staging). The file list is resolved from the
-        manifest chain (in memory only — never rewritten per commit); legacy
-        inline-"files" snapshots load as-is."""
+        manifest chain (in memory only — never rewritten per commit)."""
         if sum(x is not None for x in (version, tag, branch)) > 1:
             raise ValueError("pass at most one of version / tag / branch")
         if tag is not None:
@@ -223,15 +360,13 @@ class LakeTable:
                 version = int(f.read().strip())
         with open(os.path.join(path, "_snapshots", f"v{version:08d}.json")) as f:
             snap = json.load(f)
-        if "manifests" in snap:
-            snap["files"] = LakeTable._resolve_files(path, snap["manifests"])
+        snap["files"] = LakeTable._resolve_files(path, snap["manifests"])
         return LakeTable(spark, path, snap, branch=branch)
 
     @staticmethod
     def _resolve_files(path: str, manifests: list[dict]) -> list[dict]:
         """Replay the manifest chain: each ref first retracts its replaced
-        buckets, then appends its files — identical semantics to the old
-        full-list rewrite, reconstructed instead of restated per commit."""
+        buckets, then appends its files."""
         files: list[dict] = []
         for m in manifests:
             rb = set(m.get("replaced_buckets", ()))
@@ -268,11 +403,8 @@ class LakeTable:
             return {k: int(v) for k, v in json.load(f).items()}
 
     def _write_tags(self, tags: dict[str, int]) -> None:
-        p = os.path.join(self.path, "_snapshots", "tags.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(tags, f, indent=1)
-        os.replace(tmp, p)
+        atomic_write(os.path.join(self.path, "_snapshots", "tags.json"),
+                     json.dumps(tags, indent=1))
 
     def tags(self) -> dict[str, int]:
         return self._read_tags(self.path)
@@ -321,11 +453,8 @@ class LakeTable:
             }
 
     def _write_branches(self, brs: dict[str, dict]) -> None:
-        p = os.path.join(self.path, "_snapshots", "branches.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(brs, f, indent=1)
-        os.replace(tmp, p)
+        atomic_write(os.path.join(self.path, "_snapshots", "branches.json"),
+                     json.dumps(brs, indent=1))
 
     def branches(self) -> dict[str, dict]:
         return self._read_branches(self.path)
@@ -393,11 +522,8 @@ class LakeTable:
                     f"cannot fast-forward: main is at v{cur}, not an ancestor "
                     f"of branch {name!r} (head v{head}, forked at v{fork})"
                 )
-            sdir = os.path.join(self.path, "_snapshots")
-            ptmp = os.path.join(sdir, "_current.tmp")
-            with open(ptmp, "w") as f:
-                f.write(str(head))
-            os.replace(ptmp, os.path.join(sdir, "_current"))
+            atomic_write(os.path.join(self.path, "_snapshots", "_current"),
+                         str(head))
             if delete:
                 # inline (not delete_branch): _ref_lock is not reentrant
                 del brs[name]
@@ -423,11 +549,8 @@ class LakeTable:
     @staticmethod
     def _bump_ref_epoch(path: str) -> None:
         """Callers hold ``_ref_lock``."""
-        p = os.path.join(path, "_snapshots", "_ref_epoch")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(LakeTable._ref_epoch(path) + 1))
-        os.replace(tmp, p)
+        atomic_write(os.path.join(path, "_snapshots", "_ref_epoch"),
+                     str(LakeTable._ref_epoch(path) + 1))
 
     def rollback_to(self, version: int) -> "LakeTable":
         """Restore main to a retained snapshot (Iceberg rollback; reference
@@ -442,11 +565,8 @@ class LakeTable:
         with _ref_lock(self.path):
             if v not in self.versions():
                 raise ValueError(f"no such snapshot version: {v}")
-            sdir = os.path.join(self.path, "_snapshots")
-            ptmp = os.path.join(sdir, "_current.tmp")
-            with open(ptmp, "w") as f:
-                f.write(str(v))
-            os.replace(ptmp, os.path.join(sdir, "_current"))
+            atomic_write(os.path.join(self.path, "_snapshots", "_current"),
+                         str(v))
             # non-linear ref move: invalidate in-flight writers' rebase
             # window proof (their content_op_count baseline predates the
             # rewind and could coincidentally match the new line's)
@@ -497,13 +617,11 @@ class LakeTable:
         Reads the dedicated ``confirmed_epoch`` snapshot field, which only
         epoch-bearing commits advance and every other commit carries forward —
         so a maintenance commit (evolve / compact / purge) between an epoch and
-        its re-delivery cannot reset the exactly-once gate. Falls back to the
-        commit summary for pre-upgrade snapshots."""
+        its re-delivery cannot reset the exactly-once gate."""
         ce = self.snap.get("confirmed_epoch")
-        if ce is not None:
-            return int(ce["epoch_id"]), bool(ce["final"])
-        s = self.snap.get("summary", {})
-        return int(s.get("epoch_id", -1)), bool(s.get("final", True))
+        if ce is None:
+            return -1, True
+        return int(ce["epoch_id"]), bool(ce["final"])
 
     def file_commits(self) -> dict[str, dict]:
         """Row-provenance map: live file key → the commit that ADDED it
@@ -548,16 +666,10 @@ class LakeTable:
 
     def dirty_buckets(self) -> set[int]:
         """Buckets holding uncompacted merge-on-read deltas (≥2 rows per key
-        possible). Tracked per bucket since round 3 — compaction and read-time
-        LWW touch ONLY these; the pre-upgrade boolean flag degrades to
-        'every bucket with data' (reference analogue: checkpoint GC touches
-        only stale files, Metadata.cpp:505-554)."""
-        db = self.snap.get("dirty_buckets")
-        if db is not None:
-            return set(db)
-        if self.snap.get("needs_read_compaction"):
-            return {f["bucket"] for f in self.snap["files"]}
-        return set()
+        possible) — compaction and read-time LWW touch ONLY these
+        (reference analogue: checkpoint GC touches only stale files,
+        Metadata.cpp:505-554). ``commit_files`` maintains the set."""
+        return set(self.snap.get("dirty_buckets") or ())
 
     def rows_in_buckets(self, buckets: Iterable[int] | None = None) -> int:
         """Exact row count from file metadata — a FREE upper bound on distinct
@@ -613,6 +725,77 @@ class LakeTable:
                 }
             )
         return out
+
+    def written_files(self, absdir: str) -> list[tuple[str, int]]:
+        """(table-relative path, bucket) of every parquet file a
+        ``partitionBy("_bucket")`` write left under ``absdir``."""
+        out = []
+        for root, _dirs, files in os.walk(absdir):
+            for fn in files:
+                if fn.endswith(".parquet"):
+                    out.append((
+                        os.path.relpath(os.path.join(root, fn), self.path),
+                        int(os.path.basename(root).split("=")[1]),
+                    ))
+        return out
+
+    def manifest_entries(
+        self, files: Iterable[tuple[str, int]]
+    ) -> list[dict]:
+        """Manifest entries for ``(path, bucket)`` data files at the current
+        schema version — the stats ``_select_files`` prunes on, read from
+        each parquet footer: row count, ``STATS_COL`` bounds (``ts_min_us``/
+        ``ts_max_us``), short-string ``col_bounds``, ``null_counts``, and a
+        ``bloom`` bitmap per indexed string column. A relative path is
+        taken under the table root; paths are recorded as given.
+
+        Footer reads run on a THREAD POOL: this walk executes on the driver
+        between the write job and the snapshot commit, so done serially it is
+        a pure non-scaling share of every epoch (it showed up as ~0.2-0.5 s of
+        the flat cost in the N-vs-4N scaling decomposition, BASELINE.md)."""
+        files = list(files)
+        bloom_cols = [
+            f["name"]
+            for f in self.current_schema()
+            if f["name"] in self.bloom_cols and f["type"] == "string"
+        ]
+
+        def entry(path_bucket: tuple[str, int]) -> dict:
+            path, bucket = path_bucket
+            pf = pq.ParquetFile(os.path.join(self.path, path))
+            md = pf.metadata
+            e = {
+                "path": path,
+                "bucket": int(bucket),
+                "schema_ver": self.current_schema_ver,
+                "rows": md.num_rows,
+            }
+            lo, hi = _file_ts_bounds(md, STATS_COL)
+            if lo is not None:
+                e["ts_min_us"], e["ts_max_us"] = lo, hi
+            cb = _file_col_bounds(md)
+            if cb:
+                e["col_bounds"] = cb
+            # write-time Bloom index build (lake/bloom.py): one column-pruned
+            # read of just the indexed columns — O(indexed bytes) per file
+            present = [c for c in bloom_cols if c in pf.schema_arrow.names]
+            if present:
+                cols = pf.read(columns=present)
+                e["bloom"] = {
+                    c: bloom_build(
+                        (v.as_py() for v in cols.column(c)), md.num_rows
+                    )
+                    for c in present
+                }
+            nulls = _file_null_counts(md)
+            if nulls:
+                e["null_counts"] = nulls
+            return e
+
+        if not files:
+            return []
+        with concurrent.futures.ThreadPoolExecutor(min(16, len(files))) as ex:
+            return list(ex.map(entry, files))
 
     def _select_files(
         self,
@@ -921,11 +1104,11 @@ class LakeTable:
                 "write_symlink_manifest is unsound on a partial-image table "
                 "(rows are NULL-means-unchanged partial images)"
             )
-        if self.snap.get("dirty_buckets"):
+        dirty = self.dirty_buckets()
+        if dirty:
             raise ValueError(
                 "write_symlink_manifest refused: dirty merge-on-read buckets "
-                f"{sorted(self.snap['dirty_buckets'])} need read-time LWW — "
-                "compact_table() first"
+                f"{sorted(dirty)} need read-time LWW — compact_table() first"
             )
         cur = self.current_schema()
         fes = list(self._select_files(None, None, None))
@@ -1049,8 +1232,7 @@ class LakeTable:
         new_files: list[dict],
         replaced_buckets: Iterable[int],
         summary: dict[str, Any],
-        schema_ver: int | None = None,
-        extra: dict[str, Any] | None = None,
+        n_buckets: int | None = None,
         new_delete_files: list[dict] | None = None,
         rebase_on_conflict: bool = True,
         _attempts: int = 5,
@@ -1058,9 +1240,16 @@ class LakeTable:
         """Commit: carry over untouched buckets' files, swap in new ones
         (empty ``replaced_buckets`` = pure append, the merge-on-read path).
 
-        ``new_files`` entries: {"path": rel, "bucket": int, "schema_ver": v, "rows": n}.
-        ``extra`` merges top-level keys into the snapshot (e.g. the
-        needs_read_compaction flag).
+        ``new_files`` entries: {"path": rel, "bucket": int, "schema_ver": v,
+        "rows": n, ...stats} — as ``manifest_entries`` builds them.
+        ``n_buckets`` sets a new bucket count (``rebucket``).
+
+        Dirty buckets: the new snapshot's set is (the base's dirty −
+        ``replaced_buckets``) ∪ the buckets of ``new_files``, where the new
+        files count only for a pure append or on a ``partial_images`` table.
+        A copy-on-write rewrite (merge, compaction, cluster, rebucket) leaves
+        its buckets LWW-folded, hence clean; a commit with no files and no
+        replaced buckets leaves the set as it is.
 
         Metadata cost is O(len(new_files)): one immutable manifest JSON is
         written; the snapshot records only its ref + replaced buckets. The
@@ -1077,18 +1266,10 @@ class LakeTable:
         buckets it replaces, and appends are position-independent. The
         rebase is REFUSED (conflict re-raised) when the winner evolved the
         schema, changed the bucket count, or was itself an ingest commit —
-        those invalidate the data files already written."""
+        those invalidate the data files already written. The dirty set is
+        derived from the head the commit actually lands on."""
         replaced = sorted(set(replaced_buckets))
         snap = self._next_snap(summary=summary)
-        if "manifests" not in snap:
-            # legacy inline-files snapshot: seed the chain with a base manifest
-            snap["manifests"] = []
-            if self.snap.get("files"):
-                base = self._write_manifest(self.snap["files"], snap["version"], "base")
-                snap["manifests"].append(
-                    {"path": base, "replaced_buckets": [],
-                     "n_files": len(self.snap["files"])}
-                )
         if new_files or replaced:
             mpath = self._write_manifest(list(new_files), snap["version"], "delta")
             snap["manifests"].append(
@@ -1119,10 +1300,12 @@ class LakeTable:
             snap["manifests"] = [
                 {"path": base, "replaced_buckets": [], "n_files": len(snap["files"])}
             ]
-        if schema_ver is not None:
-            assert str(schema_ver) in snap["schemas"]
-        for k, v in (extra or {}).items():
-            snap[k] = v
+        dirty = self.dirty_buckets() - set(replaced)
+        if not replaced or self.partial_images:
+            dirty |= {f["bucket"] for f in new_files}
+        snap["dirty_buckets"] = sorted(dirty)
+        if n_buckets is not None:
+            snap["n_buckets"] = int(n_buckets)
         try:
             self._write_snapshot(snap)
         except CommitConflict:
@@ -1133,7 +1316,7 @@ class LakeTable:
             # level re-checks the new winner, bounded by _attempts
             return self.commit_files(
                 new_files, replaced_buckets, summary,
-                schema_ver=schema_ver, extra=extra,
+                n_buckets=n_buckets,
                 new_delete_files=new_delete_files,
                 rebase_on_conflict=rebase_on_conflict,
                 _attempts=_attempts - 1,
@@ -1232,10 +1415,7 @@ class LakeTable:
             "_snapshots", "manifests",
             f"m{version:08d}-{kind}-{uuid.uuid4().hex[:8]}.json",
         )
-        tmp = os.path.join(self.path, rel + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump({"files": files}, f)
-        os.replace(tmp, os.path.join(self.path, rel))
+        atomic_write(os.path.join(self.path, rel), json.dumps({"files": files}))
         return rel
 
     def commit_summary_only(self, summary: dict[str, Any]) -> None:
@@ -1305,12 +1485,8 @@ class LakeTable:
                     s = json.load(f)
             except FileNotFoundError:
                 continue  # concurrent GC
-            if "manifests" in s:
-                mrefs = {m["path"] for m in s["manifests"]}
-                files = self._resolve_files(self.path, s["manifests"])
-            else:
-                mrefs = set()
-                files = s["files"]
+            mrefs = {m["path"] for m in s["manifests"]}
+            files = self._resolve_files(self.path, s["manifests"])
             dfl = s.get("delete_files") or []
             if v in keep:
                 retained_manifests.update(mrefs)
@@ -1327,9 +1503,9 @@ class LakeTable:
                     removed_snaps += 1
                 except FileNotFoundError:
                     pass
-        # *.tmp anywhere under _snapshots: every writer here (manifest,
-        # snapshot JSON, _current pointer) publishes via tmp + os.replace; a
-        # crash inside that window leaves an orphan nothing references. A
+        # *.tmp anywhere under _snapshots: every metadata writer here
+        # publishes via atomic_write (tmp + os.replace); a crash inside
+        # that window leaves an orphan nothing references. A
         # YOUNG .tmp may be a publisher mid-swap — grace applies.
         for root, _dirs, fns in os.walk(sdir):
             for fn in fns:
@@ -1511,19 +1687,14 @@ class LakeTable:
                 existing = self.versions()
                 if snap["version"] in set(existing):
                     snap["version"] = max(existing) + 1
-            vpath = os.path.join(sdir, f"v{snap['version']:08d}.json")
-            tmp = vpath + ".tmp"
             # the resolved file list stays in memory; on disk it is
-            # represented by the manifest chain (legacy snapshots without
-            # one keep inlining)
-            to_write = (
-                {k: v for k, v in snap.items() if k != "files"}
-                if "manifests" in snap
-                else snap
+            # represented by the manifest chain
+            atomic_write(
+                os.path.join(sdir, f"v{snap['version']:08d}.json"),
+                json.dumps(
+                    {k: v for k, v in snap.items() if k != "files"}, indent=1
+                ),
             )
-            with open(tmp, "w") as f:
-                json.dump(to_write, f, indent=1)
-            os.replace(tmp, vpath)
             if self.branch is not None:
                 # branch-loaded handle: the commit advances the branch ref
                 # only; main (`_current`) sees nothing until publish_branch
@@ -1531,7 +1702,4 @@ class LakeTable:
                 brs[self.branch]["version"] = snap["version"]
                 self._write_branches(brs)
                 return
-            ptmp = os.path.join(sdir, "_current.tmp")
-            with open(ptmp, "w") as f:
-                f.write(str(snap["version"]))
-            os.replace(ptmp, os.path.join(sdir, "_current"))
+            atomic_write(os.path.join(sdir, "_current"), str(snap["version"]))

@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.extract import extract_text_udf
 from ..lake.table import LakeTable
 
 # events-log column → target-table field name for the base (v1) columns
@@ -150,11 +149,7 @@ def parse_ddl_sql(sql: str) -> tuple[str, str, str | None, str | None]:
     raise ValueError(f"unsupported DDL statement: {sql!r}")
 
 
-def project_dml(
-    dml: DataFrame,
-    table: LakeTable,
-    recompute_text: bool = False,
-) -> DataFrame:
+def project_dml(dml: DataFrame, table: LakeTable) -> DataFrame:
     """Project DML (possibly spanning several log schema versions) onto the
     table's CURRENT schema in ONE pass.
 
@@ -173,17 +168,12 @@ def project_dml(
     # finds its log source. This is the same id-is-identity rule the evolved
     # columns follow (reference Schema.cpp:727-930).
     log_src_by_id = {i + 1: src for i, src in enumerate(BASE_COLUMN_MAP)}
-    text_fid = list(BASE_COLUMN_MAP).index("text") + 1
 
     cols: list[Column] = []
     for f in table.current_schema():
         fid, cur_name, typ = f["id"], f["name"], f["type"]
         if fid in base_ids:
-            src = log_src_by_id[fid]
-            c = F.col(src)
-            if fid == text_fid and recompute_text:
-                c = F.coalesce(F.col("text"), extract_text_udf(F.col("html")))
-            cols.append(c.cast(typ).alias(cur_name))
+            cols.append(F.col(log_src_by_id[fid]).cast(typ).alias(cur_name))
             continue
         # evolved column: name under each log schema version it existed in
         name_by_ver = {

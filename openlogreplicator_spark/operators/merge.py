@@ -21,11 +21,15 @@ Scale design:
 * deletes are kept as tombstone rows (``_op='d'``) so a LATE event older than
   a delete cannot resurrect the key across epochs (T4: "late events older than
   the current target row are no-ops"). User-facing reads filter tombstones.
+
+The table format is LakeTable's: operators here write parquet and hand the
+files to ``LakeTable.manifest_entries`` (footer stats) and
+``LakeTable.commit_files``, which also keeps the dirty-bucket set. No
+operator computes manifest stats or dirty marks itself.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
 import os
 import time
 from collections.abc import Iterable
@@ -34,8 +38,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..lake.bloom import bloom_build
-from ..lake.table import LakeTable
+from ..lake.table import STATS_COL, LakeTable, data_suffix, ts_micros
 from .lww import lww_compact_auto
 
 # Per-stage wall-clock breakdown of the apply path (round-3 verdict "What's
@@ -56,181 +59,6 @@ def _stage(name: str, t0: float) -> float:
             STAGE_PROFILE.get(name, 0.0) + (now - t0), 3
         )
     return now
-
-# File-level stats column: the LWW event-time order column. Its per-file
-# [min,max] rides in each manifest entry so time-windowed reads can skip
-# whole files from metadata alone (Iceberg's value_counts/bounds analogue;
-# the reference's checkpoint headers carry first/next scn per redo file for
-# exactly the same skip — Metadata.cpp checkpoint schema).
-STATS_COL = "warc_ts"
-_EPOCH0 = _dt.datetime(1970, 1, 1)
-
-
-def ts_micros(v) -> int | None:
-    """Tz-naive-UTC datetime (or date) → integer epoch micros; None if not
-    convertible. Integer micros are the only cross-safe JSON encoding for
-    parquet timestamp statistics (naive datetimes have no portable str)."""
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return (v - _EPOCH0) // _dt.timedelta(microseconds=1)
-    return None
-
-
-def _file_ts_bounds(md, stats_col: str) -> tuple[int | None, int | None]:
-    """[min,max] epoch-micros of ``stats_col`` across a file's row groups,
-    (None, None) when any row group lacks usable min/max (INT96 timestamps,
-    stats disabled, column absent) — absent bounds mean 'never prune'."""
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        rgm = md.row_group(rg)
-        col = None
-        for ci in range(rgm.num_columns):
-            c = rgm.column(ci)
-            if c.path_in_schema == stats_col:
-                col = c
-                break
-        if col is None:
-            return None, None
-        st = col.statistics
-        if st is None or not st.has_min_max:
-            return None, None
-        mn, mx = ts_micros(st.min), ts_micros(st.max)
-        if mn is None or mx is None:
-            return None, None
-        lo = mn if lo is None else min(lo, mn)
-        hi = mx if hi is None else max(hi, mx)
-    return lo, hi
-
-
-# String-column manifest bounds: values longer than this are NOT recorded —
-# a truncated max would under-report the file's upper bound and make the
-# equality prune unsound, so long columns (text, html) simply never prune.
-_COL_BOUNDS_MAX_LEN = 64
-
-
-def _file_col_bounds(md) -> dict[str, list[str]]:
-    """Per-file [min, max] for every short STRING column whose statistics
-    are usable in EVERY row group (Iceberg lower_bounds/upper_bounds
-    analogue). Missing stats in any row group drop the column — absent
-    bounds mean 'never prune'."""
-    bounds: dict[str, list[str]] | None = None
-    for rg in range(md.num_row_groups):
-        rgm = md.row_group(rg)
-        rg_bounds: dict[str, list[str]] = {}
-        for ci in range(rgm.num_columns):
-            c = rgm.column(ci)
-            st = c.statistics
-            if st is None or not st.has_min_max:
-                continue
-            mn, mx = st.min, st.max
-            if not (isinstance(mn, str) and isinstance(mx, str)):
-                continue
-            if len(mn) > _COL_BOUNDS_MAX_LEN or len(mx) > _COL_BOUNDS_MAX_LEN:
-                continue
-            rg_bounds[c.path_in_schema] = [mn, mx]
-        if bounds is None:
-            bounds = rg_bounds
-        else:
-            # keep only columns usable in every row group, widen the rest
-            bounds = {
-                col: [min(b[0], rg_bounds[col][0]),
-                      max(b[1], rg_bounds[col][1])]
-                for col, b in bounds.items()
-                if col in rg_bounds
-            }
-    return bounds or {}
-
-
-def _file_null_counts(md) -> dict[str, int]:
-    """Per-file total null count for every column whose statistics report
-    it in EVERY row group (Iceberg null_value_counts analogue). Absent
-    stats drop the column — a missing count means 'never prune'. Unlike
-    col_bounds this applies to any type (parquet null counts are
-    type-agnostic), so IS-NOT-NULL pruning works on int columns too."""
-    counts: dict[str, int] | None = None
-    for rg in range(md.num_row_groups):
-        rgm = md.row_group(rg)
-        rg_counts: dict[str, int] = {}
-        for ci in range(rgm.num_columns):
-            c = rgm.column(ci)
-            st = c.statistics
-            if st is None or st.null_count is None:
-                continue
-            rg_counts[c.path_in_schema] = st.null_count
-        if counts is None:
-            counts = rg_counts
-        else:
-            counts = {
-                col: n + rg_counts[col]
-                for col, n in counts.items()
-                if col in rg_counts
-            }
-    return counts or {}
-
-
-def _collect_written_files(absdir: str, table: LakeTable) -> tuple[list[dict], int]:
-    """Manifest entries for every parquet file a commit's write produced.
-
-    Footer reads run on a THREAD POOL: this walk executes on the driver
-    between the write job and the snapshot commit, so done serially it is a
-    pure non-scaling share of every epoch (it showed up as ~0.2-0.5 s of the
-    flat cost in the N-vs-4N scaling decomposition, BASELINE.md)."""
-    import concurrent.futures
-
-    paths: list[str] = []
-    for root, _dirs, files in os.walk(absdir):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                paths.append(os.path.join(root, fn))
-
-    bloom_cols = [
-        f["name"]
-        for f in table.current_schema()
-        if f["name"] in table.bloom_cols and f["type"] == "string"
-    ]
-
-    def meta(ap: str):
-        pf = pq.ParquetFile(ap)
-        md = pf.metadata
-        lo, hi = _file_ts_bounds(md, STATS_COL)
-        blooms: dict[str, dict] = {}
-        if bloom_cols:
-            # write-time Bloom index build (lake/bloom.py): one
-            # column-pruned read of just the indexed columns — O(indexed
-            # bytes) per commit, amortized by the same thread pool
-            present = [c for c in bloom_cols if c in pf.schema_arrow.names]
-            if present:
-                cols = pf.read(columns=present)
-                for c in present:
-                    blooms[c] = bloom_build(
-                        (v.as_py() for v in cols.column(c)), md.num_rows
-                    )
-        return (ap, md.num_rows, lo, hi, _file_col_bounds(md), blooms,
-                _file_null_counts(md))
-
-    entries, rows = [], 0
-    if not paths:
-        return entries, rows
-    with concurrent.futures.ThreadPoolExecutor(min(16, len(paths))) as ex:
-        for ap, n, lo, hi, cb, blooms, nulls in ex.map(meta, paths):
-            rows += n
-            e = {
-                "path": os.path.relpath(ap, table.path),
-                "bucket": int(os.path.basename(os.path.dirname(ap)).split("=")[1]),
-                "schema_ver": table.current_schema_ver,
-                "rows": n,
-            }
-            if lo is not None:
-                e["ts_min_us"], e["ts_max_us"] = lo, hi
-            if cb:
-                e["col_bounds"] = cb
-            if blooms:
-                e["bloom"] = blooms
-            if nulls:
-                e["null_counts"] = nulls
-            entries.append(e)
-    return entries, rows
 
 
 def _refuse_partial(table: LakeTable, op: str) -> None:
@@ -319,10 +147,10 @@ def _write_buckets(
     writer.partitionBy("_bucket").parquet(absdir)
     if profile:
         ts = _stage("write", ts)
-    written = _collect_written_files(absdir, table)
+    entries = table.manifest_entries(table.written_files(absdir))
     if profile:
         _stage("footer_walk", ts)
-    return written
+    return entries, sum(e["rows"] for e in entries)
 
 
 def read_state(
@@ -370,6 +198,38 @@ def read_state(
     return df
 
 
+def _fold_partial(table: LakeTable, df: DataFrame) -> DataFrame:
+    """Each key's newest version in ``df`` with its partial image filled:
+    every payload column carries the last non-NULL value of the key's
+    current life (``_life`` = tombstones before the row, so a delete resets
+    the carry). Tombstone winners are kept; callers pick."""
+    key = table.key_col
+    meta = {key, "warc_ts", "_seq", "_op"}
+    payload = [f["name"] for f in table.current_schema() if f["name"] not in meta]
+    is_del = F.when(F.col("_op") == "d", 1).otherwise(0)
+    w_run = (
+        Window.partitionBy(key)
+        .orderBy("warc_ts", "_seq")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    df = df.withColumn("_life", F.sum(is_del).over(w_run) - is_del)
+    w_fill = (
+        Window.partitionBy(key, "_life")
+        .orderBy("warc_ts", "_seq")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    filled = df.select(
+        key, "warc_ts", "_seq", "_op",
+        *[F.last(c, ignorenulls=True).over(w_fill).alias(c) for c in payload],
+    )
+    w_pick = Window.partitionBy(key).orderBy(F.desc("warc_ts"), F.desc("_seq"))
+    return (
+        filled.withColumn("_rn", F.row_number().over(w_pick))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def read_state_partial(table: LakeTable) -> DataFrame:
     """Current state under PARTIAL-IMAGE semantics: update events carry only
     the columns that changed (NULL = unchanged — the Debezium /
@@ -392,32 +252,7 @@ def read_state_partial(table: LakeTable) -> DataFrame:
     window's (key, life) partitioning is a refinement of the key
     partitioning, and the pick window reuses it); the payload shuffles
     once, same as the salted LWW path."""
-    key = table.key_col
-    df = table.read()
-    meta = {key, "warc_ts", "_seq", "_op"}
-    payload = [f["name"] for f in table.current_schema() if f["name"] not in meta]
-    is_del = F.when(F.col("_op") == "d", 1).otherwise(0)
-    w_run = (
-        Window.partitionBy(key)
-        .orderBy("warc_ts", "_seq")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    df = df.withColumn("_life", F.sum(is_del).over(w_run) - is_del)
-    w_fill = (
-        Window.partitionBy(key, "_life")
-        .orderBy("warc_ts", "_seq")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = df.select(
-        key, "warc_ts", "_seq", "_op",
-        *[F.last(c, ignorenulls=True).over(w_fill).alias(c) for c in payload],
-    )
-    w_pick = Window.partitionBy(key).orderBy(F.desc("warc_ts"), F.desc("_seq"))
-    return (
-        filled.withColumn("_rn", F.row_number().over(w_pick))
-        .filter((F.col("_rn") == 1) & (F.col("_op") != "d"))
-        .drop("_rn")
-    )
+    return _fold_partial(table, table.read()).filter(F.col("_op") != "d")
 
 
 def compact_partial(table: LakeTable, watermark_us: int) -> dict:
@@ -441,7 +276,6 @@ def compact_partial(table: LakeTable, watermark_us: int) -> dict:
     the confirmed scn horizon, Metadata.cpp:505-554."""
     if not table.partial_images:
         raise ValueError("compact_partial requires a partial-image table")
-    key = table.key_col
     watermark_us = int(watermark_us)
     affected = set()
     rows_before = 0
@@ -456,39 +290,12 @@ def compact_partial(table: LakeTable, watermark_us: int) -> dict:
         return {"buckets": 0, "rows_before": 0, "rows_after": 0}
 
     df = table.read(affected)
-    meta = {key, "warc_ts", "_seq", "_op"}
-    payload = [f["name"] for f in table.current_schema() if f["name"] not in meta]
-    cols = [key, "warc_ts", "_seq", "_op", *payload]
     in_prefix = F.unix_micros(F.col("warc_ts")) <= F.lit(watermark_us)
-    pre, suf = df.filter(in_prefix), df.filter(~in_prefix).select(*cols)
-    is_del = F.when(F.col("_op") == "d", 1).otherwise(0)
-    w_run = (
-        Window.partitionBy(key)
-        .orderBy("warc_ts", "_seq")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    pre = pre.withColumn("_life", F.sum(is_del).over(w_run) - is_del)
-    w_fill = (
-        Window.partitionBy(key, "_life")
-        .orderBy("warc_ts", "_seq")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = pre.select(
-        key, "warc_ts", "_seq", "_op",
-        *[F.last(c, ignorenulls=True).over(w_fill).alias(c) for c in payload],
-    )
-    w_pick = Window.partitionBy(key).orderBy(F.desc("warc_ts"), F.desc("_seq"))
-    folded = (
-        filled.withColumn("_rn", F.row_number().over(w_pick))
-        .filter(F.col("_rn") == 1)  # tombstone winners KEPT
-        .drop("_rn")
-    )
+    # tombstone winners KEPT: the key stays dead and keeps segmenting
+    folded = _fold_partial(table, df.filter(in_prefix))
+    suf = df.filter(~in_prefix).select(*folded.columns)
     out = folded.unionByName(suf).withColumn("_bucket", table.bucket_expr())
     new_files, rows_after = _write_buckets(table, out, len(affected))
-    written = sorted({f["bucket"] for f in new_files})
-    remaining_dirty = sorted(
-        (table.dirty_buckets() - affected) | set(written)
-    )
     table.commit_files(
         new_files,
         replaced_buckets=sorted(affected),
@@ -496,10 +303,6 @@ def compact_partial(table: LakeTable, watermark_us: int) -> dict:
             "op": "compact_partial",
             "watermark_us": watermark_us,
             "rows_written": rows_after,
-        },
-        extra={
-            "needs_read_compaction": bool(remaining_dirty),
-            "dirty_buckets": remaining_dirty,
         },
     )
     return {
@@ -768,21 +571,16 @@ def purge_tombstones(table: LakeTable, older_than) -> dict:
     # older versions remain in the deltas would let read-time LWW resurrect
     # them (the exact hazard rewrite_buckets refuses raw rewrites for). The
     # bucket is being rewritten anyway, so resolving it here is a free
-    # compaction — its dirty mark is cleared in the commit.
+    # compaction — the commit clears its dirty mark.
     kept = (
         _live_versions(table, touched)
         .withColumn("_bucket", table.bucket_expr())
         .filter(~expired)
     )
     new_files, rows = _write_buckets(table, kept, len(touched))
-    remaining = sorted(table.dirty_buckets() - set(touched))
     table.commit_files(
         new_files, touched,
         {"op": "purge_tombstones", "buckets": len(touched)},
-        extra={
-            "needs_read_compaction": bool(remaining),
-            "dirty_buckets": remaining,
-        },
     )
     return {"buckets_rewritten": len(touched), "rows": rows}
 
@@ -816,14 +614,9 @@ def merge_append(
         # delete_where) must NOT advance the exactly-once watermark
         summary["epoch_id"] = int(epoch_id)
         summary["final"] = bool(final)
-    touched = {f["bucket"] for f in new_files}
-    dirty = sorted(table.dirty_buckets() | touched)
-    table.commit_files(
-        new_files, replaced_buckets=[], summary=summary,
-        extra={"needs_read_compaction": bool(dirty), "dirty_buckets": dirty},
-    )
+    table.commit_files(new_files, replaced_buckets=[], summary=summary)
     _stage("commit", ts)
-    return {"touched_buckets": len(touched),
+    return {"touched_buckets": len({f["bucket"] for f in new_files}),
             "files": len(new_files), "rows": rows}
 
 
@@ -843,8 +636,7 @@ def compact_table(table: LakeTable) -> dict:
     merged = _resolve(table, dirty, scan=full)
     new_files, rows = _write_buckets(table, merged, len(dirty))
     table.commit_files(
-        new_files, dirty, {"op": "compact", "rows": rows, "buckets": len(dirty)},
-        extra={"needs_read_compaction": False, "dirty_buckets": []},
+        new_files, dirty, {"op": "compact", "rows": rows, "buckets": len(dirty)}
     )
     return {"files": len(new_files), "rows": rows, "buckets_rewritten": len(dirty)}
 
@@ -979,7 +771,6 @@ def cluster_buckets(
         {"op": "cluster", "rows": rows, "buckets": len(present),
          "target_rows_per_file": int(target_rows_per_file),
          "sort_cols": list(sort_cols)},
-        extra={"needs_read_compaction": False, "dirty_buckets": []},
     )
     return {"files": len(new_files), "rows": rows,
             "buckets_rewritten": len(present)}
@@ -1013,11 +804,7 @@ def rebucket(table: LakeTable, new_n_buckets: int) -> dict:
         old_buckets,
         {"op": "rebucket", "rows": rows,
          "from_buckets": table.n_buckets, "to_buckets": new_n_buckets},
-        extra={
-            "n_buckets": int(new_n_buckets),
-            "needs_read_compaction": False,
-            "dirty_buckets": [],
-        },
+        n_buckets=new_n_buckets,
     )
     return {"files": len(new_files), "rows": rows,
             "n_buckets": int(new_n_buckets)}
@@ -1039,8 +826,6 @@ def merge_into(
     must not interfere with the exactly-once gate.
     """
     t0 = time.time()
-    # persist: the compacted batch feeds two actions (bucket discovery +
-    # write); without it the whole decode→LWW DAG runs twice per epoch.
     summary = {
         "op": "merge",
         "final": bool(final),
@@ -1055,7 +840,9 @@ def merge_into(
         # is derivable from the files the write produces.
         merged, touched = b, None
     else:
-        b = b.persist()  # feeds two actions: bucket discovery + the write
+        # persist: the batch feeds two actions (bucket discovery + the
+        # write); without it the whole decode→LWW DAG runs twice per epoch
+        b = b.persist()
         # one job yields BOTH the touched-bucket set and the batch row count
         # (the key-count bound the LWW auto-selector needs)
         ts = time.time()
@@ -1085,13 +872,9 @@ def merge_into(
         touched = sorted({f["bucket"] for f in new_files})
     summary["merge_secs"] = round(time.time() - t0, 3)
     summary["rows_written"] = total_rows
-    # a CoW merge leaves each touched bucket LWW-compacted — clear its dirty
-    # mark (mode-switch safety: a MoR table merged with CoW converges clean)
-    dirty = sorted(table.dirty_buckets() - set(touched))
-    table.commit_files(
-        new_files, touched, summary,
-        extra={"needs_read_compaction": bool(dirty), "dirty_buckets": dirty},
-    )
+    # replacing the touched buckets clears their dirty marks: a CoW merge
+    # leaves each LWW-compacted (a MoR table merged with CoW converges clean)
+    table.commit_files(new_files, touched, summary)
     _stage("commit", ts)
     return {"touched_buckets": len(touched), "files": len(new_files), "rows": total_rows}
 
@@ -1183,8 +966,6 @@ def delete_positions(table: LakeTable, victims: DataFrame) -> dict:
     ``clone_to``. Watermark-neutral (no epoch_id): an engine-originated
     commit, not delivery progress."""
     _refuse_partial(table, "delete_positions (physical row erasure)")
-    from ..lake.table import data_suffix
-
     spark = table.spark
     current = [
         (data_suffix(fe["path"]), int(fe["bucket"]))
@@ -1212,17 +993,11 @@ def delete_positions(table: LakeTable, victims: DataFrame) -> dict:
         ).parquet(absd)
     finally:
         tagged.unpersist()
-    entries: list[dict] = []
-    for root, _dirs, files in os.walk(absd):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            ap = os.path.join(root, fn)
-            entries.append({
-                "path": os.path.relpath(ap, table.path),
-                "bucket": int(os.path.basename(root).split("=")[1]),
-                "rows": pq.ParquetFile(ap).metadata.num_rows,
-            })
+    entries = [
+        {"path": p, "bucket": b,
+         "rows": pq.ParquetFile(os.path.join(table.path, p)).metadata.num_rows}
+        for p, b in table.written_files(absd)
+    ]
     table.commit_files(
         [], replaced_buckets=[],
         summary={"op": "posdelete", "rows": n_rows,
@@ -1332,7 +1107,6 @@ def zorder_buckets(
         new_files, present,
         {"op": "zorder", "rows": rows, "buckets": len(present),
          "cols": [cat_col, STATS_COL], "bits": int(bits)},
-        extra={"needs_read_compaction": False, "dirty_buckets": []},
     )
     return {"files": len(new_files), "rows": rows,
             "buckets_rewritten": len(present)}
@@ -1476,30 +1250,20 @@ def import_files(
 
     Returns {"files": n, "rows": n, "bucket": b}.
     """
-    import concurrent.futures
-
     if not (0 <= int(bucket) < table.n_buckets):
         raise ValueError(f"bucket {bucket} out of range")
     aps = [os.path.abspath(p) for p in paths]
     if not aps:
         raise ValueError("import_files: no files given")
-    for ap in aps:
-        if not os.path.isfile(ap):
-            raise FileNotFoundError(ap)
     allowed = {f["name"] for f in table.current_schema()} | {
         "_seq", "_op"
     }
     required = {table.key_col, STATS_COL, "_seq", "_op"}
-    bloom_cols = [
-        f["name"]
-        for f in table.current_schema()
-        if f["name"] in table.bloom_cols and f["type"] == "string"
-    ]
-
-    def meta(ap: str):
-        pf = pq.ParquetFile(ap)
-        md = pf.metadata
-        names = set(pf.schema_arrow.names)
+    for ap in aps:
+        if not os.path.isfile(ap):
+            raise FileNotFoundError(ap)
+    for ap in aps:
+        names = set(pq.read_schema(ap).names)
         if not required <= names:
             raise ValueError(
                 f"{ap}: missing required columns {sorted(required - names)}"
@@ -1510,42 +1274,12 @@ def import_files(
                 f"{ap}: columns not in the table schema {sorted(unknown)} "
                 "(schema-match rule: evolve the table first)"
             )
-        lo, hi = _file_ts_bounds(md, STATS_COL)
-        blooms: dict[str, dict] = {}
-        present = [c for c in bloom_cols if c in names]
-        if present:
-            cols = pf.read(columns=present)
-            for c in present:
-                blooms[c] = bloom_build(
-                    (v.as_py() for v in cols.column(c)), md.num_rows
-                )
-        return (ap, md.num_rows, lo, hi, _file_col_bounds(md), blooms,
-                _file_null_counts(md))
-
-    entries, rows = [], 0
-    with concurrent.futures.ThreadPoolExecutor(min(16, len(aps))) as ex:
-        for ap, n, lo, hi, cb, blooms, nulls in ex.map(meta, aps):
-            rows += n
-            e = {
-                "path": ap,  # absolute: external, never GC-swept
-                "bucket": int(bucket),
-                "schema_ver": table.current_schema_ver,
-                "rows": n,
-            }
-            if lo is not None:
-                e["ts_min_us"], e["ts_max_us"] = lo, hi
-            if cb:
-                e["col_bounds"] = cb
-            if blooms:
-                e["bloom"] = blooms
-            if nulls:
-                e["null_counts"] = nulls
-            entries.append(e)
-    dirty = sorted(table.dirty_buckets() | {int(bucket)})
+    # absolute paths: external files, never GC-swept
+    entries = table.manifest_entries((ap, int(bucket)) for ap in aps)
+    rows = sum(e["rows"] for e in entries)
     table.commit_files(
         entries,
         replaced_buckets=[],
         summary={"op": "import", "n_files": len(entries), "rows": rows},
-        extra={"needs_read_compaction": True, "dirty_buckets": dirty},
     )
     return {"files": len(entries), "rows": rows, "bucket": int(bucket)}

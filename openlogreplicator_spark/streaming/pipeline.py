@@ -35,7 +35,7 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..lake.table import LakeTable
+from ..lake.table import LakeTable, atomic_write
 from ..operators.decode import (
     EVENTS_DDL,
     apply_log_filters,
@@ -116,7 +116,6 @@ class CdcPipeline:
         n_buckets: int = 16,
         merge_mode: str = "auto",
         compact_every: int = 8,
-        recompute_text: bool = False,
         filter_config_path: str | None = None,
         max_html_bytes: int | None = None,
         dead_letter_path: str | None = None,
@@ -161,7 +160,6 @@ class CdcPipeline:
             "guarded": 0, "unguarded": 0, "disabled": 0,
         }
         self._last_inc_guard = "unguarded"
-        self.recompute_text = recompute_text
         self.filter_config_path = filter_config_path
         self.max_html_bytes = max_html_bytes
         self.dead_letter_path = dead_letter_path
@@ -391,9 +389,7 @@ class CdcPipeline:
         if max_ver is not None and max_ver > table.current_schema_ver:
             replay_ddl(batch_df, [table])
 
-        dml = project_dml(
-            dml_events(batch_df), table, recompute_text=self.recompute_text
-        )
+        dml = project_dml(dml_events(batch_df), table)
         if self.partial_updates:
             # every version row must reach the table: within-batch partials
             # for one key coalesce at READ time with full history (an
@@ -563,13 +559,9 @@ class CdcPipeline:
 
         p = self._incarnation_state_path()
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {k: state[k] for k in ("incarnation", "intervals", "epoch_id")},
-                f,
-            )
-        os.replace(tmp, p)
+        atomic_write(p, json.dumps(
+            {k: state[k] for k in ("incarnation", "intervals", "epoch_id")}
+        ))
 
     def _incarnation_guard(
         self, footer_stats: dict | None, epoch_id: int

@@ -417,3 +417,30 @@ def test_rebase_still_composes_over_rebaseable_chain(spark, table):
     )
     merge_append(stale, df, epoch_id=99)
     assert LakeTable.load(spark, table).last_epoch() == (99, True)
+
+
+def test_rebased_append_marks_only_its_own_buckets_dirty(spark, table):
+    """commit_files derives the dirty set from the head a commit lands on:
+    a merge_append that loses to a concurrent compact_table and rebases
+    leaves exactly its own buckets dirty, not the buckets the compaction
+    just cleaned."""
+    from pyspark.sql import functions as F
+
+    from openlogreplicator_spark.operators.merge import (
+        compact_table, merge_append,
+    )
+
+    stale = LakeTable.load(spark, table)
+    df = stale.read().limit(5).select(
+        "url", "warc_ts", F.lit(10_000_000).alias("_seq"),
+        F.lit("u").alias("_op"), "text", "lang",
+    )
+    df = spark.createDataFrame(df.collect(), df.schema)  # pin the 5 rows
+    own = {r[0] for r in df.select(stale.bucket_expr()).distinct().collect()}
+    assert stale.dirty_buckets() - own  # compaction has others to clean
+
+    compact_table(LakeTable.load(spark, table))
+    merge_append(stale, df, epoch_id=99)  # conflicts, then rebases
+    head = LakeTable.load(spark, table)
+    assert head.snap["summary"]["op"] == "merge_append"
+    assert head.dirty_buckets() == own

@@ -177,29 +177,43 @@ def test_expire_snapshots_gcs_unreferenced_manifests(spark, table):
     assert t2.read().collect()[0]["text"] == "v7"
 
 
-def test_legacy_inline_files_snapshot_upgrades_to_manifests(spark, table):
-    """A pre-manifest snapshot (inline "files", no "manifests") must load
-    as-is and, on its next commit, seed the manifest chain with a base
-    manifest so nothing is lost."""
-    import datetime as dt
+def _fake_entries(buckets):
+    # commit_files never opens the data files, so metadata-only entries do
+    return [{"path": f"data/fake/_bucket={b}/part.parquet", "bucket": b,
+             "schema_ver": 1, "rows": 1} for b in buckets]
+
+
+def test_commit_files_dirty_bucket_rule(spark, table, tmp_path):
+    """commit_files owns the dirty set: a pure append marks its buckets
+    dirty, replacing buckets clears them, a commit with no files changes
+    nothing, and on a partial_images table a rewrite leaves the written
+    buckets dirty. No snapshot carries a needs_read_compaction key."""
     import json as _json
 
-    ts = dt.datetime(2020, 1, 1)
-    _write_rows(spark, table, [(f"u{i}", ts, i, "c", "x") for i in range(6)])
-    # rewrite the current snapshot on disk in the LEGACY shape
-    sdir = os.path.join(table.path, "_snapshots")
-    vpath = os.path.join(sdir, f"v{table.snap['version']:08d}.json")
-    legacy = {k: v for k, v in table.snap.items() if k != "manifests"}
-    with open(vpath, "w") as f:
-        _json.dump(legacy, f)
-    t2 = LakeTable.load(spark, table.path)
-    assert "manifests" not in t2.snap and t2.read().count() == 6
-    # next commit upgrades: base manifest + delta, file list preserved
-    _write_rows(spark, t2, [("extra", ts, 99, "c", "y")])
-    t3 = LakeTable.load(spark, table.path)
-    assert len(t3.snap["manifests"]) >= 2  # base + delta
-    got = {r["url"] for r in t3.read().collect()}
-    assert "extra" in got and len(got) >= 2
+    table.commit_files(_fake_entries([0, 1]), [], {"op": "merge_append"})
+    assert table.dirty_buckets() == {0, 1}
+    table.commit_files(_fake_entries([1, 2]), [1, 2], {"op": "merge"})
+    assert table.dirty_buckets() == {0}
+    table.commit_files([], [], {"op": "merge_append"})
+    assert table.dirty_buckets() == {0}
+    assert LakeTable.load(spark, table.path).dirty_buckets() == {0}
+    table.commit_files(_fake_entries([0]), [0], {"op": "compact"},
+                       n_buckets=8)
+    assert table.dirty_buckets() == set() and table.n_buckets == 8
+
+    part = LakeTable.create(spark, str(tmp_path / "p"), FIELDS, key_col="url",
+                            n_buckets=4, flags={"partial_images": True})
+    part.commit_files(_fake_entries([0, 2]), [], {"op": "merge_append"})
+    part.commit_files(_fake_entries([2, 3]), [0, 2, 3],
+                      {"op": "compact_partial"})
+    assert part.dirty_buckets() == {2, 3}
+
+    for t in (table, part):
+        sdir = os.path.join(t.path, "_snapshots")
+        for fn in os.listdir(sdir):
+            if fn.startswith("v") and fn.endswith(".json"):
+                with open(os.path.join(sdir, fn)) as f:
+                    assert "needs_read_compaction" not in _json.load(f)
 
 
 def test_drop_column_metadata_only_and_no_resurrection(spark, table):

@@ -131,12 +131,12 @@ def test_merge_on_read_matches_golden(spark, events_dir, events_pdf, tmp_path):
     assert got["http_status"].astype("Int64").equals(golden["http_status"].astype("Int64"))
 
     t = LakeTable.load(spark, str(tmp_path / "t"))
-    assert t.snap["needs_read_compaction"]
+    assert t.dirty_buckets()
     files_before = len(t.snap["files"])
     stats = compact_table(t)
     assert stats["files"] <= files_before
     t2 = LakeTable.load(spark, str(tmp_path / "t"))
-    assert not t2.snap.get("needs_read_compaction")
+    assert not t2.dirty_buckets()
     # state identical after compaction (and reads no longer need LWW)
     got2 = state_pdf()
     import pandas as pd

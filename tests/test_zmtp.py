@@ -102,10 +102,15 @@ def test_socket_type_mismatch_rejected():
 
 def test_bad_signature_rejected():
     a, b = socket.socketpair()
-    threading.Thread(target=lambda: (a.sendall(b"\x00" * 64), a.recv(64)),
-                     daemon=True).start()
+    # joined before the sockets close: ZmtpPair sends its greeting first,
+    # so the peer's recv returns
+    peer = threading.Thread(
+        target=lambda: (a.sendall(b"\x00" * 64), a.recv(64)), daemon=True
+    )
+    peer.start()
     with pytest.raises(ZmtpError, match="signature"):
         ZmtpPair(b)
+    peer.join()
     a.close(), b.close()
 
 
@@ -118,7 +123,9 @@ def test_old_version_rejected():
         a.sendall(bytes(g))
         a.recv(4096)
 
-    threading.Thread(target=peer, daemon=True).start()
+    t = threading.Thread(target=peer, daemon=True)
+    t.start()
     with pytest.raises(ZmtpError, match="version"):
         ZmtpPair(b)
+    t.join()
     a.close(), b.close()
