@@ -124,21 +124,32 @@ def _live_versions(
 def _write_buckets(
     table: LakeTable,
     df: DataFrame,
-    n: int,
     sort_cols: tuple[str, ...] = (),
     max_records: int | None = None,
     profile: bool = False,
 ) -> tuple[list[dict], int]:
     """Write ``_bucket``-tagged rows as one parquet directory per bucket
-    under a fresh data dir, on a shuffle of ``min(n, 64)`` partitions; return
-    the manifest entries and row count. ``sort_cols`` orders each task by
-    ``(_bucket, *sort_cols, _seq)`` — the prefix satisfies the partitionBy
-    writer's required ordering, so the order survives into the files — and
-    ``max_records`` rolls files over at that many rows. ``profile`` records
-    the ``write`` and ``footer_walk`` stages (the apply path only)."""
+    under a fresh data dir; return the manifest entries and row count.
+
+    The write is sized by its rows, not by a fixed fan-out: the ``_bucket``
+    shuffle takes no partition count, so AQE coalesces it from the measured
+    shuffle bytes (one task for a small epoch, about one per core for a
+    large one, never more than ``spark.sql.shuffle.partitions``): a write
+    task costs ~28 ms of deserialize CPU before its first row (4-core host),
+    so a task per bucket would cost more than a small write's rows.
+    Coalescing merges whole shuffle partitions only, so each bucket lands in
+    one task and gets one file (or one per ``max_records`` chunk). With AQE
+    off (streaming-derived plans) the write runs
+    ``spark.sql.shuffle.partitions`` tasks.
+
+    ``sort_cols`` orders each task by ``(_bucket, *sort_cols, _seq)`` — the
+    prefix satisfies the partitionBy writer's required ordering, so the
+    order survives into the files — and ``max_records`` rolls files over at
+    that many rows. ``profile`` records the ``write`` and ``footer_walk``
+    stages (the apply path only)."""
     absdir, _rel = table.new_data_dir()
     ts = time.time()
-    out = df.repartition(max(1, min(n, 64)), "_bucket")
+    out = df.repartition("_bucket")
     if sort_cols:
         out = out.sortWithinPartitions("_bucket", *sort_cols, "_seq")
     writer = out.write
@@ -295,7 +306,7 @@ def compact_partial(table: LakeTable, watermark_us: int) -> dict:
     folded = _fold_partial(table, df.filter(in_prefix))
     suf = df.filter(~in_prefix).select(*folded.columns)
     out = folded.unionByName(suf).withColumn("_bucket", table.bucket_expr())
-    new_files, rows_after = _write_buckets(table, out, len(affected))
+    new_files, rows_after = _write_buckets(table, out)
     table.commit_files(
         new_files,
         replaced_buckets=sorted(affected),
@@ -577,7 +588,7 @@ def purge_tombstones(table: LakeTable, older_than) -> dict:
         .withColumn("_bucket", table.bucket_expr())
         .filter(~expired)
     )
-    new_files, rows = _write_buckets(table, kept, len(touched))
+    new_files, rows = _write_buckets(table, kept)
     table.commit_files(
         new_files, touched,
         {"op": "purge_tombstones", "buckets": len(touched)},
@@ -601,7 +612,7 @@ def merge_append(
     schema_ver it was written under, so evolution semantics are unchanged)."""
     t0 = time.time()
     b = batch.withColumn("_bucket", table.bucket_expr())
-    new_files, rows = _write_buckets(table, b, table.n_buckets, profile=True)
+    new_files, rows = _write_buckets(table, b, profile=True)
     ts = time.time()
     summary = {
         "op": "merge_append",
@@ -634,7 +645,7 @@ def compact_table(table: LakeTable) -> dict:
         return {"files": 0, "rows": 0, "buckets_rewritten": 0}
     full = table.read(dirty).withColumn("_bucket", table.bucket_expr())
     merged = _resolve(table, dirty, scan=full)
-    new_files, rows = _write_buckets(table, merged, len(dirty))
+    new_files, rows = _write_buckets(table, merged)
     table.commit_files(
         new_files, dirty, {"op": "compact", "rows": rows, "buckets": len(dirty)}
     )
@@ -661,7 +672,7 @@ def rewrite_buckets(table: LakeTable, buckets: Iterable[int]) -> dict:
     if not req:
         return {"files": 0, "rows": 0, "buckets_rewritten": 0}
     full = table.read(req).withColumn("_bucket", table.bucket_expr())
-    new_files, rows = _write_buckets(table, full, len(req))
+    new_files, rows = _write_buckets(table, full)
     table.commit_files(
         new_files, req,
         {"op": "rewrite", "rows": rows, "buckets": len(req)},
@@ -747,10 +758,11 @@ def cluster_buckets(
     Dirty buckets are LWW-folded in the same pass (free — the bucket is
     rewritten anyway; same rule as purge_tombstones) and their marks
     cleared; tombstones are preserved — maintenance commit, user state
-    untouched. Plan shape: ONE shuffle (repartition on _bucket), per-task
-    sort, and the partitionBy writer keeps the (bucket, warc_ts) task order
-    because the sort prefix satisfies its required ordering — the
-    maxRecordsPerFile rollover is what yields time-disjoint chunks."""
+    untouched. Plan shape: ONE AQE-sized shuffle on _bucket (whole buckets
+    per task, see ``_write_buckets``), per-task sort, and the partitionBy
+    writer keeps the (bucket, warc_ts) task order because the sort prefix
+    satisfies its required ordering — the maxRecordsPerFile rollover is
+    what yields time-disjoint chunks."""
     _refuse_partial(table, "cluster_buckets")
     present = sorted({f["bucket"] for f in table.snap["files"]})
     if not present:
@@ -763,7 +775,7 @@ def cluster_buckets(
     # low-cardinality column, e.g. ("lang", "warc_ts"), gives files narrow
     # col_bounds so read(eq={"lang": ...}) prunes instead.
     new_files, rows = _write_buckets(
-        table, full, len(present), sort_cols=sort_cols,
+        table, full, sort_cols=sort_cols,
         max_records=target_rows_per_file,
     )
     table.commit_files(
@@ -798,7 +810,7 @@ def rebucket(table: LakeTable, new_n_buckets: int) -> dict:
         F.xxhash64(F.col(table.key_col)), F.lit(new_n_buckets)
     ).cast("int")
     out = _resolve(table).withColumn("_bucket", new_bucket)
-    new_files, rows = _write_buckets(table, out, new_n_buckets)
+    new_files, rows = _write_buckets(table, out)
     table.commit_files(
         new_files,
         old_buckets,
@@ -862,9 +874,7 @@ def merge_into(
             table, touched, scan=current.unionByName(b), extra_rows=batch_rows
         )
 
-    new_files, total_rows = _write_buckets(
-        table, merged, table.n_buckets, profile=True
-    )
+    new_files, total_rows = _write_buckets(table, merged, profile=True)
     ts = time.time()
     if touched is not None:
         b.unpersist()
@@ -1100,7 +1110,7 @@ def zorder_buckets(
         "_z", z.cast("int")
     )
     new_files, rows = _write_buckets(
-        table, full, len(present), sort_cols=("_z",),
+        table, full, sort_cols=("_z",),
         max_records=target_rows_per_file,
     )
     table.commit_files(

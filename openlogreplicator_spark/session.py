@@ -4,6 +4,8 @@ Scale stance: these configs are what we'd ship in spark-submit --conf on a real
 multi-executor cluster; locally they run on local[N]. AQE handles runtime skew and
 partition coalescing; shuffle partitions scale with cores (the bench protocol in
 BASELINE.md holds `spark.sql.shuffle.partitions = 4×cores` across cluster sizes).
+AQE coalescing also sizes every table write (`merge._write_buckets`). File
+listing stays on the driver: table reads pass the manifest's file paths.
 """
 
 from __future__ import annotations
@@ -53,6 +55,13 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Above 32 paths (or sub-directories) Spark lists in a distributed
+        # job with one task per path. LakeTable.read passes the manifest's
+        # file paths, so that job would only stat files already known: a
+        # 48-file compaction read paid a 48-task job. Only multi-path reads
+        # and directories with many sub-directories are affected;
+        # single-directory reads already list serially.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")

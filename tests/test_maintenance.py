@@ -693,3 +693,121 @@ def test_import_files_refuses_schema_mismatch(spark, tmp_path):
     pq.write_table(pa.table({"url": ["a"], "mystery": [1]}), bad)
     with _pytest.raises(ValueError, match="missing required"):
         import_files(t, [bad])
+
+
+def _write_stage_tasks(sc, group: str) -> int:
+    """Tasks of the last job's result stage in ``group``: the file writer's
+    stage when the group ends with a write."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    last = max(st.getJobIdsForGroup(group))
+    return st.getStageInfo(max(st.getJobInfo(last).stageIds)).numTasks
+
+
+def _files_per_bucket(files) -> dict[int, int]:
+    from collections import Counter
+
+    return dict(Counter(f["bucket"] for f in files))
+
+
+def _pandas_lww_state(t) -> list[tuple]:
+    """Independent LWW over every stored version: last by (warc_ts, _seq)
+    per url, tombstones dropped."""
+    raw = t.read().toPandas().sort_values(["warc_ts", "_seq"], kind="stable")
+    win = raw.groupby("url", as_index=False).tail(1)
+    win = win[win["_op"] != "d"]
+    return sorted(zip(win["url"], win["_seq"], win["text"]))
+
+
+def _state(t) -> list[tuple]:
+    from openlogreplicator_spark.operators.merge import read_state
+
+    return sorted(map(tuple, read_state(t).select("url", "_seq", "text").collect()))
+
+
+def test_bucket_write_is_sized_by_rows_with_one_file_per_bucket(
+    spark, events_dir, tmp_path
+):
+    """The bucket write takes its task count from AQE's measured shuffle
+    bytes, not from the bucket count: a small append into 64 buckets (more
+    than the session's 8 shuffle partitions) runs fewer write tasks than
+    buckets it touches. Coalescing merges whole buckets, so the layout is
+    unchanged: one new file per touched bucket, one file (or one
+    ``target_rows_per_file`` chunk run) per bucket after maintenance."""
+    import math
+
+    from openlogreplicator_spark.operators.merge import (
+        cluster_buckets,
+        compact_table,
+        merge_append,
+        read_state,
+    )
+
+    sc = spark.sparkContext
+    p = CdcPipeline(spark, events_dir, str(tmp_path / "t"), str(tmp_path / "c"),
+                    merge_mode="mor", n_buckets=64)
+    p.run_batch_replay()
+    t = LakeTable.load(spark, p.table_path)
+    assert t.n_buckets == 64
+
+    # a later version of 120 keys, a few of them deletes, as a local batch
+    # so the group's jobs are the write's alone
+    live = read_state(t)
+    base = live.orderBy("url").limit(120).toPandas()
+    base["_seq"] += 10**9
+    base["text"] = base["text"] + " v2"
+    base.loc[base.index % 10 == 0, "_op"] = "d"
+    batch = spark.createDataFrame(base, schema=live.schema)
+    touched = {r[0] for r in batch.select(t.bucket_expr()).distinct().collect()}
+    assert len(touched) > 8
+
+    before = {f["path"] for f in t.snap["files"]}
+    sc.setJobGroup("bucket-write-sizing", "small merge_append")
+    try:
+        merge_append(t, batch, epoch_id=None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _write_stage_tasks(sc, "bucket-write-sizing") < len(touched)
+
+    t = LakeTable.load(spark, p.table_path)
+    new = [f for f in t.snap["files"] if f["path"] not in before]
+    assert _files_per_bucket(new) == {b: 1 for b in touched}
+    want = _pandas_lww_state(t)
+    assert _state(t) == want
+
+    compact_table(t)
+    t = LakeTable.load(spark, p.table_path)
+    assert set(_files_per_bucket(t.snap["files"]).values()) == {1}
+    assert _state(t) == want
+    rows = {f["bucket"]: f["rows"] for f in t.snap["files"]}
+
+    cluster_buckets(t, target_rows_per_file=2)
+    t = LakeTable.load(spark, p.table_path)
+    assert _files_per_bucket(t.snap["files"]) == {
+        b: math.ceil(n / 2) for b, n in rows.items()
+    }
+    assert _state(t) == want
+
+
+def test_bucket_write_without_aqe_keeps_one_file_per_bucket(
+    spark, events_dir, events_pdf, tmp_path
+):
+    """With AQE off (as on streaming-derived plans) the bucket write runs
+    ``spark.sql.shuffle.partitions`` tasks: a 64-bucket copy-on-write replay
+    still lands one file per bucket and the golden state."""
+    from openlogreplicator_spark.replayer import replay
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        p = CdcPipeline(spark, events_dir, str(tmp_path / "t"),
+                        str(tmp_path / "c"), merge_mode="cow", n_buckets=64)
+        p.run_batch_replay()
+        t = LakeTable.load(spark, p.table_path)
+        touched = {r[0] for r in t.read().select(t.bucket_expr()).distinct().collect()}
+        assert _files_per_bucket(t.snap["files"]) == {b: 1 for b in touched}
+        got = p.target_state().toPandas().sort_values("url").reset_index(drop=True)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    golden = replay(events_pdf)
+    assert list(got["url"]) == list(golden["url"])
+    assert all(a == b for a, b in zip(got["text"], golden["text"]))
