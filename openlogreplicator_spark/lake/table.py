@@ -1046,7 +1046,11 @@ class LakeTable:
         parts: list[DataFrame] = []
         for ver, paths in sorted(by_ver.items()):
             old = {f["id"]: f for f in self.schema_at(ver)}
-            df = self.spark.read.parquet(*paths)
+            # the manifest knows each version's schema: passing it spares
+            # the reader its footer-inference job
+            df = self.spark.read.schema(
+                ", ".join(f"`{o['name']}` {o['type']}" for o in old.values())
+            ).parquet(*paths)
             cols = []
             for f in cur:
                 o = old.get(f["id"])
@@ -1070,9 +1074,11 @@ class LakeTable:
                 p if os.path.isabs(p) else os.path.join(self.path, p)
                 for p in (d["path"] for d in dels)
             ]
-            dd = self.spark.read.parquet(*dpaths).select(
+            dd = self.spark.read.schema("file string, pos long").parquet(
+                *dpaths
+            ).select(
                 F.col("file").alias("__dfile"),
-                F.col("pos").cast("long").alias("__dpos"),
+                F.col("pos").alias("__dpos"),
             )
             out = out.join(
                 F.broadcast(dd), ["__dfile", "__dpos"], "left_anti"

@@ -3361,12 +3361,13 @@ def engine_commit_log(spark, sf_dir):
     return spark.createDataFrame(log, "epoch_id int, rows_added long")
 
 
-# Lineage-truthfulness gate (§2 A5): the per-partition metrics side table,
-# rolled up per epoch, must reproduce counts recomputed from the raw log —
-# events_in (all rows), events_applied (LWW winners of committed DML),
-# events_deduped (their difference), ddl rows, rolled-back rows, and the
-# epoch's event-time bounds. Nondeterministic channels (partition_id,
-# wall_ms, committed_at) are deliberately excluded from the roll-up.
+# Lineage-truthfulness gate (§2 A5): the lineage side table (one row per
+# epoch, counted by DataFrame.observe on the merge's own jobs), rolled up
+# per epoch, must reproduce counts recomputed from the raw log — events_in
+# (all rows), events_applied (LWW winners of committed DML), events_deduped
+# (their difference), ddl rows, rolled-back rows, and the epoch's event-time
+# bounds. Nondeterministic channels (partition_id, wall_ms, committed_at)
+# are deliberately excluded from the roll-up.
 _METRICS_LOG_SQL = f"""
     SELECT CAST(regexp_extract(filename, 'events-(\\d+)\\.parquet', 1)
                 AS INTEGER) AS epoch_id,
@@ -3392,13 +3393,14 @@ _METRICS_LOG_SQL = f"""
 
 @register("engine_metrics_log", _METRICS_LOG_SQL)
 def engine_metrics_log(spark, sf_dir):
-    """Per-partition lineage metrics (A5; reference analogue: the
-    replicator's perf counters and checkpoint headers, Writer.cpp metrics
-    dump) rolled up per epoch and value-checked against a DuckDB recompute
-    from the raw change log — the side table must TELL THE TRUTH about
-    what each epoch saw, applied, deduped, and skipped. Per-partition rows
-    stay per-partition on disk (the distributed write shape); only the
-    deterministic epoch roll-up is compared."""
+    """Lineage metrics (A5; reference analogue: the replicator's perf
+    counters and checkpoint headers, Writer.cpp metrics dump) rolled up per
+    epoch and value-checked against a DuckDB recompute from the raw change
+    log — the side table must TELL THE TRUTH about what each epoch saw,
+    applied, deduped, and skipped. The engine writes one row per epoch
+    (partition_id 0), counted while the merge runs, like the reference's
+    in-decode counters; the roll-up keeps the gate independent of that
+    layout, and only its deterministic channels are compared."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     _table_path, _marks, metrics = _shared_mor_replay(spark)
     m = spark.read.parquet(metrics)

@@ -11,6 +11,10 @@ one Structured Streaming query:
 and per epoch (apply_epoch):
 
     exactly-once gate (T2, reference isNewData Metadata.cpp:592-603)
+    → one driver walk of the epoch's parquet footers: DDL pre-gate,
+      incarnation guard, dead-letter gate (no Spark job)
+    → dead-letter side table (M6; a job only when the footers cannot rule
+      out a bad row)
     → split ddl / dml (P4), drop rolled-back (A2, Transaction.cpp:71-187)
     → replay DDL rows in (warc_ts, seq) order     # §2.9 ordered evolution
       (LakeTable.evolve — metadata only)
@@ -18,7 +22,11 @@ and per epoch (apply_epoch):
       the versioned column name, so one merge per epoch, not one per version)
     → LWW compaction (A3; plan picked from the footer row count)
     → merge_into target (J5, idempotent)
-    → lineage/metrics side table append (A5, Parser.cpp:1482-1512 counters)
+    → lineage side table row (A5, Parser.cpp:1482-1512 counters): counted
+      by a DataFrame.observe on the merge's own jobs, written from the driver
+
+A steady-state tail epoch of footer-clean files is therefore one SQL execution,
+the merge write, with both side tables on.
 
 Restart/resume (§3.3): the checkpointLocation replays the last uncommitted
 epoch; the epoch gate + idempotent merge make the replay bit-exact — the
@@ -29,13 +37,22 @@ already-confirmed messages.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
-from ..lake.table import LakeTable, atomic_write
+from ..lake.table import LakeTable, _file_null_counts, atomic_write
 from ..operators.decode import (
     EVENTS_DDL,
     apply_log_filters,
@@ -65,6 +82,76 @@ TARGET_BASE_FIELDS = [
     ("text", "string"),
     ("lang", "string"),
 ]
+
+# Columns whose NULL makes a DML row malformed (the dead-letter check in
+# apply_epoch); their footer null counts let a clean epoch skip that job.
+MALFORMED_COLS = ("url", "warc_ts", "op")
+
+# Lineage side-table row (FIXTURES.md §5); timestamps are epoch micros.
+LINEAGE_SCHEMA = StructType([
+    StructField("partition_id", IntegerType()),
+    StructField("events_in", LongType()),
+    StructField("min_warc_ts", TimestampType()),
+    StructField("max_warc_ts", TimestampType()),
+    StructField("ddl_applied", IntegerType()),
+    StructField("rolled_back_excluded", LongType()),
+    StructField("events_applied", LongType()),
+    StructField("events_deduped", LongType()),
+    StructField("wall_ms", LongType()),
+    StructField("inc_guard", StringType()),
+    StructField("committed_at", TimestampType()),
+])
+
+
+def _replace_with_parquet(out_dir: str, schema: StructType, rows: list[tuple]) -> None:
+    """Replace ``out_dir`` with one parquet file holding ``rows``, written on
+    the driver with pyarrow (no Spark job). The file carries Spark's row
+    metadata, so Spark reads it back as exactly ``schema``, as if Spark had
+    written it. The file is published by rename, so no reader sees it torn."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema).with_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": schema.json()}
+    )
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=arrow
+    )
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+    tmp = os.path.join(out_dir, ".part-00000.parquet.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(out_dir, "part-00000.parquet"))
+
+
+def _lineage_exprs() -> list:
+    """The epoch-level lineage counts, as aggregates over the epoch's rows."""
+    return [
+        F.count(F.lit(1)).alias("events_in"),
+        F.unix_micros(F.min("warc_ts")).alias("min_ts_us"),
+        F.unix_micros(F.max("warc_ts")).alias("max_ts_us"),
+        F.count_if(F.col("op") == "ddl").alias("ddl_rows"),
+        F.count_if(F.col("rolled_back")).alias("rolled_back_rows"),
+    ]
+
+
+def _observed_counts(lineage: Observation, source: DataFrame) -> dict:
+    """The lineage counts ``lineage`` observed on the jobs that ran over
+    ``source`` since it was attached. Every merge path runs at least one
+    action over the observed frame (the write, CoW bucket discovery, the
+    LWW estimate), but a plan may never execute its observed branch: AQE
+    drops the scan of a join side it proved empty (a DDL-only epoch whose
+    version is already applied), and Spark then reports an empty row or
+    none at all. Only then does one aggregate job over ``source`` count
+    them instead."""
+    # a query listener fills the observation: once the bus is drained, a
+    # missing row will never arrive (``Observation.get`` would block)
+    source.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    got = lineage._jo.getRowOrEmpty()
+    if got.isDefined() and got.get().length() > 0:
+        return lineage.get
+    return source.agg(*_lineage_exprs()).collect()[0].asDict()
 
 
 def replay_ddl(batch_df: DataFrame, tables: Iterable[LakeTable]) -> None:
@@ -362,30 +449,31 @@ class CdcPipeline:
         bad = checks[0][0]
         for cond, _ in checks[1:]:
             bad = bad | cond
-        if self.dead_letter_path:
-            # per-epoch overwrite (epoch_id carried by the partition dir):
-            # checkpoint replay of an epoch rewrites the same directory, so
-            # side output stays idempotent alongside the snapshot gate.
-            # first matching reason wins (malformed > oversized > constraints
-            # in declaration order).
-            reason = F.coalesce(*[F.when(c, F.lit(r)) for c, r in checks])
-            (
-                batch_df.filter(bad)
-                .withColumn("_dl_reason", reason)
-                .write.mode("overwrite")
-                .parquet(os.path.join(self.dead_letter_path, f"epoch_id={int(epoch_id)}"))
-            )
-        batch_df = batch_df.filter(~bad)
-
         # Evolution pre-gate (_schema_gate): the 8-column ddl collect only
-        # runs on epochs whose max(schema_ver) can actually evolve the schema
+        # runs on epochs whose max(schema_ver) can actually evolve the
+        # schema. Its footer walk also feeds the incarnation guard and the
+        # dead-letter gate, so it runs before either.
         ts = time.time()
-        footer_stats, max_ver = self._schema_gate(batch_df, int(epoch_id))
+        footer_stats, max_ver = self._schema_gate(
+            batch_df.filter(~bad), int(epoch_id)
+        )
         # S5/resetlogs incarnation guard: a rewound source log (same seq
         # range again) must refuse-or-branch, never silently LWW-merge two
         # histories — see _incarnation_guard
         inc_pending = self._incarnation_guard(footer_stats, int(epoch_id))
         ts = _stage("ddl_gate", ts)
+        if self.dead_letter_path:
+            self._write_dead_letter(
+                batch_df, checks, bad, footer_stats, int(epoch_id)
+            )
+        # the lineage counts ride on the epoch's own jobs (the reference
+        # counts while it decodes, Parser.cpp:1482-1512): observed below the
+        # dead-letter filter, so bad, DDL and rolled-back rows count
+        unobserved, lineage = batch_df, None
+        if self.metrics_path:
+            lineage = Observation()
+            batch_df = batch_df.observe(lineage, *_lineage_exprs())
+        batch_df = batch_df.filter(~bad)
         if max_ver is not None and max_ver > table.current_schema_ver:
             replay_ddl(batch_df, [table])
 
@@ -422,6 +510,7 @@ class CdcPipeline:
             stats = [merge_append(table, compacted, **merge_kwargs)]
         else:
             stats = [merge_into(table, compacted, **merge_kwargs)]
+        counts = None if lineage is None else _observed_counts(lineage, unobserved)
         if (
             mode == "mor"
             and self.compact_every
@@ -439,8 +528,8 @@ class CdcPipeline:
             # commit (a crash in between re-delivers the epoch; a stale-LOW
             # hwm is permissive, never a false refusal)
             self._write_incarnation_state(inc_pending)
-        if self.metrics_path:
-            self._write_metrics(batch_df, int(epoch_id), time.time() - t0, stats)
+        if counts is not None:
+            self._write_metrics(counts, int(epoch_id), time.time() - t0, stats)
 
     def _schema_gate(
         self, batch_df: DataFrame, epoch_id: int | None = None
@@ -473,14 +562,19 @@ class CdcPipeline:
         self, batch_df: DataFrame, epoch_id: int | None = None
     ) -> dict | None:
         """Zero-job epoch header read: row count, max(schema_ver),
-        [min,max](seq) and the source incarnation id, all from parquet FOOTERS of the epoch's
-        file set (inputFiles() or the checkpoint offset log). The
-        incarnation rides as file-level key-value metadata
-        (``olr:incarnation`` — the analogue of the resetlogs id in every
-        redo-log HEADER, reference Reader::getResetlogs /
-        Parser.cpp:1239-1244); absent means incarnation 0. Returns None
-        when no file set is known or any footer lacks the needed stats
-        (callers fall back to exact aggregates / skip the guard)."""
+        [min,max](seq), the source incarnation id and ``nulls``, all from
+        parquet FOOTERS of the epoch's file set (inputFiles() or the
+        checkpoint offset log). The incarnation rides as file-level
+        key-value metadata (``olr:incarnation`` — the analogue of the
+        resetlogs id in every redo-log HEADER, reference
+        Reader::getResetlogs / Parser.cpp:1239-1244); absent means
+        incarnation 0. ``nulls`` sums the NULL counts of the malformed
+        check's columns (``MALFORMED_COLS``); it is None when any file lacks
+        one of them or its null count, and a footer sum is an upper bound
+        for a row-dropping plan over the files, so 0 proves no row is
+        malformed. Returns None when no file set is known or any footer
+        lacks the schema_ver/seq stats (callers fall back to exact
+        aggregates / skip the guard)."""
         files = batch_df.inputFiles()
         if not files and epoch_id is not None and self.source_format != "jsonl":
             # streaming-derived plan: the epoch's file set is still pinned in
@@ -519,6 +613,11 @@ class CdcPipeline:
                 if lo_key:
                     out[lo_key] = lo
                 out[hi_key] = hi
+            nulls = _file_null_counts(md)
+            out["nulls"] = (
+                sum(nulls[c] for c in MALFORMED_COLS)
+                if all(c in nulls for c in MALFORMED_COLS) else None
+            )
             return out
 
         try:
@@ -529,10 +628,14 @@ class CdcPipeline:
         except (OSError, ValueError, KeyError):
             return None  # unreadable footer / no stats
         agg: dict = {"incarnation": 0, "rows": 0, "schema_ver": None,
-                     "seq_min": None, "seq_max": None}
+                     "seq_min": None, "seq_max": None, "nulls": 0}
         for fs in per_file:
             agg["incarnation"] = max(agg["incarnation"], fs["incarnation"])
             agg["rows"] += fs["rows"]
+            if agg["nulls"] is not None:
+                agg["nulls"] = (
+                    None if fs["nulls"] is None else agg["nulls"] + fs["nulls"]
+                )
             for k, pick in (("schema_ver", max), ("seq_max", max),
                             ("seq_min", min)):
                 if fs.get(k) is not None:
@@ -654,40 +757,58 @@ class CdcPipeline:
             "branched": inc > cur,
         }
 
-    def _write_metrics(
-        self, batch_df: DataFrame, epoch_id: int, secs: float, stats: list[dict]
+    def _write_dead_letter(
+        self,
+        batch_df: DataFrame,
+        checks: list[tuple],
+        bad,
+        footer_stats: dict | None,
+        epoch_id: int,
     ) -> None:
-        """A5 lineage side table (schema per FIXTURES.md §5): per-input-
-        partition event counts + epoch-level apply/dedup/wall numbers."""
+        """M6 dead-letter side table: the epoch's bad rows with the first
+        matching reason (malformed > oversized > constraints in declaration
+        order), one overwrite directory per epoch, so a checkpoint replay of
+        an epoch rewrites the same directory and the side output stays
+        idempotent alongside the snapshot gate.
+
+        When ``malformed`` is the only check and the footers count no NULL
+        ``url``/``warc_ts``/``op`` (``_epoch_footer_stats``), no row can be
+        bad: the directory gets one zero-row file of the same schema,
+        written on the driver, and the filter job over the epoch is
+        skipped. DDL rows carry a NULL url, so epochs holding DDL still run
+        the job, as do epochs without footers (jsonl, DataFrame-fed)."""
+        reason = F.coalesce(*[F.when(c, F.lit(r)) for c, r in checks])
+        dead = batch_df.filter(bad).withColumn("_dl_reason", reason)
+        out = os.path.join(self.dead_letter_path, f"epoch_id={epoch_id}")
+        clean = footer_stats is not None and footer_stats["nulls"] == 0
+        if len(checks) == 1 and clean:
+            _replace_with_parquet(out, dead.schema, [])
+        else:
+            dead.write.mode("overwrite").parquet(out)
+
+    def _write_metrics(
+        self, counts: dict, epoch_id: int, secs: float, stats: list[dict]
+    ) -> None:
+        """A5 lineage side table (schema per FIXTURES.md §5): one row per
+        epoch, built from the counts ``apply_epoch`` observed on the epoch's
+        own jobs plus the merge stats, and written from the driver — no Spark
+        job. ``partition_id`` is always 0 (the column predates the one-row
+        layout; per-partition rows would cost a second pass over the input).
+        The per-epoch directory (epoch_id = partition column) is replaced, so
+        replaying an epoch after a crash rewrites, never duplicates, its
+        row."""
         applied = sum(s.get("rows", 0) for s in stats)
-        per_part = (
-            batch_df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count("*").alias("events_in"),
-                F.min("warc_ts").alias("min_warc_ts"),
-                F.max("warc_ts").alias("max_warc_ts"),
-                F.sum(F.when(F.col("op") == "ddl", 1).otherwise(0))
-                .cast("int").alias("ddl_applied"),
-                F.sum(F.when(F.col("rolled_back"), 1).otherwise(0))
-                .alias("rolled_back_excluded"),
-            )
-            .withColumn("events_applied", F.lit(applied).cast("long"))
-            .withColumn(
-                "events_deduped",
-                F.greatest(
-                    F.lit(0).cast("long"),
-                    F.sum("events_in").over(Window.partitionBy(F.lit(1)))
-                    - F.lit(applied),
-                ),
-            )
-            .withColumn("wall_ms", F.lit(int(secs * 1000)).cast("long"))
-            .withColumn("inc_guard", F.lit(self._last_inc_guard))
-            .withColumn("committed_at", F.current_timestamp())
+        events_in = counts["events_in"]
+        now_us = int(time.time() * 1_000_000)
+        row = (
+            0, events_in, counts["min_ts_us"], counts["max_ts_us"],
+            counts["ddl_rows"], counts["rolled_back_rows"], applied,
+            max(0, events_in - applied), int(secs * 1000),
+            self._last_inc_guard, now_us,
         )
-        # per-epoch overwrite dir (epoch_id = partition column): replaying an
-        # epoch after a crash rewrites, never duplicates, its metrics rows.
-        per_part.write.mode("overwrite").parquet(
-            os.path.join(self.metrics_path, f"epoch_id={epoch_id}")
+        _replace_with_parquet(
+            os.path.join(self.metrics_path, f"epoch_id={epoch_id}"),
+            LINEAGE_SCHEMA, [row],
         )
 
     # -------------------------------------------------------------- runners

@@ -365,3 +365,58 @@ def test_symlink_manifest_roundtrip_and_refusals(spark, table, tmp_path):
     )
     with pytest.raises(ValueError, match="partial"):
         tp.write_symlink_manifest()
+
+
+def test_read_builds_without_a_spark_job(spark, table):
+    """``read()`` hands each schema version's files their schema from the
+    manifest, so building the read runs no footer-inference job, also with
+    files at several versions (add, widen, rename, drop) and a position
+    delete file; the rows keep their remapped values."""
+    import datetime as dt
+
+    from openlogreplicator_spark.operators.merge import delete_positions
+
+    ts = dt.datetime(2020, 1, 1)
+
+    def write(rows, ddl, ver):
+        df = spark.createDataFrame(rows, ddl).withColumn(
+            "_bucket", table.bucket_expr())
+        absdir, _rel = table.new_data_dir()
+        df.write.partitionBy("_bucket").parquet(absdir)
+        entries = [dict(e, schema_ver=ver)
+                   for e in table.manifest_entries(table.written_files(absdir))]
+        table.commit_files(entries, set(), {"op": "append"})
+
+    base = "url string, warc_ts timestamp, _seq long, _op string, text string"
+    write([("a", ts, 1, "c", "v1")], base, 1)
+    table.evolve("add_column", "fetch_status", new_type="int", to_ver=2)
+    write([("b", ts, 2, "c", "v2", 200)], base + ", fetch_status int", 2)
+    table.evolve("widen_type", "fetch_status", new_type="long", to_ver=3)
+    write([("c", ts, 3, "c", "v3", 301)], base + ", fetch_status long", 3)
+    table.evolve("rename_column", "fetch_status", new_name="http_status",
+                 to_ver=4)
+    table.evolve("drop_column", "text", to_ver=5)
+    write([("d", ts, 4, "c", 404)],
+          "url string, warc_ts timestamp, _seq long, _op string, "
+          "http_status long", 5)
+    t = LakeTable.load(spark, table.path)
+    victim = t.read(with_file=True, with_pos=True).filter(F.col("url") == "d")
+    delete_positions(t, victim)
+    t = LakeTable.load(spark, table.path)
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    sc.setJobGroup("lake-read-build", "build LakeTable.read")
+    try:
+        df = t.read()
+        with_file = t.read(with_file=True, with_pos=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("lake-read-build")) == []
+    assert dict(df.dtypes) == {"url": "string", "warc_ts": "timestamp",
+                               "_seq": "bigint", "_op": "string",
+                               "http_status": "bigint"}
+    assert sorted((r["url"], r["http_status"]) for r in df.collect()) == [
+        ("a", None), ("b", 200), ("c", 301)]
+    assert with_file.count() == 3

@@ -204,3 +204,124 @@ def test_streaming_wap_branch_publish_matches_golden(
     assert stage.target_state().count() == len(_golden(events_pdf))
     LakeTable.load(spark, pipe_dirs["table"]).publish_branch("wap")
     _assert_matches_golden(_spark_state(boot), _golden(events_pdf))
+
+
+def _last_job_id(spark) -> int:
+    """The newest Spark job id of the application (ids are sequential), once
+    every posted listener event has been processed."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    it = sc.statusStore().jobsList(None).iterator()
+    last = -1
+    while it.hasNext():
+        last = max(last, it.next().jobId())
+    return last
+
+
+def _write_subset(src: str, dst: str, keep, mtime: int) -> None:
+    """Copy the rows of parquet file ``src`` that ``keep(table)`` selects
+    into ``dst`` with pyarrow, stamped with ``mtime`` (the file stream
+    delivers files in modification-time order)."""
+    import pyarrow.parquet as pq
+
+    tb = pq.read_table(src)
+    pq.write_table(tb.filter(keep(tb)), dst)
+    os.utime(dst, (mtime, mtime))
+
+
+def test_tail_epoch_is_one_job_and_lineage_tells_the_truth(
+    spark, events_dir, tmp_path
+):
+    """A steady-state tail epoch with the lineage and dead-letter side
+    outputs on issues exactly the Spark jobs of the same epoch with both off:
+    the lineage counts are observed on the apply's own jobs and written from
+    the driver, and a footer-clean epoch's dead-letter directory is written
+    without a job. The lineage rows, rolled up per epoch, equal a pandas
+    recompute from each epoch's source file — also on an epoch holding DDL
+    rows and on a DDL-only epoch — and a re-delivered epoch leaves one
+    row."""
+    import pyarrow.compute as pc
+
+    from openlogreplicator_spark.operators.decode import EVENTS_DDL
+
+    files = sorted(glob.glob(os.path.join(events_dir, "*.parquet")))
+    ddl_files = [f for f in files
+                 if (pd.read_parquet(f, columns=["op"])["op"] == "ddl").any()]
+    assert len(ddl_files) >= 2 and files[0] not in ddl_files
+
+    def clean(tb):  # committed-shape DML rows only: nothing NULL, no DDL
+        ok = pc.not_equal(tb["op"], "ddl")
+        for c in ("url", "warc_ts", "op"):
+            ok = pc.and_(ok, pc.is_valid(tb[c]))
+        return pc.fill_null(ok, False)
+
+    # 1) jobs per epoch: side outputs on == side outputs off
+    clean_dir = str(tmp_path / "clean")
+    os.makedirs(clean_dir)
+    for i, f in enumerate(files[:2]):
+        _write_subset(f, os.path.join(clean_dir, f"e{i}.parquet"), clean,
+                      1_600_000_000 + i)
+    jobs = {}
+    for side in (False, True):
+        d = tmp_path / f"side{int(side)}"
+        p = CdcPipeline(
+            spark, clean_dir, str(d / "t"), str(d / "c"),
+            metrics_path=str(d / "m") if side else None,
+            dead_letter_path=str(d / "dl") if side else None,
+        )
+        first = _last_job_id(spark)
+        p.run_available_now(max_files_per_trigger=1)
+        jobs[side] = _last_job_id(spark) - first
+    assert jobs[True] == jobs[False], jobs
+    dead = spark.read.parquet(str(tmp_path / "side1" / "dl"))
+    assert dead.count() == 0 and "_dl_reason" in dead.columns
+    assert spark.read.parquet(str(tmp_path / "side1" / "m")).count() == 2
+
+    # 2) lineage roll-up == pandas recompute: a clean epoch, an epoch with
+    #    DDL rows, a DDL-only epoch (its version evolves the table)
+    mixed = str(tmp_path / "mixed")
+    os.makedirs(mixed)
+    _write_subset(files[0], os.path.join(mixed, "a.parquet"), clean,
+                  1_600_000_000)
+    _write_subset(ddl_files[0], os.path.join(mixed, "b.parquet"),
+                  lambda tb: pc.is_valid(tb["seq"]), 1_600_000_001)
+    _write_subset(ddl_files[1], os.path.join(mixed, "c.parquet"),
+                  lambda tb: pc.fill_null(pc.equal(tb["op"], "ddl"), False),
+                  1_600_000_002)
+    metrics = str(tmp_path / "mixed_m")
+    p = CdcPipeline(spark, mixed, str(tmp_path / "mt"), str(tmp_path / "mc"),
+                    metrics_path=metrics,
+                    dead_letter_path=str(tmp_path / "mixed_dl"))
+    p.run_available_now(max_files_per_trigger=1)
+    m = spark.read.parquet(metrics).toPandas()
+    assert len(m) == 3 and (m["partition_id"] == 0).all()
+    ddl_seen = []
+    for _, r in m.iterrows():
+        (src,) = p._epoch_source_files(int(r["epoch_id"]))
+        ev = pd.read_parquet(src[7:] if src.startswith("file:") else src)
+        valid = ev[ev["op"].notna() & (ev["op"] != "ddl") & ~ev["rolled_back"]
+                   & ev["url"].notna() & ev["warc_ts"].notna()]
+        applied = valid["url"].nunique()
+        ts = pd.to_datetime(ev["warc_ts"], utc=True)
+        assert r["events_in"] == len(ev)
+        assert r["events_applied"] == applied
+        assert r["events_deduped"] == max(0, len(ev) - applied)
+        assert r["ddl_applied"] == (ev["op"] == "ddl").sum()
+        assert r["rolled_back_excluded"] == ev["rolled_back"].sum()
+        assert pd.Timestamp(r["min_warc_ts"], tz="UTC") == ts.min()
+        assert pd.Timestamp(r["max_warc_ts"], tz="UTC") == ts.max()
+        ddl_seen.append((r["ddl_applied"], r["events_in"]))
+    assert sorted(ddl_seen)[0][0] == 0  # the clean epoch
+    assert any(d == n > 0 for d, n in ddl_seen)  # the DDL-only epoch
+
+    # 3) re-delivery of a written epoch: the exactly-once gate returns
+    #    early, and a fresh table sharing the side table overwrites; either
+    #    way the epoch keeps one lineage row
+    (src,) = p._epoch_source_files(0)
+    again = spark.read.schema(EVENTS_DDL).parquet(src)
+    p.apply_epoch(again, 0)
+    fresh = CdcPipeline(spark, mixed, str(tmp_path / "ft"), str(tmp_path / "fc"),
+                        metrics_path=metrics)
+    fresh.apply_epoch(again, 0)
+    m2 = spark.read.parquet(metrics).toPandas()
+    assert (m2["epoch_id"] == 0).sum() == 1 and len(m2) == 3

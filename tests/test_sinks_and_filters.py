@@ -342,3 +342,78 @@ def test_dead_letter_fixture_state_and_idempotence(spark, tmp_path):
         epoch_id=len(files) - 1,
     )
     assert spark.read.parquet(str(tmp_path / "dead")).count() == n_dead
+
+
+def _dml_file(src: str, dst: str, null_col: str | None = None) -> int:
+    """Write the DDL-free, NULL-free rows of ``src`` to ``dst`` (pyarrow, so
+    the footers carry null counts), with ``null_col`` NULLed on the first two
+    rows when given. Returns the row count."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tb = pq.read_table(src)
+    ok = pc.not_equal(tb["op"], "ddl")
+    for c in ("url", "warc_ts", "op"):
+        ok = pc.and_(ok, pc.is_valid(tb[c]))
+    tb = tb.filter(pc.fill_null(ok, False))
+    if null_col is not None:
+        col = tb[null_col].to_pylist()
+        col[0] = col[1] = None
+        i = tb.schema.get_field_index(null_col)
+        tb = tb.set_column(i, null_col, pa.array(col, tb.schema.field(i).type))
+    pq.write_table(tb, dst)
+    return tb.num_rows
+
+
+def test_dead_letter_gate_skips_the_job_only_when_footers_prove_clean(
+    spark, events_dir, tmp_path
+):
+    """With only the malformed check configured, an epoch whose footers
+    count no NULL url/warc_ts/op gets a zero-row dead-letter directory
+    written on the driver (Spark's job output would carry ``_SUCCESS``),
+    whose Spark schema equals that of a job-written one. A NULL url or op
+    still goes through the job with reason ``malformed``; max_html_bytes or
+    a constraint forces the job even on a clean epoch."""
+    import glob as _glob
+
+    files = sorted(_glob.glob(os.path.join(events_dir, "*.parquet")))
+    src = tmp_path / "src"
+    src.mkdir()
+    clean = str(src / "clean.parquet")
+    _dml_file(files[0], clean)
+    null_url = str(src / "null_url.parquet")
+    _dml_file(files[1], null_url, "url")
+    null_op = str(src / "null_op.parquet")
+    _dml_file(files[2], null_op, "op")
+
+    def run(dead, epochs, **kw):
+        p = CdcPipeline(spark, "unused", str(dead) + "_t", str(dead) + "_c",
+                        dead_letter_path=str(dead), **kw)
+        for i, f in enumerate(epochs):
+            p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), i)
+
+    def epoch_dir(dead, i):
+        return os.path.join(str(dead), f"epoch_id={i}")
+
+    dead = tmp_path / "dead"
+    run(dead, [clean, null_url, null_op])
+    assert os.listdir(epoch_dir(dead, 0)) == ["part-00000.parquet"]
+    assert "_SUCCESS" in os.listdir(epoch_dir(dead, 1))
+    assert "_SUCCESS" in os.listdir(epoch_dir(dead, 2))
+    gated = spark.read.parquet(epoch_dir(dead, 0))
+    assert gated.count() == 0
+    assert gated.schema == spark.read.parquet(epoch_dir(dead, 1)).schema
+    rows = spark.read.parquet(str(dead)).collect()
+    assert sorted((r["epoch_id"], r["_dl_reason"]) for r in rows) == [
+        (1, "malformed"), (1, "malformed"), (2, "malformed"), (2, "malformed")
+    ]
+    assert all(r["url"] is None for r in rows if r["epoch_id"] == 1)
+    assert all(r["op"] is None for r in rows if r["epoch_id"] == 2)
+
+    for name, kw in (("oversized", {"max_html_bytes": 10**9}),
+                     ("constraint", {"constraints": {"any": "true"}})):
+        forced = tmp_path / f"dead_{name}"
+        run(forced, [clean], **kw)
+        assert "_SUCCESS" in os.listdir(epoch_dir(forced, 0))
+        assert spark.read.parquet(epoch_dir(forced, 0)).count() == 0
