@@ -22,11 +22,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
-
 EXTRACT_VERSION = 1
 
 _SCRIPT_STYLE = re.compile(rb"(?is)<(script|style)\b.*?</\1\s*>")
@@ -57,19 +52,3 @@ def extract_text(html: bytes | None) -> str | None:
         s = s.replace(ent, ch)
     s = _NUM_ENT.sub(_sub_numeric_entity, s)
     return _WS.sub(" ", s).strip()
-
-
-def _extract_series(html: pd.Series) -> pd.Series:
-    # Arrow hands binary columns to pandas as bytes/None; vectorized apply over the
-    # batch (regex work stays in C via the compiled patterns).
-    return html.map(lambda b: extract_text(b) if b is not None else None)
-
-
-# Arrow-batched scalar UDF (Series -> Series); registered lazily so importing this
-# module never requires an active SparkSession.
-extract_text_udf = pandas_udf(_extract_series, StringType())
-
-
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
-    """df + extracted text column (vectorized; used when events omit `text`)."""
-    return df.withColumn(out_col, extract_text_udf(F.col(html_col)))

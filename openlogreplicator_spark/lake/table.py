@@ -21,7 +21,12 @@ Iceberg's public design (snapshots + manifests + field-id schema evolution):
 * Manifest entries carry per-file stats read from the parquet footers (row
   count, ``warc_ts`` bounds, short-string column bounds, null counts, Bloom
   bitmaps): :meth:`LakeTable.manifest_entries` builds them and
-  :meth:`LakeTable._select_files` prunes on them.
+  :meth:`LakeTable._select_files` prunes on them. Footers are read in one
+  place: :func:`read_footers` opens each file once on a thread pool and
+  :func:`footer_stats` walks its row groups once, deciding which min/max
+  and null counts can be trusted. The pipeline's epoch gate
+  (``CdcPipeline._epoch_footer_stats``) and position-delete row counts use
+  the same reader.
 * Dirty buckets (uncompacted merge-on-read deltas) are the table's to track:
   after every commit, dirty = (parent's dirty − replaced buckets) ∪ the
   buckets of the new files, where the new files count only for a pure
@@ -125,96 +130,75 @@ def ts_micros(v) -> int | None:
     return None
 
 
-def _file_ts_bounds(md, stats_col: str) -> tuple[int | None, int | None]:
-    """[min,max] epoch-micros of ``stats_col`` across a file's row groups,
-    (None, None) when any row group lacks usable min/max (INT96 timestamps,
-    stats disabled, column absent) — absent bounds mean 'never prune'."""
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        rgm = md.row_group(rg)
-        col = None
-        for ci in range(rgm.num_columns):
-            c = rgm.column(ci)
-            if c.path_in_schema == stats_col:
-                col = c
-                break
-        if col is None:
-            return None, None
-        st = col.statistics
-        if st is None or not st.has_min_max:
-            return None, None
-        mn, mx = ts_micros(st.min), ts_micros(st.max)
-        if mn is None or mx is None:
-            return None, None
-        lo = mn if lo is None else min(lo, mn)
-        hi = mx if hi is None else max(hi, mx)
-    return lo, hi
-
-
-# String-column manifest bounds: values longer than this are NOT recorded —
-# a truncated max would under-report the file's upper bound and make the
+# String min/max values longer than this are not trusted as bounds: a
+# truncated max would under-report the file's upper bound and make the
 # equality prune unsound, so long columns (text, html) simply never prune.
 _COL_BOUNDS_MAX_LEN = 64
 
 
-def _file_col_bounds(md) -> dict[str, list[str]]:
-    """Per-file [min, max] for every short STRING column whose statistics
-    are usable in EVERY row group (Iceberg lower_bounds/upper_bounds
-    analogue). Missing stats in any row group drop the column — absent
-    bounds mean 'never prune'."""
-    bounds: dict[str, list[str]] | None = None
+def footer_stats(md) -> dict[str, dict]:
+    """The one walk of a parquet footer's row groups. Per column
+    (``path_in_schema``): ``min``/``max`` across the row groups, present only
+    when EVERY row group has them (a string over ``_COL_BOUNDS_MAX_LEN``
+    chars counts as missing), and ``nulls``, the total NULL count, present
+    only when every row group reports one. Raw parquet values: timestamps
+    stay datetimes (:func:`ts_micros` converts). A missing stat means
+    'unknown' — never prune on it; fall back to an exact aggregate."""
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+    cols: dict[str, dict] = {n: {} for n in names}
     for rg in range(md.num_row_groups):
         rgm = md.row_group(rg)
-        rg_bounds: dict[str, list[str]] = {}
-        for ci in range(rgm.num_columns):
-            c = rgm.column(ci)
-            st = c.statistics
-            if st is None or not st.has_min_max:
+        for ci, name in enumerate(names):
+            st = rgm.column(ci).statistics
+            here: dict = {}
+            if st is not None and st.has_min_max:
+                mn, mx = st.min, st.max
+                if not any(isinstance(v, str) and len(v) > _COL_BOUNDS_MAX_LEN
+                           for v in (mn, mx)):
+                    here["min"], here["max"] = mn, mx
+            if st is not None and st.null_count is not None:
+                here["nulls"] = st.null_count
+            acc = cols[name]
+            if rg == 0:
+                acc.update(here)
                 continue
-            mn, mx = st.min, st.max
-            if not (isinstance(mn, str) and isinstance(mx, str)):
-                continue
-            if len(mn) > _COL_BOUNDS_MAX_LEN or len(mx) > _COL_BOUNDS_MAX_LEN:
-                continue
-            rg_bounds[c.path_in_schema] = [mn, mx]
-        if bounds is None:
-            bounds = rg_bounds
-        else:
-            # keep only columns usable in every row group, widen the rest
-            bounds = {
-                col: [min(b[0], rg_bounds[col][0]),
-                      max(b[1], rg_bounds[col][1])]
-                for col, b in bounds.items()
-                if col in rg_bounds
-            }
-    return bounds or {}
+            if "min" in acc and "min" in here:
+                acc["min"] = min(acc["min"], here["min"])
+                acc["max"] = max(acc["max"], here["max"])
+            else:
+                acc.pop("min", None)
+                acc.pop("max", None)
+            if "nulls" in acc and "nulls" in here:
+                acc["nulls"] += here["nulls"]
+            else:
+                acc.pop("nulls", None)
+    return cols
 
 
-def _file_null_counts(md) -> dict[str, int]:
-    """Per-file total null count for every column whose statistics report
-    it in EVERY row group (Iceberg null_value_counts analogue). Absent
-    stats drop the column — a missing count means 'never prune'. Unlike
-    col_bounds this applies to any type (parquet null counts are
-    type-agnostic), so IS-NOT-NULL pruning works on int columns too."""
-    counts: dict[str, int] | None = None
-    for rg in range(md.num_row_groups):
-        rgm = md.row_group(rg)
-        rg_counts: dict[str, int] = {}
-        for ci in range(rgm.num_columns):
-            c = rgm.column(ci)
-            st = c.statistics
-            if st is None or st.null_count is None:
-                continue
-            rg_counts[c.path_in_schema] = st.null_count
-        if counts is None:
-            counts = rg_counts
-        else:
-            counts = {
-                col: n + rg_counts[col]
-                for col, n in counts.items()
-                if col in rg_counts
-            }
-    return counts or {}
+def read_footers(paths: Iterable[str], read_cols: Iterable[str] = ()) -> list[dict]:
+    """Each parquet file's footer, read once on a thread pool: ``md`` (the
+    pyarrow ``FileMetaData``), ``cols`` (:func:`footer_stats`) and, when the
+    file holds any of ``read_cols``, ``data``: a table of just those
+    columns. Footer reads run on the driver — between a write and its commit,
+    and before every epoch — so done serially they would be a pure
+    non-scaling share of each epoch (~0.2-0.5 s of the flat cost in the
+    N-vs-4N scaling decomposition, BASELINE.md)."""
+    read_cols = tuple(read_cols)
+
+    def one(path: str) -> dict:
+        with pq.ParquetFile(path) as pf:
+            md = pf.metadata
+            out = {"md": md, "cols": footer_stats(md)}
+            present = [c for c in read_cols if c in pf.schema_arrow.names]
+            if present:
+                out["data"] = pf.read(columns=present)
+        return out
+
+    paths = list(paths)
+    if not paths:
+        return []
+    with concurrent.futures.ThreadPoolExecutor(min(16, len(paths))) as ex:
+        return list(ex.map(one, paths))
 
 
 _WIDENINGS = {
@@ -743,59 +727,53 @@ class LakeTable:
         self, files: Iterable[tuple[str, int]]
     ) -> list[dict]:
         """Manifest entries for ``(path, bucket)`` data files at the current
-        schema version — the stats ``_select_files`` prunes on, read from
-        each parquet footer: row count, ``STATS_COL`` bounds (``ts_min_us``/
-        ``ts_max_us``), short-string ``col_bounds``, ``null_counts``, and a
-        ``bloom`` bitmap per indexed string column. A relative path is
-        taken under the table root; paths are recorded as given.
-
-        Footer reads run on a THREAD POOL: this walk executes on the driver
-        between the write job and the snapshot commit, so done serially it is
-        a pure non-scaling share of every epoch (it showed up as ~0.2-0.5 s of
-        the flat cost in the N-vs-4N scaling decomposition, BASELINE.md)."""
+        schema version — the stats ``_select_files`` prunes on, derived from
+        one :func:`read_footers` pass: row count, ``STATS_COL`` bounds
+        (``ts_min_us``/``ts_max_us``, only when every row group has them as
+        timestamps), short-string ``col_bounds``, ``null_counts``, and a
+        ``bloom`` bitmap per indexed string column (built from a
+        column-pruned read of just those columns). A stat the footer lacks is
+        left out, so the file is never pruned on it. A relative path is taken
+        under the table root; paths are recorded as given."""
         files = list(files)
         bloom_cols = [
             f["name"]
             for f in self.current_schema()
             if f["name"] in self.bloom_cols and f["type"] == "string"
         ]
-
-        def entry(path_bucket: tuple[str, int]) -> dict:
-            path, bucket = path_bucket
-            pf = pq.ParquetFile(os.path.join(self.path, path))
-            md = pf.metadata
+        footers = read_footers(
+            (os.path.join(self.path, p) for p, _b in files), bloom_cols
+        )
+        out = []
+        for (path, bucket), ft in zip(files, footers):
+            rows, cols = ft["md"].num_rows, ft["cols"]
             e = {
                 "path": path,
                 "bucket": int(bucket),
                 "schema_ver": self.current_schema_ver,
-                "rows": md.num_rows,
+                "rows": rows,
             }
-            lo, hi = _file_ts_bounds(md, STATS_COL)
-            if lo is not None:
+            ts = cols.get(STATS_COL, {})
+            lo, hi = ts_micros(ts.get("min")), ts_micros(ts.get("max"))
+            if lo is not None and hi is not None:
                 e["ts_min_us"], e["ts_max_us"] = lo, hi
-            cb = _file_col_bounds(md)
+            cb = {
+                c: [st["min"], st["max"]]
+                for c, st in cols.items()
+                if isinstance(st.get("min"), str) and isinstance(st.get("max"), str)
+            }
             if cb:
                 e["col_bounds"] = cb
-            # write-time Bloom index build (lake/bloom.py): one column-pruned
-            # read of just the indexed columns — O(indexed bytes) per file
-            present = [c for c in bloom_cols if c in pf.schema_arrow.names]
-            if present:
-                cols = pf.read(columns=present)
+            if "data" in ft:
                 e["bloom"] = {
-                    c: bloom_build(
-                        (v.as_py() for v in cols.column(c)), md.num_rows
-                    )
-                    for c in present
+                    c: bloom_build((v.as_py() for v in ft["data"].column(c)), rows)
+                    for c in bloom_cols if c in ft["data"].column_names
                 }
-            nulls = _file_null_counts(md)
+            nulls = {c: st["nulls"] for c, st in cols.items() if "nulls" in st}
             if nulls:
                 e["null_counts"] = nulls
-            return e
-
-        if not files:
-            return []
-        with concurrent.futures.ThreadPoolExecutor(min(16, len(files))) as ex:
-            return list(ex.map(entry, files))
+            out.append(e)
+        return out
 
     def _select_files(
         self,

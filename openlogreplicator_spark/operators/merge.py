@@ -38,7 +38,13 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..lake.table import STATS_COL, LakeTable, data_suffix, ts_micros
+from ..lake.table import (
+    STATS_COL,
+    LakeTable,
+    data_suffix,
+    read_footers,
+    ts_micros,
+)
 from .lww import lww_compact_auto
 
 # Per-stage wall-clock breakdown of the apply path (round-3 verdict "What's
@@ -610,13 +616,11 @@ def merge_append(
     deltas back to one file per bucket. Use for high-frequency epochs where
     copy-on-write write amplification dominates (each file still carries the
     schema_ver it was written under, so evolution semantics are unchanged)."""
-    t0 = time.time()
     b = batch.withColumn("_bucket", table.bucket_expr())
     new_files, rows = _write_buckets(table, b, profile=True)
     ts = time.time()
     summary = {
         "op": "merge_append",
-        "merge_secs": round(time.time() - t0, 3),
         "rows_written": rows,
         **(extra_summary or {}),
     }
@@ -837,7 +841,6 @@ def merge_into(
     engine-originated batches (delete_where) that are not source epochs and
     must not interfere with the exactly-once gate.
     """
-    t0 = time.time()
     summary = {
         "op": "merge",
         "final": bool(final),
@@ -880,7 +883,6 @@ def merge_into(
         b.unpersist()
     else:
         touched = sorted({f["bucket"] for f in new_files})
-    summary["merge_secs"] = round(time.time() - t0, 3)
     summary["rows_written"] = total_rows
     # replacing the touched buckets clears their dirty marks: a CoW merge
     # leaves each LWW-compacted (a MoR table merged with CoW converges clean)
@@ -1003,10 +1005,11 @@ def delete_positions(table: LakeTable, victims: DataFrame) -> dict:
         ).parquet(absd)
     finally:
         tagged.unpersist()
+    written = table.written_files(absd)
+    footers = read_footers(os.path.join(table.path, p) for p, _b in written)
     entries = [
-        {"path": p, "bucket": b,
-         "rows": pq.ParquetFile(os.path.join(table.path, p)).metadata.num_rows}
-        for p, b in table.written_files(absd)
+        {"path": p, "bucket": b, "rows": ft["md"].num_rows}
+        for (p, b), ft in zip(written, footers)
     ]
     table.commit_files(
         [], replaced_buckets=[],

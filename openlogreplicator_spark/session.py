@@ -74,7 +74,3 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def get_or_create(spark: SparkSession | None = None) -> SparkSession:
-    return spark or build_session()

@@ -73,78 +73,3 @@ def first_seen_only(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def tws_available() -> bool:
-    """Spark 4's transformWithStateInPandas needs the `protobuf` package on
-    the Python side (its state-server protocol is protobuf-framed;
-    pyspark.sql.streaming.proto imports google.protobuf at runtime). This
-    container ships no protobuf, so the API exists but its driver worker
-    crashes on init (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE —
-    probed, see docs/ROUND3_NOTES.md). Gate, don't guess."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def first_seen_only_tws(
-    stream: DataFrame, key_col: str, order_cols: list[str]
-) -> DataFrame:
-    """first_seen_only on Spark 4's transformWithStateInPandas — the
-    successor API (SPARK-46815): explicit named state variables, timers,
-    and state-schema evolution instead of applyInPandasWithState's single
-    tuple. Semantics are IDENTICAL to first_seen_only (first-seen wins,
-    arrival-ordered, one boolean of state per key); keep the two in lockstep.
-    Requires the protobuf package (tws_available()) and the RocksDB state
-    store provider — set spark.sql.streaming.stateStore.providerClass to
-    ...state.RocksDBStateStoreProvider before starting the query."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf, which this "
-            "environment does not ship — use first_seen_only()"
-        )
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    cols = stream.columns
-    schema = stream.schema
-
-    class _FirstSeen(StatefulProcessor):
-        def init(self, handle):
-            self._seen = handle.getValueState(
-                "seen", StructType([StructField("seen", BooleanType())])
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._seen.exists():
-                for _ in rows:  # drain; key admitted in a prior epoch
-                    pass
-                yield pd.DataFrame(columns=cols)
-                return
-            best: pd.DataFrame | None = None
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                cand = pdf.sort_values(order_cols, kind="stable").head(1)
-                if best is None or tuple(cand.iloc[0][order_cols]) < tuple(
-                    best.iloc[0][order_cols]
-                ):
-                    best = cand
-            if best is None:
-                yield pd.DataFrame(columns=cols)
-                return
-            self._seen.update((True,))
-            yield best[cols]
-
-        def close(self):
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_FirstSeen(),
-        outputStructType=schema,
-        outputMode="Append",
-        timeMode="None",
-    )

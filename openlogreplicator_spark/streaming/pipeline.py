@@ -52,7 +52,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..lake.table import LakeTable, _file_null_counts, atomic_write
+from ..lake.table import LakeTable, atomic_write, read_footers
 from ..operators.decode import (
     EVENTS_DDL,
     apply_log_filters,
@@ -562,9 +562,9 @@ class CdcPipeline:
         self, batch_df: DataFrame, epoch_id: int | None = None
     ) -> dict | None:
         """Zero-job epoch header read: row count, max(schema_ver),
-        [min,max](seq), the source incarnation id and ``nulls``, all from
-        parquet FOOTERS of the epoch's file set (inputFiles() or the
-        checkpoint offset log). The incarnation rides as file-level
+        [min,max](seq), the source incarnation id and ``nulls``, derived from
+        one :func:`read_footers` pass over the epoch's file set (inputFiles()
+        or the checkpoint offset log). The incarnation rides as file-level
         key-value metadata (``olr:incarnation`` — the analogue of the
         resetlogs id in every redo-log HEADER, reference
         Reader::getResetlogs / Parser.cpp:1239-1244); absent means
@@ -572,9 +572,10 @@ class CdcPipeline:
         check's columns (``MALFORMED_COLS``); it is None when any file lacks
         one of them or its null count, and a footer sum is an upper bound
         for a row-dropping plan over the files, so 0 proves no row is
-        malformed. Returns None when no file set is known or any footer
-        lacks the schema_ver/seq stats (callers fall back to exact
-        aggregates / skip the guard)."""
+        malformed. Returns None when no file set is known, a footer is
+        unreadable, or a file with row groups lacks the schema_ver/seq
+        min/max (callers fall back to exact aggregates / skip the guard); a
+        file with no row groups adds only its row count."""
         files = batch_df.inputFiles()
         if not files and epoch_id is not None and self.source_format != "jsonl":
             # streaming-derived plan: the epoch's file set is still pinned in
@@ -582,66 +583,35 @@ class CdcPipeline:
             files = self._epoch_source_files(epoch_id)
         if not files:
             return None
-        import concurrent.futures
-
-        import pyarrow.parquet as pq
-
-        def file_stats(uri: str) -> dict:
-            path = uri[7:] if uri.startswith("file://") else uri
-            md = pq.ParquetFile(path).metadata
-            out: dict = {"incarnation": 0, "rows": md.num_rows}
-            kv = md.metadata or {}
-            if b"olr:incarnation" in kv:
-                out["incarnation"] = int(kv[b"olr:incarnation"])
-            for name, lo_key, hi_key in (
-                ("schema_ver", None, "schema_ver"),
-                ("seq", "seq_min", "seq_max"),
-            ):
-                try:
-                    idx = md.schema.names.index(name)
-                except ValueError:
-                    raise ValueError(f"missing column {name}")
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    col = md.row_group(rg).column(idx)
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        raise ValueError("missing stats")
-                    if st.null_count != col.num_values:
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-                if lo_key:
-                    out[lo_key] = lo
-                out[hi_key] = hi
-            nulls = _file_null_counts(md)
-            out["nulls"] = (
-                sum(nulls[c] for c in MALFORMED_COLS)
-                if all(c in nulls for c in MALFORMED_COLS) else None
-            )
-            return out
-
-        try:
-            with concurrent.futures.ThreadPoolExecutor(
-                min(16, len(files))
-            ) as ex:
-                per_file = list(ex.map(file_stats, files))
-        except (OSError, ValueError, KeyError):
-            return None  # unreadable footer / no stats
         agg: dict = {"incarnation": 0, "rows": 0, "schema_ver": None,
                      "seq_min": None, "seq_max": None, "nulls": 0}
-        for fs in per_file:
-            agg["incarnation"] = max(agg["incarnation"], fs["incarnation"])
-            agg["rows"] += fs["rows"]
-            if agg["nulls"] is not None:
-                agg["nulls"] = (
-                    None if fs["nulls"] is None else agg["nulls"] + fs["nulls"]
+        try:
+            footers = read_footers(
+                uri[7:] if uri.startswith("file://") else uri for uri in files
+            )
+            for ft in footers:
+                md, cols = ft["md"], ft["cols"]
+                sv, seq = cols["schema_ver"], cols["seq"]
+                if md.num_row_groups and not ("max" in sv and "min" in seq):
+                    raise ValueError("missing stats")
+                kv = md.metadata or {}
+                agg["incarnation"] = max(
+                    agg["incarnation"], int(kv.get(b"olr:incarnation", 0))
                 )
-            for k, pick in (("schema_ver", max), ("seq_max", max),
-                            ("seq_min", min)):
-                if fs.get(k) is not None:
-                    agg[k] = (
-                        fs[k] if agg[k] is None else pick(agg[k], fs[k])
+                agg["rows"] += md.num_rows
+                for k, v, pick in (("schema_ver", sv.get("max"), max),
+                                   ("seq_min", seq.get("min"), min),
+                                   ("seq_max", seq.get("max"), max)):
+                    if v is not None:
+                        agg[k] = v if agg[k] is None else pick(agg[k], v)
+                if agg["nulls"] is not None:
+                    agg["nulls"] = (
+                        agg["nulls"] + sum(cols[c]["nulls"] for c in MALFORMED_COLS)
+                        if all("nulls" in cols.get(c, {}) for c in MALFORMED_COLS)
+                        else None
                     )
+        except (OSError, ValueError, KeyError):
+            return None  # unreadable footer / no stats
         return agg
 
     # -------------------------------------------------- incarnation guard

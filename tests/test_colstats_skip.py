@@ -9,6 +9,8 @@ import datetime as dt
 import glob
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -236,3 +238,47 @@ def test_read_state_eq_slice(spark, tmp_path):
     rows = {r["url"]: r["lang"]
             for r in read_state(t, eq={"lang": "de"}).collect()}
     assert rows == {"u2": "de"}  # u1's winner is en — absent from the slice
+
+
+def test_footer_stats_pinned_on_a_multi_row_group_file(spark, tmp_path):
+    """One footer walk feeds both the manifest entry and the epoch gate.
+    Three row groups: ``lang`` is all NULL in the second (no bounds, null
+    count still summed), ``text`` exceeds the 64-char bound limit in the
+    third only (no bounds), ``url`` holds one NULL (the malformed count).
+    The expected values are literal, so any change to a trust rule shows."""
+    path = str(tmp_path / "three_rg.parquet")
+    tb = pa.table({
+        "seq": pa.array([7, 3, 11, 12, 20, 21], pa.int64()),
+        "warc_ts": pa.array(
+            [TS + dt.timedelta(seconds=s) for s in (5, 1, 9, 10, 30, 31)],
+            pa.timestamp("us"),
+        ),
+        "op": ["c", "u", "c", "d", "u", "c"],
+        "url": ["u1", "u0", None, "u3", "u4", "u5"],
+        "lang": ["en", "de", None, None, "fr", "en"],
+        "text": ["a", "b", "c", "d", "x" * 70, "e"],
+        "schema_ver": pa.array([1, 1, 2, 2, 1, 3], pa.int32()),
+    }).replace_schema_metadata({"olr:incarnation": "2"})
+    pq.write_table(tb, path, row_group_size=2)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 3
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), FIELDS, key_col="url",
+                         n_buckets=1, schema_ver=1)
+    assert t.manifest_entries([(path, 0)]) == [{
+        "path": path,
+        "bucket": 0,
+        "schema_ver": 1,
+        "rows": 6,
+        "ts_min_us": 1577836801000000,
+        "ts_max_us": 1577836831000000,
+        "col_bounds": {"op": ["c", "u"], "url": ["u0", "u5"]},
+        "null_counts": {"seq": 0, "warc_ts": 0, "op": 0, "url": 1,
+                        "lang": 2, "text": 0, "schema_ver": 0},
+    }]
+
+    p = CdcPipeline(spark, str(tmp_path), str(tmp_path / "tt"),
+                    str(tmp_path / "ck"))
+    assert p._epoch_footer_stats(spark.read.parquet(path)) == {
+        "incarnation": 2, "rows": 6, "schema_ver": 3,
+        "seq_min": 3, "seq_max": 21, "nulls": 1,
+    }

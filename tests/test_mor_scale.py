@@ -13,6 +13,8 @@
 """
 
 import datetime as dt
+import json
+import os
 
 import pytest
 
@@ -50,7 +52,9 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_merge_append_tracks_dirty_buckets(spark, seeded):
+def test_merge_append_tracks_dirty_buckets(spark, seeded, tmp_path):
+    """Also: snapshots carry no wall-clock values, so two runs of one
+    fixture leave snapshot JSONs of identical size."""
     t = seeded
     assert t.dirty_buckets() == set()  # CoW merge leaves the table clean
     merge_append(t, _batch(spark, [("u1", TS, 100, "u", "new1")]), epoch_id=1)
@@ -58,6 +62,30 @@ def test_merge_append_tracks_dirty_buckets(spark, seeded):
     merge_append(t, _batch(spark, [("u2", TS, 101, "u", "new2")]), epoch_id=2)
     d = t.dirty_buckets()
     assert 1 <= len(d) <= 2  # u1/u2 buckets may or may not collide
+
+    # the same fixture again, into a second table
+    t2 = LakeTable.create(spark, str(tmp_path / "t2"), FIELDS, key_col="url",
+                          n_buckets=8, schema_ver=1)
+    merge_into(
+        t2, _batch(spark, [(f"u{i}", TS, i, "c", f"t{i}") for i in range(40)]),
+        epoch_id=0,
+    )
+    merge_append(t2, _batch(spark, [("u1", TS, 100, "u", "new1")]), epoch_id=1)
+    merge_append(t2, _batch(spark, [("u2", TS, 101, "u", "new2")]), epoch_id=2)
+
+    def snapshots(table):
+        sdir = os.path.join(table.path, "_snapshots")
+        return {fn: os.path.join(sdir, fn) for fn in os.listdir(sdir)
+                if fn.startswith("v") and fn.endswith(".json")}
+
+    a, b = snapshots(t), snapshots(t2)
+    assert sorted(a) == sorted(b) and len(a) == 4
+    for fn, path in a.items():
+        with open(path) as f:
+            summary = json.load(f)["summary"]
+        assert not [k for k in summary
+                    if k.endswith(("_secs", "_ms", "_s"))], summary
+        assert os.path.getsize(path) == os.path.getsize(b[fn]), fn
 
 
 def test_compact_rewrites_only_dirty_buckets(spark, seeded):

@@ -115,31 +115,6 @@ def test_online_filter_reload_and_dead_letter(spark, events_dir, tmp_path):
     assert (state["html"].map(lambda b: len(bytes(b))) <= 900).all()
 
 
-def test_streaming_windowed_metrics(spark, events_dir, tmp_path):
-    from openlogreplicator_spark.streaming.metrics import windowed_event_counts
-
-    stream = (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", 3)
-        .parquet(events_dir)
-    )
-    agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_metrics")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM win_metrics").toPandas()
-    # watermark closes all but the trailing window(s) in availableNow mode
-    assert len(got) > 0
-    assert set(got["op"]) <= {"c", "u", "d", "ddl"}
-    assert (got["n_events"] > 0).all()
-
-
 def test_malformed_events_routed_to_dead_letter(spark, tmp_path):
     from openlogreplicator_spark.operators.decode import EVENTS_DDL as DDL
 

@@ -99,50 +99,3 @@ def test_suppression_survives_restart(spark, src_dir, tmp_path):
     assert int(got.loc[got["k"] == "d", "id"].iloc[0]) == 7
     assert int(got.loc[got["k"] == "b", "id"].iloc[0]) == 3  # original winner
 
-
-def test_tws_variant_is_env_gated(spark, src_dir, tmp_path):
-    """transformWithStateInPandas needs google.protobuf (its state-server
-    protocol) — absent here, so the TWS twin must refuse loudly (probed:
-    the query otherwise dies mid-run with a cryptic
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). When protobuf IS
-    present, it must reproduce first_seen_only exactly."""
-    from openlogreplicator_spark.streaming.dedup import (
-        first_seen_only_tws,
-        tws_available,
-    )
-
-    stream = (
-        spark.readStream.schema(DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    if not tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            first_seen_only_tws(stream, "k", ["ts", "seq"])
-        return
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    out = first_seen_only_tws(stream, "k", ["ts", "seq"])
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_tws")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("SELECT * FROM dedup_tws")
-        .toPandas()
-        .sort_values("k")
-        .reset_index(drop=True)
-    )
-    want = pd.DataFrame(
-        {"id": [1, 3, 5], "k": ["a", "b", "c"], "ts": [10, 10, 50],
-         "seq": [1, 3, 4]}
-    )
-    pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()))
