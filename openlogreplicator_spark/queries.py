@@ -473,15 +473,37 @@ def cdc_props_stats(spark, sf_dir):
     )
 
 
-@register(
-    "emb_near_dup_pairs",
-    f"""
-    WITH b AS ({_lsh_tables_sql("(SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500)")}),
+# LSH candidate pairs (a < b) over the first 500 embeddings: ONE spelling
+# for the near-dup, kNN-graph and intrinsic-dimension oracles
+_LSH_SAMPLE_CAND_CTES = f"""b AS ({_lsh_tables_sql("(SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500)")}),
     cand AS (
       SELECT DISTINCT l.vec_id AS a, r.vec_id AS b
       FROM b l JOIN b r
         ON l.table_id = r.table_id AND l.bucket = r.bucket
-       AND l.vec_id < r.vec_id)
+       AND l.vec_id < r.vec_id)"""
+
+
+def _lsh_sample(spark, sf_dir, *cols: str) -> tuple[DataFrame, DataFrame]:
+    """The Spark side of ``_LSH_SAMPLE_CAND_CTES``: the first 500
+    embeddings (vec_id, embedding, *cols) and their LSH candidate pairs
+    (a, b) with a < b."""
+    from .functions.similarity import lsh_candidate_pairs
+
+    emb = (
+        T(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < 500)
+        .select("vec_id", "embedding", *cols)
+    )
+    cand = lsh_candidate_pairs(
+        emb, n_bits=_LSH_BITS, n_tables=_LSH_TABLES, dim=_EMB_DIM
+    )
+    return emb, cand
+
+
+@register(
+    "emb_near_dup_pairs",
+    f"""
+    WITH {_LSH_SAMPLE_CAND_CTES}
     SELECT a, b,
            round(CAST(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
                                              CAST(eb.embedding AS DOUBLE[])) AS DOUBLE), 4)
@@ -498,16 +520,9 @@ def emb_near_dup_pairs(spark, sf_dir):
     LSH candidates (8 bits × 4 tables OR'd — parameterized keyspace, never
     all-pairs) scored exactly, thresholded — the embedding-based dedup path
     of a training-data pipeline."""
-    from .functions.similarity import cosine, lsh_candidate_pairs
+    from .functions.similarity import cosine
 
-    emb = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 500)
-        .select("vec_id", "embedding")
-    )
-    cand = lsh_candidate_pairs(
-        emb, n_bits=_LSH_BITS, n_tables=_LSH_TABLES, dim=_EMB_DIM
-    )
+    emb, cand = _lsh_sample(spark, sf_dir)
     ea = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
     eb = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
     return (
@@ -887,19 +902,22 @@ _MINHASH_CAND_TMPL = """
 
 
 _MINHASH_CAND_SQL = _MINHASH_CAND_TMPL.format(id_cap=2000)
+# the verify half over those candidates: each doc's token count (`sizes`)
+# and every candidate pair's exact token-set intersection (`inter`)
+_MINHASH_INTER_CTES = """sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
+    inter AS (
+      SELECT c.a, c.b, count(*) AS n_inter
+      FROM cand c
+      JOIN tok ta ON ta.doc_id = c.a
+      JOIN tok tb ON tb.doc_id = c.b AND tb.token = ta.token
+      GROUP BY c.a, c.b)"""
 
 
 @register(
     "docs_jaccard_verified_dups",
     f"""
     WITH {_MINHASH_CAND_SQL},
-    sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    inter AS (
-      SELECT c.a, c.b, count(*) AS n_inter
-      FROM cand c
-      JOIN tok ta ON ta.doc_id = c.a
-      JOIN tok tb ON tb.doc_id = c.b AND tb.token = ta.token
-      GROUP BY c.a, c.b)
+    {_MINHASH_INTER_CTES}
     SELECT a, b,
            round(n_inter * 1.0 / (sa.n + sb.n - n_inter), 4) AS jaccard
     FROM inter
@@ -926,10 +944,11 @@ def docs_jaccard_verified_dups(spark, sf_dir):
     )
 
 
-@register(
-    "docs_ngram_jaccard_near_dup",
-    """
-    WITH arr AS (
+# DF-capped 3-token-shingle candidate generation — ONE spelling shared by
+# docs_ngram_jaccard_near_dup, docs_containment_dups and
+# docs_weighted_jaccard_dups (the [2, 64] DF cap is the quadratic
+# hot-shingle guard from docs_ngram_jaccard_near_dup).
+_SHINGLE_CAND_CTES = """arr AS (
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS a
       FROM documents WHERE doc_id < 2000),
     sh AS (
@@ -943,7 +962,13 @@ def docs_jaccard_verified_dups(spark, sf_dir):
     cs AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN rare USING (shingle)),
     cand AS (
       SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM cs l JOIN cs r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+      FROM cs l JOIN cs r ON l.shingle = r.shingle AND l.doc_id < r.doc_id)"""
+
+
+@register(
+    "docs_ngram_jaccard_near_dup",
+    f"""
+    WITH {_SHINGLE_CAND_CTES},
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
     inter AS (
       SELECT c.a, c.b, count(*) AS n_inter
@@ -1204,13 +1229,25 @@ def ann_lsh_bucket_stats(spark, sf_dir):
 # cell = one straggler task at 100 TB; the dial is k_cells). Assignment
 # reuses the exact kernel/CTE the recall entries pin (argmax cosine, ties
 # to the smaller cell id; DuckDB cosine CAST to DOUBLE[] — float32 drift).
-_IVF_CELLS_SQL = """
-    WITH ranked_init AS (
+# The quantizer CTEs are shared by every IVF oracle: `init` pins cells 0-7
+# to the 8 md5-smallest corpus vectors, `assign` ranks each corpus vector's
+# cells by cosine. After editing one, re-run every entry that uses it.
+_IVF_INIT_CTES = """ranked_init AS (
       SELECT embedding AS cvec,
              row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
                - 1 AS cid
       FROM embeddings),
-    init AS (SELECT cid, cvec FROM ranked_init WHERE cid < 8),
+    init AS (SELECT cid, cvec FROM ranked_init WHERE cid < 8)"""
+_IVF_ASSIGN_CTE = """assign AS (
+      SELECT e.vec_id, e.embedding, i.cid,
+             row_number() OVER (
+               PARTITION BY e.vec_id
+               ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+                                               CAST(i.cvec AS DOUBLE[])) DESC,
+                        i.cid) AS rn
+      FROM embeddings e CROSS JOIN init i)"""
+_IVF_CELLS_SQL = f"""
+    WITH {_IVF_INIT_CTES},
     assign AS (
       SELECT e.vec_id, i.cid,
              row_number() OVER (
@@ -1224,6 +1261,18 @@ _IVF_CELLS_SQL = """
     """
 
 
+def _pinned_centroids(emb: DataFrame) -> list[list[float]]:
+    """The IVF oracles' coarse quantizer on the Spark side: the embeddings
+    of the 8 md5-smallest corpus vectors (``_IVF_INIT_CTES``)."""
+    rows = (
+        emb.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(8)
+        .collect()
+    )
+    return [[float(x) for x in r["embedding"]] for r in rows]
+
+
 @register("ann_ivf_cell_stats", _IVF_CELLS_SQL)
 def ann_ivf_cell_stats(spark, sf_dir):
     """IVF cell-population histogram (the skew check the LSH path has in
@@ -1234,13 +1283,7 @@ def ann_ivf_cell_stats(spark, sf_dir):
     from .functions.similarity import centroid_topn_udf
 
     emb = T(spark, sf_dir, "embeddings")
-    cents_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(8)
-        .collect()
-    )
-    centroids = [[float(x) for x in r["embedding"]] for r in cents_rows]
+    centroids = _pinned_centroids(emb)
     assign1 = centroid_topn_udf(centroids, 1)
     return (
         emb.select(F.element_at(assign1(F.col("embedding")), 1).alias("cid"))
@@ -1322,21 +1365,9 @@ def emb_quantize_error(spark, sf_dir):
 # =========================================================================
 
 
-_IVF_SQL = """
-    WITH ranked_init AS (
-      SELECT embedding AS cvec,
-             row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-               - 1 AS cid
-      FROM embeddings),
-    init AS (SELECT cid, cvec FROM ranked_init WHERE cid < 8),
-    assign AS (
-      SELECT e.vec_id, e.embedding, i.cid,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                               CAST(i.cvec AS DOUBLE[])) DESC,
-                        i.cid) AS rn
-      FROM embeddings e CROSS JOIN init i),
+_IVF_SQL = f"""
+    WITH {_IVF_INIT_CTES},
+    {_IVF_ASSIGN_CTE},
     cells AS (SELECT vec_id, embedding, cid FROM assign WHERE rn = 1),
     probes AS (
       SELECT vec_id AS query_id, embedding AS qvec, cid
@@ -1367,13 +1398,7 @@ def ann_ivf_topk(spark, sf_dir):
     from .functions.similarity import ivf_topk
 
     emb = T(spark, sf_dir, "embeddings")
-    cents_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(8)
-        .collect()
-    )
-    centroids = [[float(x) for x in r["embedding"]] for r in cents_rows]
+    centroids = _pinned_centroids(emb)
     out = ivf_topk(emb, emb.filter(F.col("vec_id") < 3), centroids, k=5, nprobe=2)
     return out.select("query_id", "vec_id", F.round("cosine", 4).alias("cosine"))
 
@@ -1673,24 +1698,53 @@ def _shared_mor_replay(spark) -> tuple[str, list[int], str]:
 # here, but the filter is replicated verbatim), per-row schema_ver extras
 # resolution (fetch_status @v2-3, http_status @v4, widened to BIGINT), LWW
 # winner per url over (warc_ts, seq), delete-tombstone winners excluded.
-_REPLAY_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    projected AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
+# The pieces are shared by every replay oracle below; after editing one,
+# re-run every entry that uses it.
+_COMMITTED_DML = """op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
+        AND url IS NOT NULL AND warc_ts IS NOT NULL"""
+_REPLAY_GLOB = f"'{_REPLAY_EVENTS}/*.parquet'"
+# the first two fixture files: the epochs a from/as-of snapshot confirmed
+_REPLAY_FIRST_TWO = f"""['{_REPLAY_EVENTS}/events-00000.parquet',
+                                  '{_REPLAY_EVENTS}/events-00001.parquet']"""
+_REPLAY_COLS = """url, warc_ts, seq AS _seq, op AS _op, text, lang,
              CASE WHEN schema_ver >= 4
                     THEN CAST(extras['http_status'][1] AS BIGINT)
                   WHEN schema_ver >= 2
                     THEN CAST(extras['fetch_status'][1] AS BIGINT)
-                  ELSE NULL END AS http_status,
+                  ELSE NULL END AS http_status"""
+
+
+def _lww_ctes(
+    cols: str, src: str = _REPLAY_GLOB, ev_where: str = "", ev: str = "ev",
+    proj: str = "projected",
+) -> str:
+    """Two CTEs: ``ev``, the committed DML of ``src`` (plus ``ev_where``),
+    and ``proj``, its ``cols`` with each row's LWW rank ``rn`` per url over
+    (warc_ts DESC, seq DESC) — the winner is rn = 1."""
+    return f"""{ev} AS (
+      SELECT * FROM read_parquet({src})
+      WHERE {_COMMITTED_DML}{ev_where}),
+    {proj} AS (
+      SELECT {cols},
              row_number() OVER (PARTITION BY url
                                 ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev)
-    SELECT url, warc_ts, _seq, text, lang, http_status
-    FROM projected WHERE rn = 1 AND _op <> 'd'
+      FROM {ev})"""
+
+
+def _replay_state_sql(
+    ev_where: str = "", extra_cols: str = "", where: str = ""
+) -> str:
+    """The live LWW state of the fixed replay log: ``ev_where`` filters the
+    log before the window, ``extra_cols`` adds output columns, ``where``
+    filters the winners."""
+    return f"""
+    WITH {_lww_ctes(_REPLAY_COLS, ev_where=ev_where)}
+    SELECT url, warc_ts, _seq, text, lang, http_status{extra_cols}
+    FROM projected WHERE rn = 1 AND _op <> 'd'{where}
     """
+
+
+_REPLAY_SQL = _replay_state_sql()
 
 
 @register("engine_replay_state", _REPLAY_SQL)
@@ -1711,19 +1765,24 @@ def engine_replay_state(spark, sf_dir):
 # All events there predate the DDL scenario (DDLs land at 60/75/90% of the
 # stream), so the as-of schema is v1: no fetch/http_status column exists yet.
 _REPLAY_ASOF_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet(['{_REPLAY_EVENTS}/events-00000.parquet',
-                                  '{_REPLAY_EVENTS}/events-00001.parquet'])
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    projected AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev)
+    WITH {_lww_ctes("url, warc_ts, seq AS _seq, op AS _op, text, lang",
+                    src=_REPLAY_FIRST_TWO)}
     SELECT url, warc_ts, _seq, text, lang
     FROM projected WHERE rn = 1 AND _op <> 'd'
     """
+
+
+def _confirmed_version(spark, table_path: str, epoch: int) -> int:
+    """The newest snapshot version of ``table_path`` whose confirmed epoch
+    is ``epoch`` (finalized): the version a time-travel read pins."""
+    from .lake.table import LakeTable
+
+    return max(
+        v
+        for v in LakeTable.load(spark, table_path).versions()
+        if LakeTable.load(spark, table_path, version=v).last_epoch()
+        == (epoch, True)
+    )
 
 
 @register("engine_replay_state_asof", _REPLAY_ASOF_SQL)
@@ -1742,12 +1801,7 @@ def engine_replay_state_asof(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table_path, _marks, _metrics = _shared_mor_replay(spark)
     # pick the newest snapshot whose confirmed epoch is 1 (time travel)
-    cur = LakeTable.load(spark, table_path)
-    ver = max(
-        v
-        for v in cur.versions()
-        if LakeTable.load(spark, table_path, version=v).last_epoch() == (1, True)
-    )
+    ver = _confirmed_version(spark, table_path, 1)
     asof = LakeTable.load(spark, table_path, version=ver)
     return read_state(asof).select("url", "warc_ts", "_seq", "text", "lang")
 
@@ -1757,25 +1811,9 @@ def engine_replay_state_asof(spark, sf_dir):
 # lo-side file prune is a plan optimization, not a semantics change).
 _SINCE_TS = "2020-01-02 00:00:00"
 _SINCE_US = 1_577_923_200_000_000  # epoch micros of _SINCE_TS (UTC)
-_STATE_SINCE_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    projected AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
-             CASE WHEN schema_ver >= 4
-                    THEN CAST(extras['http_status'][1] AS BIGINT)
-                  WHEN schema_ver >= 2
-                    THEN CAST(extras['fetch_status'][1] AS BIGINT)
-                  ELSE NULL END AS http_status,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev)
-    SELECT url, warc_ts, _seq, text, lang, http_status
-    FROM projected
-    WHERE rn = 1 AND _op <> 'd' AND warc_ts >= TIMESTAMP '{_SINCE_TS}'
-    """
+_STATE_SINCE_SQL = _replay_state_sql(
+    where=f" AND warc_ts >= TIMESTAMP '{_SINCE_TS}'"
+)
 
 
 @register("engine_state_since", _STATE_SINCE_SQL)
@@ -1809,15 +1847,7 @@ def engine_state_since(spark, sf_dir):
 # the from-scratch answer exactly (same invariant family as
 # engine_incremental_agg, applied to a dedup index instead of an aggregate).
 _INC_MINHASH_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    projected AS (
-      SELECT url, text, op AS _op,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev),
+    WITH {_lww_ctes("url, text, op AS _op")},
     state AS (SELECT url, text FROM projected WHERE rn = 1 AND _op <> 'd'),
     raw AS (
       SELECT url,
@@ -1911,8 +1941,7 @@ def engine_incremental_minhash(spark, sf_dir):
 _PARTIAL_SQL = f"""
     WITH ev AS (
       SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     masked AS (
       SELECT url, warc_ts, seq AS _seq, op AS _op,
              CASE WHEN op = 'u' AND seq % 3 = 1 THEN NULL ELSE text END
@@ -1947,6 +1976,28 @@ _PARTIAL_SQL = f"""
     """
 
 
+def _partial_batch(spark, path: str) -> DataFrame:
+    """One fixture file as a partial-image epoch: the ``masked`` CTE of
+    ``_PARTIAL_SQL`` (a 'u' row loses text when seq % 3 = 1 and lang when
+    seq % 3 = 2)."""
+    from .operators.decode import EVENTS_DDL
+
+    is_u = F.col("op") == "u"
+    return (
+        spark.read.schema(EVENTS_DDL).parquet(path)
+        .withColumn(
+            "text",
+            F.when(is_u & (F.col("seq") % 3 == 1), F.lit(None))
+            .otherwise(F.col("text")),
+        )
+        .withColumn(
+            "lang",
+            F.when(is_u & (F.col("seq") % 3 == 2), F.lit(None))
+            .otherwise(F.col("lang")),
+        )
+    )
+
+
 @register("engine_partial_update_state", _PARTIAL_SQL)
 def engine_partial_update_state(spark, sf_dir):
     """Partial-image CDC end-to-end (the Debezium / OpenLogReplicator
@@ -1961,39 +2012,22 @@ def engine_partial_update_state(spark, sf_dir):
     re-creates after a delete inherit nothing. The DuckDB twin replays the
     identical fold; a single wrongly-carried column anywhere hash-fails.
     Shape at 100 TB: one key exchange serves both fold windows."""
-    from .operators.decode import EVENTS_DDL
-
     ev = _ensure_replay_events()
     p = _gate_pipeline(
         spark, "partial", ev,
         merge_mode="mor", compact_every=0, partial_updates=True,
     )
-    is_u = F.col("op") == "u"
     for i, f in enumerate(_event_files(ev)):
-        batch = (
-            spark.read.schema(EVENTS_DDL).parquet(f)
-            .withColumn(
-                "text",
-                F.when(is_u & (F.col("seq") % 3 == 1), F.lit(None))
-                .otherwise(F.col("text")),
-            )
-            .withColumn(
-                "lang",
-                F.when(is_u & (F.col("seq") % 3 == 2), F.lit(None))
-                .otherwise(F.col("lang")),
-            )
-        )
-        p.apply_epoch(batch, epoch_id=i)
+        p.apply_epoch(_partial_batch(spark, f), epoch_id=i)
     return p.target_state().select(
         "url", "warc_ts", "_seq", "text", "lang", "http_status"
     )
 
 
-def _follow_chain_sql() -> str:
-    """Per-epoch CDF oracle: winners after files 0..k diffed against
-    winners after files 0..k-1, for k = 0..3 (k=0 diffs against the empty
-    created table — inserts only). Same diff spelling as
-    _SNAPSHOT_DIFF_SQL, code-generated per epoch pair."""
+def _state_chain_ctes(extra: str = "") -> str:
+    """``s{k}``/``st{k}`` for k = 0..3: the LWW ranks and the live winners
+    (url, warc_ts, _seq plus the ``extra`` columns) after replaying fixture
+    files 0..k — the consecutive states the per-epoch CDF oracles diff."""
     ctes = []
     for k in range(4):
         flist = ", ".join(
@@ -2001,14 +2035,21 @@ def _follow_chain_sql() -> str:
         )
         ctes.append(f"""
     s{k} AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op,
+      SELECT url, warc_ts, seq AS _seq, op AS _op{extra},
              row_number() OVER (PARTITION BY url
                                 ORDER BY warc_ts DESC, seq DESC) AS rn
       FROM read_parquet([{flist}])
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    st{k} AS (SELECT url, warc_ts, _seq FROM s{k}
+      WHERE {_COMMITTED_DML}),
+    st{k} AS (SELECT url, warc_ts, _seq{extra} FROM s{k}
               WHERE rn = 1 AND _op <> 'd')""")
+    return ",".join(ctes)
+
+
+def _follow_chain_sql() -> str:
+    """Per-epoch CDF oracle: winners after files 0..k diffed against
+    winners after files 0..k-1, for k = 0..3 (k=0 diffs against the empty
+    created table — inserts only). Same diff spelling as
+    _SNAPSHOT_DIFF_SQL, code-generated per epoch pair."""
     diffs = ["SELECT 0 AS epoch, 'insert' AS _change, url, _seq FROM st0"]
     for k in range(1, 4):
         diffs.append(f"""
@@ -2021,7 +2062,7 @@ def _follow_chain_sql() -> str:
     FROM st{k - 1} o FULL OUTER JOIN st{k} n ON o.url = n.url
     WHERE o.url IS NULL OR n.url IS NULL
        OR o.warc_ts <> n.warc_ts OR o._seq <> n._seq""")
-    return "WITH " + ",".join(ctes) + " ".join(
+    return "WITH " + _state_chain_ctes() + " ".join(
         ["", diffs[0]] + [f"UNION ALL {d}" for d in diffs[1:]]
     )
 
@@ -2075,21 +2116,6 @@ def _scd2_chain_sql() -> str:
     closes the previous version, a delete closes it with no successor, and
     LWW/out-of-order semantics come for free because a state diff only
     exists when the applied winner actually moved."""
-    ctes = []
-    for k in range(4):
-        flist = ", ".join(
-            f"'{_REPLAY_EVENTS}/events-{i:05d}.parquet'" for i in range(k + 1)
-        )
-        ctes.append(f"""
-    s{k} AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM read_parquet([{flist}])
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    st{k} AS (SELECT url, warc_ts, _seq, text, lang FROM s{k}
-              WHERE rn = 1 AND _op <> 'd')""")
     diffs = [
         "SELECT 0 AS epoch, 'insert' AS _change, url, warc_ts, _seq, "
         "text, lang FROM st0"
@@ -2110,7 +2136,7 @@ def _scd2_chain_sql() -> str:
        OR o.warc_ts <> n.warc_ts OR o._seq <> n._seq""")
     chain = " UNION ALL ".join(diffs)
     return (
-        "WITH " + ",".join(ctes) + f""",
+        "WITH " + _state_chain_ctes(", text, lang") + f""",
     chain AS ({chain}),
     fold AS (
       SELECT url, epoch, _change, warc_ts, _seq, text, lang,
@@ -2241,23 +2267,9 @@ def engine_partial_compact_state(spark, sf_dir):
         spark, "pcompact", ev,
         merge_mode="mor", compact_every=0, partial_updates=True,
     )
-    is_u = F.col("op") == "u"
     hi_ts = None
     for i, f in enumerate(_event_files(ev)):
-        batch = (
-            spark.read.schema(EVENTS_DDL).parquet(f)
-            .withColumn(
-                "text",
-                F.when(is_u & (F.col("seq") % 3 == 1), F.lit(None))
-                .otherwise(F.col("text")),
-            )
-            .withColumn(
-                "lang",
-                F.when(is_u & (F.col("seq") % 3 == 2), F.lit(None))
-                .otherwise(F.col("lang")),
-            )
-        )
-        p.apply_epoch(batch, epoch_id=i)
+        p.apply_epoch(_partial_batch(spark, f), epoch_id=i)
         if i == 1:  # watermark = end of epoch 1 (T4: nothing older arrives)
             hi_ts = (
                 spark.read.schema(EVENTS_DDL).parquet(f)
@@ -2435,8 +2447,7 @@ _UNDO_AUDIT_SQL = f"""
       SELECT url, warc_ts, seq, op, text,
              decode(before['text'][1]) AS before_text
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     chained AS (
       SELECT op, before_text,
              lag(CASE WHEN op = 'd' THEN NULL ELSE text END)
@@ -2457,6 +2468,20 @@ _UNDO_AUDIT_SQL = f"""
     """
 
 
+def _committed_dml(spark, path: str | None = None) -> DataFrame:
+    """The Spark twin of ``_COMMITTED_DML``: the committed DML rows of the
+    parquet change log at ``path`` (default: the whole replay fixture)."""
+    from .operators.decode import EVENTS_DDL
+
+    return spark.read.schema(EVENTS_DDL).parquet(
+        path or _ensure_replay_events()
+    ).filter(
+        F.col("op").isNotNull() & (F.col("op") != "ddl")
+        & ~F.col("rolled_back")
+        & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
+    )
+
+
 @register("cdc_undo_chain_audit", _UNDO_AUDIT_SQL)
 def cdc_undo_chain_audit(spark, sf_dir):
     """Undo-chain consistency audit over the committed change log: every
@@ -2471,16 +2496,9 @@ def cdc_undo_chain_audit(spark, sf_dir):
     partitioning to LWW, so the audit co-locates with the engine's own
     shuffle. Reference analogue: src/parser/OpCode0501.cpp undo-record
     supplemental-log checks."""
-    from .operators.decode import EVENTS_DDL
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = (
-        spark.read.schema(EVENTS_DDL).parquet(_ensure_replay_events())
-        .filter(
-            F.col("op").isNotNull() & (F.col("op") != "ddl")
-            & ~F.col("rolled_back")
-            & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-        )
+        _committed_dml(spark)
         .select(
             "url", "warc_ts", "seq", "op", "text",
             F.element_at(F.col("before"), "text").cast("string")
@@ -2523,8 +2541,7 @@ _HTML_MARKUP_SQL = f"""
     WITH pages AS (
       SELECT lang, decode(html) AS h, text
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL AND html IS NOT NULL)
+      WHERE {_COMMITTED_DML} AND html IS NOT NULL)
     SELECT lang,
            CAST(count(*) AS BIGINT) AS n_pages,
            round(avg(len(regexp_extract_all(h, '<[^>]+>'))), 4) AS avg_tags,
@@ -2549,17 +2566,10 @@ def docs_html_markup_stats(spark, sf_dir):
     100 TB: pure map-side regexp counts into a langs-sized partial agg.
     Reference analogue: the reference hex-dumps LOB payloads without
     inspecting them; markup profiling is the web-pipeline extension."""
-    from .operators.decode import EVENTS_DDL
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pages = (
-        spark.read.schema(EVENTS_DDL).parquet(_ensure_replay_events())
-        .filter(
-            F.col("op").isNotNull() & (F.col("op") != "ddl")
-            & ~F.col("rolled_back")
-            & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-            & F.col("html").isNotNull()
-        )
+        _committed_dml(spark)
+        .filter(F.col("html").isNotNull())
         .select(
             "lang", F.decode(F.col("html"), "UTF-8").alias("h"), "text"
         )
@@ -2679,8 +2689,7 @@ def _extract_sql() -> str:
     WITH pages AS (
       SELECT seq, lang, decode(html) AS h, text
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL AND html IS NOT NULL),
+      WHERE {_COMMITTED_DML} AND html IS NOT NULL),
     ex AS (
       SELECT seq, lang, text, {clean} AS clean,
              regexp_extract(h, '(?is)<title>(.*?)</title>', 1) AS title
@@ -2709,17 +2718,10 @@ def docs_html_text_extract(spark, sf_dir):
     chain, zero shuffles, embarrassingly parallel. Reference analogue:
     Builder::parseString's charset decode is the same per-payload pure
     function (Builder.h:1006-1116)."""
-    from .operators.decode import EVENTS_DDL
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pages = (
-        spark.read.schema(EVENTS_DDL).parquet(_ensure_replay_events())
-        .filter(
-            F.col("op").isNotNull() & (F.col("op") != "ddl")
-            & ~F.col("rolled_back")
-            & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-            & F.col("html").isNotNull()
-        )
+        _committed_dml(spark)
+        .filter(F.col("html").isNotNull())
         .select(
             "seq", "lang", F.decode(F.col("html"), "UTF-8").alias("h"),
             "text",
@@ -2751,8 +2753,7 @@ def docs_html_text_extract(spark, sf_dir):
 _PROVENANCE_SQL = f"""
     WITH ev AS (
       SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet', filename=true)
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     projected AS (
       SELECT url, seq AS _seq, op AS _op,
              CAST(regexp_extract(filename, 'events-(\\d+)\\.parquet', 1)
@@ -2986,25 +2987,9 @@ def events_ab_srm_check(spark, sf_dir):
 # tracked pattern may contribute winners. Filtering the LOG commutes with
 # LWW (winners are per-url), so the oracle filters the event CTE.
 _FILTER_RLIKE = r"^https://site1[0-9]\."
-_REPLAY_FILTERED_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL
-        AND regexp_matches(url, '^https://site1[0-9]\\.')),
-    projected AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
-             CASE WHEN schema_ver >= 4
-                    THEN CAST(extras['http_status'][1] AS BIGINT)
-                  WHEN schema_ver >= 2
-                    THEN CAST(extras['fetch_status'][1] AS BIGINT)
-                  ELSE NULL END AS http_status,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev)
-    SELECT url, warc_ts, _seq, text, lang, http_status
-    FROM projected WHERE rn = 1 AND _op <> 'd'
-    """
+_REPLAY_FILTERED_SQL = _replay_state_sql(
+    ev_where=" AND regexp_matches(url, '^https://site1[0-9]\\.')"
+)
 
 
 @register("engine_replay_state_url_filtered", _REPLAY_FILTERED_SQL)
@@ -3066,19 +3051,13 @@ def engine_rebucket_replay(spark, sf_dir):
 # at v5) must read NULL, across BOTH code paths that could resurface it
 # (project_dml's per-version extras CASE for log rows, and the field-id
 # read projection for rows already materialized in files under the old id).
-_DROP_READD_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_DROP_READD_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    projected AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
+_DROP_READD_COLS = """url, warc_ts, seq AS _seq, op AS _op, text, lang,
              CASE WHEN schema_ver = 6
                     THEN CAST(extras['http_status'][1] AS BIGINT)
-                  ELSE NULL END AS http_status,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev)
+                  ELSE NULL END AS http_status"""
+_DROP_READD_GLOB = f"'{_DROP_READD_EVENTS}/*.parquet'"
+_DROP_READD_SQL = f"""
+    WITH {_lww_ctes(_DROP_READD_COLS, src=_DROP_READD_GLOB)}
     SELECT url, warc_ts, _seq, text, lang, http_status
     FROM projected WHERE rn = 1 AND _op <> 'd'
     """
@@ -3138,26 +3117,11 @@ def engine_drop_readd_column(spark, sf_dir):
 # hex chars as an unsigned 32-bit int, mod n). Disjointness/completeness are
 # implicit in the value gate: a row routed to both shards (or neither) makes
 # the union's row count diverge from the single-table replay.
-_ROUTED_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    projected AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
-             CASE WHEN schema_ver >= 4
-                    THEN CAST(extras['http_status'][1] AS BIGINT)
-                  WHEN schema_ver >= 2
-                    THEN CAST(extras['fetch_status'][1] AS BIGINT)
-                  ELSE NULL END AS http_status,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev)
-    SELECT url, warc_ts, _seq, text, lang, http_status,
+_ROUTED_SQL = _replay_state_sql(
+    extra_cols=""",
            CASE CAST('0x' || substring(md5(url), 1, 8) AS BIGINT) % 2
-                WHEN 0 THEN 'shard0' WHEN 1 THEN 'shard1' END AS route
-    FROM projected WHERE rn = 1 AND _op <> 'd'
-    """
+                WHEN 0 THEN 'shard0' WHEN 1 THEN 'shard1' END AS route"""
+)
 
 
 @register("engine_multi_table_state", _ROUTED_SQL)
@@ -3195,15 +3159,7 @@ def engine_multi_table_state(spark, sf_dir):
 
 
 _INC_INVIDX_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    projected AS (
-      SELECT url, text, op AS _op,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev),
+    WITH {_lww_ctes("url, text, op AS _op")},
     state AS (SELECT url, text FROM projected WHERE rn = 1 AND _op <> 'd'),
     raw AS (
       SELECT url,
@@ -3329,8 +3285,7 @@ _COMMIT_LOG_SQL = f"""
                 AS INTEGER) AS epoch_id,
            CAST(COUNT(DISTINCT url) AS BIGINT) AS rows_added
     FROM read_parquet('{_REPLAY_EVENTS}/*.parquet', filename=true)
-    WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-      AND url IS NOT NULL AND warc_ts IS NOT NULL
+    WHERE {_COMMITTED_DML}
     GROUP BY 1
     """
 
@@ -3499,15 +3454,7 @@ def engine_dictionary_log(spark, sf_dir):
 # aggregate must equal it EXACTLY (counts and an order-sensitive checksum,
 # sum of the winners' _seq).
 _INC_AGG_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    projected AS (
-      SELECT url, lang, seq AS _seq, op AS _op,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev)
+    WITH {_lww_ctes("url, lang, seq AS _seq, op AS _op")}
     SELECT lang, CAST(count(*) AS BIGINT) AS n_urls,
            CAST(sum(_seq) AS BIGINT) AS seq_sum
     FROM projected WHERE rn = 1 AND _op <> 'd'
@@ -3569,8 +3516,7 @@ _MANIFEST_STATS_SQL = f"""
       SELECT *, CAST(regexp_extract(filename, 'events-(\\d+)\\.parquet', 1)
                      AS INTEGER) AS epoch_id
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet', filename=true)
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     w AS (
       SELECT epoch_id, url, warc_ts,
              row_number() OVER (PARTITION BY epoch_id, url
@@ -3677,8 +3623,7 @@ def docs_pii_redact(spark, sf_dir):
 _DOMAIN_CHURN_SQL = f"""
     WITH ev AS (
       SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     by_host AS (
       SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host,
              CAST(count(*) AS BIGINT) AS n_changes,
@@ -4525,18 +4470,12 @@ _FUNNEL_SQL = """
     """
 
 
-@register("events_funnel", _FUNNEL_SQL)
-def events_funnel(spark, sf_dir):
-    """Ordered conversion funnel per user: first view, first click AFTER
-    that view, first purchase AFTER that click (strict event-order funnel,
-    not mere presence). Three stacked unordered windows over the SAME
-    partition key — Catalyst plans ONE hash exchange on user_id and chains
-    the window operators without re-shuffling or sorting (unbounded frames
-    need no sort); the final distinct collapses per-user duplicates. At
-    100 TB: one shuffle of the events scan + one of user-sized rows."""
-    ev = T(spark, sf_dir, "events")
+def _funnel_firsts(ev: DataFrame) -> DataFrame:
+    """The Spark side of ``_FUNNEL_SQL``'s v/c/p CTEs: per user, the first
+    view, the first click after it and the first purchase after that
+    click, as three stacked windows over one user_id partitioning."""
     w = Window.partitionBy("user_id")
-    staged = (
+    return (
         ev.withColumn(
             "first_view",
             F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
@@ -4562,6 +4501,18 @@ def events_funnel(spark, sf_dir):
             ).over(w),
         )
     )
+
+
+@register("events_funnel", _FUNNEL_SQL)
+def events_funnel(spark, sf_dir):
+    """Ordered conversion funnel per user: first view, first click AFTER
+    that view, first purchase AFTER that click (strict event-order funnel,
+    not mere presence). Three stacked unordered windows over the SAME
+    partition key — Catalyst plans ONE hash exchange on user_id and chains
+    the window operators without re-shuffling or sorting (unbounded frames
+    need no sort); the final distinct collapses per-user duplicates. At
+    100 TB: one shuffle of the events scan + one of user-sized rows."""
+    staged = _funnel_firsts(T(spark, sf_dir, "events"))
     stage = (
         F.when(F.col("first_purchase").isNotNull(), 3)
         .when(F.col("first_click").isNotNull(), 2)
@@ -4646,18 +4597,12 @@ def events_dau_wau(spark, sf_dir):
     )
 
 
-@register("events_retention", _RETENTION_SQL)
-def events_retention(spark, sf_dir):
-    """Weekly cohort retention: users grouped by the week of their first
-    event; n_active_users at each week offset since. Shape at 100 TB: the
-    cohort assignment is a window-min over ONE hash shuffle on user_id
-    (no join back to a firsts table — the same exchange serves the window
-    and feeds the distinct), then a partial-agg count over (cohort, offset)
-    rows. Week arithmetic pinned to Monday-truncated dates so Spark and
-    DuckDB agree on boundaries."""
-    ev = T(spark, sf_dir, "events")
+def _cohort_activity(ev: DataFrame) -> DataFrame:
+    """The Spark side of ``_RETENTION_SQL``'s activity CTE: each user's
+    (cohort_week, week_offset) pairs, weeks Monday-truncated and the
+    offset a BIGINT count of whole weeks since the first event."""
     w = Window.partitionBy("user_id")
-    act = (
+    return (
         ev.withColumn("first_ts", F.min("ts").over(w))
         .select(
             "user_id",
@@ -4672,6 +4617,18 @@ def events_retention(spark, sf_dir):
         )
         .distinct()
     )
+
+
+@register("events_retention", _RETENTION_SQL)
+def events_retention(spark, sf_dir):
+    """Weekly cohort retention: users grouped by the week of their first
+    event; n_active_users at each week offset since. Shape at 100 TB: the
+    cohort assignment is a window-min over ONE hash shuffle on user_id
+    (no join back to a firsts table — the same exchange serves the window
+    and feeds the distinct), then a partial-agg count over (cohort, offset)
+    rows. Week arithmetic pinned to Monday-truncated dates so Spark and
+    DuckDB agree on boundaries."""
+    act = _cohort_activity(T(spark, sf_dir, "events"))
     return act.groupBy("cohort_week", "week_offset").agg(
         F.count("*").alias("n_active_users")
     )
@@ -4904,8 +4861,7 @@ _RECRAWL_SQL = f"""
     WITH ev AS (
       SELECT url, warc_ts, seq
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     gaps AS (
       SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host,
              (epoch_us(warc_ts) - epoch_us(lag(warc_ts) OVER
@@ -5395,13 +5351,7 @@ def docs_exact_substr_removal(spark, sf_dir):
 
 _MINHASH_CALIB_SQL = f"""
     WITH {_MINHASH_CAND_TMPL.format(id_cap=1000)},
-    sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    inter AS (
-      SELECT c.a, c.b, count(*) AS n_inter
-      FROM cand c
-      JOIN tok ta ON ta.doc_id = c.a
-      JOIN tok tb ON tb.doc_id = c.b AND tb.token = ta.token
-      GROUP BY c.a, c.b),
+    {_MINHASH_INTER_CTES},
     est AS (
       SELECT c.a, c.b,
              ((CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END)
@@ -5428,20 +5378,10 @@ _MINHASH_CALIB_SQL = f"""
     """
 
 
-@register("docs_minhash_est_vs_exact", _MINHASH_CALIB_SQL)
-def docs_minhash_est_vs_exact(spark, sf_dir):
-    """MinHash calibration: for every LSH candidate pair, the signature's
-    Jaccard ESTIMATE (matching components / k) against the EXACT token-set
-    Jaccard — the diagnostic a pipeline reads to size its signature (k) and
-    band layout before trusting estimate-thresholded dedup at scale. Shape:
-    the signature is one partial-agg groupBy (signatures are computed once
-    and reused for both banding and estimation); the estimate join touches
-    candidates only (two broadcast-or-shuffle equi-joins on doc id); the
-    exact pass is the shared candidates-only Jaccard kernel — never
-    all-pairs. Calibration is a sampled diagnostic by definition, so it runs
-    on a TIGHTER id-range than docs_jaccard_verified_dups (doc_id < 1000):
-    the estimate-error distribution converges long before the full
-    candidate set is scored."""
+def _minhash_calib_pairs(spark, sf_dir):
+    """The Spark side of ``_MINHASH_CAND_TMPL.format(id_cap=1000)``: the
+    documents with doc_id < 1000, their 8-hash signatures, and the
+    band-collision candidate pairs (a, b) with a < b."""
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     tok = S.tokens(d, "doc_id", "text", distinct=False)
     sig = S.minhash_signature(tok, "doc_id", n_hashes=8)
@@ -5456,6 +5396,24 @@ def docs_minhash_est_vs_exact(spark, sf_dir):
         .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
         .distinct()
     )
+    return d, sig, cand
+
+
+@register("docs_minhash_est_vs_exact", _MINHASH_CALIB_SQL)
+def docs_minhash_est_vs_exact(spark, sf_dir):
+    """MinHash calibration: for every LSH candidate pair, the signature's
+    Jaccard ESTIMATE (matching components / k) against the EXACT token-set
+    Jaccard — the diagnostic a pipeline reads to size its signature (k) and
+    band layout before trusting estimate-thresholded dedup at scale. Shape:
+    the signature is one partial-agg groupBy (signatures are computed once
+    and reused for both banding and estimation); the estimate join touches
+    candidates only (two broadcast-or-shuffle equi-joins on doc id); the
+    exact pass is the shared candidates-only Jaccard kernel — never
+    all-pairs. Calibration is a sampled diagnostic by definition, so it runs
+    on a TIGHTER id-range than docs_jaccard_verified_dups (doc_id < 1000):
+    the estimate-error distribution converges long before the full
+    candidate set is scored."""
+    d, sig, cand = _minhash_calib_pairs(spark, sf_dir)
     matches = sum(
         F.when(F.col(f"sa.h{k}") == F.col(f"sb.h{k}"), 1).otherwise(0)
         for k in range(8)
@@ -5490,13 +5448,7 @@ def _bit_sql(side: str, k: int) -> str:
 
 _MINHASH_BBIT_SQL = f"""
     WITH {_MINHASH_CAND_TMPL.format(id_cap=1000)},
-    sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    inter AS (
-      SELECT c.a, c.b, count(*) AS n_inter
-      FROM cand c
-      JOIN tok ta ON ta.doc_id = c.a
-      JOIN tok tb ON tb.doc_id = c.b AND tb.token = ta.token
-      GROUP BY c.a, c.b),
+    {_MINHASH_INTER_CTES},
     est AS (
       SELECT c.a, c.b,
              ({" + ".join(f"(CASE WHEN sa.h{k} = sb.h{k} THEN 1 ELSE 0 END)" for k in range(8))})
@@ -5536,20 +5488,7 @@ def docs_minhash_bbit_calib(spark, sf_dir):
     the one partial-agg signature and the candidates-only exact kernel —
     the extra cost over docs_minhash_est_vs_exact is 8 boolean compares
     per pair."""
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
-    tok = S.tokens(d, "doc_id", "text", distinct=False)
-    sig = S.minhash_signature(tok, "doc_id", n_hashes=8)
-    cand = (
-        S.minhash_bands(sig, "doc_id", n_hashes=8, band_size=4)
-        .alias("l")
-        .join(
-            S.minhash_bands(sig, "doc_id", n_hashes=8, band_size=4).alias("r"),
-            ["band_id", "band_hash"],
-        )
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
+    d, sig, cand = _minhash_calib_pairs(spark, sf_dir)
     odd = list("13579bdf")
     bit = lambda side, k: F.substring(F.col(f"{side}.h{k}"), 32, 1).isin(odd)
     matches_full = sum(
@@ -5589,8 +5528,7 @@ _SCD2_SQL = f"""
     WITH ev AS (
       SELECT url, warc_ts, seq, op
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     v AS (
       SELECT url, op, warc_ts AS valid_from,
              CAST(row_number() OVER w AS INT) AS version_no,
@@ -5644,8 +5582,7 @@ _OOO_SQL = f"""
     WITH ev AS (
       SELECT url, warc_ts, seq
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     lag_us AS (
       SELECT epoch_us(max(warc_ts) OVER (PARTITION BY url ORDER BY seq
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
@@ -5712,21 +5649,9 @@ def cdc_out_of_order_profile(spark, sf_dir):
     )
 
 
-_SEMDEDUP_SQL = """
-    WITH ranked_init AS (
-      SELECT embedding AS cvec,
-             row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-               - 1 AS cid
-      FROM embeddings),
-    init AS (SELECT cid, cvec FROM ranked_init WHERE cid < 8),
-    assign AS (
-      SELECT e.vec_id, e.embedding, i.cid,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                               CAST(i.cvec AS DOUBLE[])) DESC,
-                        i.cid) AS rn
-      FROM embeddings e CROSS JOIN init i),
+_SEMDEDUP_SQL = f"""
+    WITH {_IVF_INIT_CTES},
+    {_IVF_ASSIGN_CTE},
     cells AS (SELECT vec_id, embedding, cid FROM assign WHERE rn = 1),
     nbr AS (
       SELECT a.vec_id, b.vec_id AS other
@@ -5764,13 +5689,7 @@ def docs_semdedup(spark, sf_dir):
     from .functions.similarity import centroid_topn_udf, semdedup_cells
 
     emb = T(spark, sf_dir, "embeddings")
-    cents_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(8)
-        .collect()
-    )
-    centroids = [[float(x) for x in r["embedding"]] for r in cents_rows]
+    centroids = _pinned_centroids(emb)
     assign1 = centroid_topn_udf(centroids, 1)
     cells = emb.select(
         "vec_id", "embedding",
@@ -5886,9 +5805,12 @@ def cdc_seq_gaps(spark, sf_dir):
 
 _RECALL_K = 10
 
-_RECALL_SQL = f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
-               FROM embeddings WHERE vec_id < 32),
+# The recall@k harness of the recall oracles: `q` (the 32-query evaluation
+# set) with `exact` (its brute-force top-k), and the per-query hit count of
+# `exact` against the `approx` CTE each oracle defines. After editing one,
+# re-run every entry that uses it.
+_RECALL_EXACT_CTES = f"""q AS (SELECT vec_id AS query_id, embedding AS qvec
+          FROM embeddings WHERE vec_id < 32),
     exact AS (
       SELECT query_id, vec_id
       FROM q, embeddings
@@ -5896,8 +5818,20 @@ _RECALL_SQL = f"""
       QUALIFY row_number() OVER (
         PARTITION BY query_id
         ORDER BY list_cosine_similarity(CAST(qvec AS DOUBLE[]),
-                                           CAST(embedding AS DOUBLE[])) DESC, vec_id)
-        <= {_RECALL_K}),
+                                        CAST(embedding AS DOUBLE[])) DESC,
+                 vec_id) <= {_RECALL_K})"""
+_RECALL_HITS_SQL = f"""hits AS (
+      SELECT e.query_id, count(*) AS n
+      FROM exact e JOIN approx a
+        ON e.query_id = a.query_id AND e.vec_id = a.vec_id
+      GROUP BY e.query_id)
+    SELECT q.query_id,
+           CAST(coalesce(h.n, 0) AS BIGINT) AS n_hits,
+           round(coalesce(h.n, 0) / {_RECALL_K}.0, 4) AS recall
+    FROM q LEFT JOIN hits h USING (query_id)"""
+
+_RECALL_SQL = f"""
+    WITH {_RECALL_EXACT_CTES},
     b AS ({{lsh_tables}}),
     qb AS (SELECT vec_id AS query_id, embedding AS qvec, table_id, bucket
            FROM b WHERE vec_id < 32),
@@ -5913,15 +5847,7 @@ _RECALL_SQL = f"""
         ORDER BY list_cosine_similarity(CAST(qvec AS DOUBLE[]),
                                            CAST(embedding AS DOUBLE[])) DESC, vec_id)
         <= {_RECALL_K}),
-    hits AS (
-      SELECT e.query_id, count(*) AS n
-      FROM exact e JOIN approx a
-        ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-      GROUP BY e.query_id)
-    SELECT q.query_id,
-           CAST(coalesce(h.n, 0) AS BIGINT) AS n_hits,
-           round(coalesce(h.n, 0) / {_RECALL_K}.0, 4) AS recall
-    FROM q LEFT JOIN hits h USING (query_id)
+    {_RECALL_HITS_SQL}
     """
 
 
@@ -5939,11 +5865,18 @@ def ann_recall_eval(spark, sf_dir):
     ground truth rather than trusting the implementation (SURVEY §5)."""
     emb = T(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 32)
-    exact = S.brute_force_topk(emb, q, k=_RECALL_K).select("query_id", "vec_id")
     approx = S.lsh_bucketed_topk(
         emb, q, k=_RECALL_K,
         n_bits=_LSH_BITS, n_tables=_LSH_TABLES, dim=_EMB_DIM,
     ).select("query_id", "vec_id")
+    return _recall_per_query(emb, q, approx)
+
+
+def _recall_per_query(emb: DataFrame, q: DataFrame, approx: DataFrame) -> DataFrame:
+    """The Spark side of ``_RECALL_HITS_SQL``: per evaluation query, the
+    hits of ``approx`` (query_id, vec_id) in the exact brute-force top-k
+    and recall = hits / k (0 for a query with none)."""
+    exact = S.brute_force_topk(emb, q, k=_RECALL_K).select("query_id", "vec_id")
     hits = (
         exact.join(approx, ["query_id", "vec_id"])
         .groupBy("query_id")
@@ -6041,8 +5974,9 @@ def cdc_txn_size_profile(spark, sf_dir):
     )
 
 
-_EMB_OUTLIERS_SQL = """
-    WITH comp AS (
+# each label's mean embedding (`cent.centroid`, components 6 dp), shared
+# with the silhouette oracle
+_LABEL_CENTROID_CTES = """comp AS (
       SELECT label, pos, round(avg(val), 6) AS c
       FROM (SELECT label,
                    unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
@@ -6051,7 +5985,9 @@ _EMB_OUTLIERS_SQL = """
             FROM embeddings)
       GROUP BY label, pos),
     cent AS (SELECT label, list(c ORDER BY pos) AS centroid
-             FROM comp GROUP BY label),
+             FROM comp GROUP BY label)"""
+_EMB_OUTLIERS_SQL = f"""
+    WITH {_LABEL_CENTROID_CTES},
     scored AS (
       SELECT vec_id, e.label,
              list_cosine_similarity(
@@ -6631,20 +6567,8 @@ def docs_length_histogram(spark, sf_dir):
 
 
 _IVF_RECALL_SQL = f"""
-    WITH ranked_init AS (
-      SELECT embedding AS cvec,
-             row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-               - 1 AS cid
-      FROM embeddings),
-    init AS (SELECT cid, cvec FROM ranked_init WHERE cid < 8),
-    assign AS (
-      SELECT e.vec_id, e.embedding, i.cid,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                               CAST(i.cvec AS DOUBLE[])) DESC,
-                        i.cid) AS rn
-      FROM embeddings e CROSS JOIN init i),
+    WITH {_IVF_INIT_CTES},
+    {_IVF_ASSIGN_CTE},
     cells AS (SELECT vec_id, embedding, cid FROM assign WHERE rn = 1),
     probes AS (
       SELECT vec_id AS query_id, embedding AS qvec, cid
@@ -6658,26 +6582,8 @@ _IVF_RECALL_SQL = f"""
         ORDER BY list_cosine_similarity(CAST(qvec AS DOUBLE[]),
                                         CAST(embedding AS DOUBLE[])) DESC,
                  vec_id) <= {_RECALL_K}),
-    q AS (SELECT vec_id AS query_id, embedding AS qvec
-          FROM embeddings WHERE vec_id < 32),
-    exact AS (
-      SELECT query_id, vec_id
-      FROM q, embeddings
-      WHERE vec_id <> query_id
-      QUALIFY row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY list_cosine_similarity(CAST(qvec AS DOUBLE[]),
-                                           CAST(embedding AS DOUBLE[])) DESC, vec_id)
-        <= {_RECALL_K}),
-    hits AS (
-      SELECT e.query_id, count(*) AS n
-      FROM exact e JOIN approx a
-        ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-      GROUP BY e.query_id)
-    SELECT q.query_id,
-           CAST(coalesce(h.n, 0) AS BIGINT) AS n_hits,
-           round(coalesce(h.n, 0) / {_RECALL_K}.0, 4) AS recall
-    FROM q LEFT JOIN hits h USING (query_id)
+    {_RECALL_EXACT_CTES},
+    {_RECALL_HITS_SQL}
     """
 
 
@@ -6692,33 +6598,12 @@ def ann_recall_eval_ivf(spark, sf_dir):
     from .functions.similarity import ivf_topk
 
     emb = T(spark, sf_dir, "embeddings")
-    cents_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(8)
-        .collect()
-    )
-    centroids = [[float(x) for x in r["embedding"]] for r in cents_rows]
+    centroids = _pinned_centroids(emb)
     q = emb.filter(F.col("vec_id") < 32)
     approx = ivf_topk(emb, q, centroids, k=_RECALL_K, nprobe=2).select(
         "query_id", "vec_id"
     )
-    exact = S.brute_force_topk(emb, q, k=_RECALL_K).select("query_id", "vec_id")
-    hits = (
-        exact.join(approx, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n"))
-    )
-    return (
-        q.select(F.col("vec_id").alias("query_id"))
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_hits"),
-            F.round(F.coalesce(F.col("n"), F.lit(0)) / float(_RECALL_K), 4)
-            .alias("recall"),
-        )
-    )
+    return _recall_per_query(emb, q, approx)
 
 
 _BIGRAM_LM_SQL = """
@@ -7062,8 +6947,9 @@ def docs_cross_source_dups(spark, sf_dir):
     )
 
 
-_DSIR_SQL = """
-    WITH base AS (
+# the hashed-bigram features and per-bucket log-ratio `lr` shared with
+# docs_dsir_sample's oracle
+_DSIR_LR_CTES = """base AS (
       SELECT doc_id, lang,
              regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
       FROM documents WHERE length(trim(text)) > 0),
@@ -7087,7 +6973,9 @@ _DSIR_SQL = """
              CAST(round((ln((t + 0.5) / (tn + 512.0))
                          - ln((r + 0.5) / (rn + 512.0))) * 1e6) AS BIGINT)
                AS lr_micros
-      FROM bstat CROSS JOIN tot)
+      FROM bstat CROSS JOIN tot)"""
+_DSIR_SQL = f"""
+    WITH {_DSIR_LR_CTES}
     SELECT h.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
            CAST(sum(lr_micros) AS BIGINT) AS logw_micro_nats
     FROM hashed h JOIN lr USING (bucket)
@@ -7164,8 +7052,7 @@ _KEY_LIFECYCLE_SQL = f"""
     WITH ev AS (
       SELECT url, op, warc_ts, seq
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     w AS (
       SELECT url, op,
              row_number() OVER (PARTITION BY url
@@ -7339,24 +7226,16 @@ def docs_char_entropy(spark, sf_dir):
     )
 
 
-_IVFPQ_SQL = """
-    WITH ranked_init AS (
-      SELECT embedding AS cvec,
-             row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-               - 1 AS cid
-      FROM embeddings),
-    init AS (SELECT cid, cvec FROM ranked_init WHERE cid < 8),
+def _ivfpq_adc_ctes(n_queries: int) -> str:
+    """The IVFADC chain shared by the IVF-PQ top-k and recall oracles:
+    pinned quantizer → residual PQ codebooks and codes → the ADC distance
+    ``adc.a`` of every (query, candidate) pair for the first ``n_queries``
+    vectors, probing 2 cells each."""
+    return f"""{_IVF_INIT_CTES},
     cvecs AS (
       SELECT cid, list_transform(cvec, x -> CAST(x AS DOUBLE)) AS cv
       FROM init),
-    assign AS (
-      SELECT e.vec_id, e.embedding, i.cid,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                               CAST(i.cvec AS DOUBLE[])) DESC,
-                        i.cid) AS rn
-      FROM embeddings e CROSS JOIN init i),
+    {_IVF_ASSIGN_CTE},
     resid AS (
       SELECT a.vec_id, a.cid,
              list_transform(range(1, 65),
@@ -7390,7 +7269,7 @@ _IVFPQ_SQL = """
         FROM dists) WHERE rn = 1),
     probes AS (
       SELECT vec_id AS query_id, embedding AS qvec, cid
-      FROM assign WHERE vec_id < 3 AND rn <= 2),
+      FROM assign WHERE vec_id < {n_queries} AND rn <= 2),
     qresid AS (
       SELECT p.query_id, p.cid,
              list_transform(range(1, 65),
@@ -7414,7 +7293,11 @@ _IVFPQ_SQL = """
       SELECT query_id, vec_id,
              list_reduce([0.0::DOUBLE] || list(d ORDER BY s),
                          (a, b) -> a + b) AS a
-      FROM terms GROUP BY query_id, vec_id)
+      FROM terms GROUP BY query_id, vec_id)"""
+
+
+_IVFPQ_SQL = f"""
+    WITH {_ivfpq_adc_ctes(3)}
     SELECT query_id, vec_id, round(a, 4) AS adc_l2sq
     FROM adc
     QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY a, vec_id) <= 5
@@ -7438,13 +7321,7 @@ def ann_ivfpq_topk(spark, sf_dir):
     from .functions.similarity import ivfpq_residual_codebooks, ivfpq_topk
 
     emb = T(spark, sf_dir, "embeddings")
-    cents_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(8)
-        .collect()
-    )
-    centroids = [[float(x) for x in r["embedding"]] for r in cents_rows]
+    centroids = _pinned_centroids(emb)
     cbs = ivfpq_residual_codebooks(emb, centroids, m=8, n_codes=16)
     out = ivfpq_topk(
         emb, emb.filter(F.col("vec_id") < 3), centroids, cbs, k=5, nprobe=2
@@ -7506,33 +7383,12 @@ def emb_covariance(spark, sf_dir):
 # join classifies insert/update/delete, update meaning the LWW version pair
 # (warc_ts, seq) moved. Deletes carry the OLD state's row projected to the
 # current schema — those epochs predate every DDL, so http_status is NULL.
+_PRE_DDL_COLS = """url, warc_ts, seq AS _seq, op AS _op, text, lang,
+             CAST(NULL AS BIGINT) AS http_status"""
 _SNAPSHOT_DIFF_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    new_proj AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
-             CASE WHEN schema_ver >= 4
-                    THEN CAST(extras['http_status'][1] AS BIGINT)
-                  WHEN schema_ver >= 2
-                    THEN CAST(extras['fetch_status'][1] AS BIGINT)
-                  ELSE NULL END AS http_status,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev),
+    WITH {_lww_ctes(_REPLAY_COLS, proj="new_proj")},
     new_state AS (SELECT * FROM new_proj WHERE rn = 1 AND _op <> 'd'),
-    old_ev AS (
-      SELECT * FROM read_parquet(['{_REPLAY_EVENTS}/events-00000.parquet',
-                                  '{_REPLAY_EVENTS}/events-00001.parquet'])
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    old_proj AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
-             CAST(NULL AS BIGINT) AS http_status,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM old_ev),
+    {_lww_ctes(_PRE_DDL_COLS, src=_REPLAY_FIRST_TWO, ev="old_ev", proj="old_proj")},
     old_state AS (SELECT * FROM old_proj WHERE rn = 1 AND _op <> 'd')
     SELECT CASE WHEN o.url IS NULL THEN 'insert'
                 WHEN n.url IS NULL THEN 'delete'
@@ -7564,17 +7420,11 @@ def engine_snapshot_diff(spark, sf_dir):
     both sides resolve LWW only over their dirty subset; update detection
     compares the (warc_ts, seq) version identity so rewritten-but-unchanged
     rows are never reported."""
-    from .lake.table import LakeTable
     from .operators.merge import snapshot_diff
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table_path, _marks, _metrics = _shared_mor_replay(spark)
-    cur = LakeTable.load(spark, table_path)
-    ver = max(
-        v
-        for v in cur.versions()
-        if LakeTable.load(spark, table_path, version=v).last_epoch() == (1, True)
-    )
+    ver = _confirmed_version(spark, table_path, 1)
     return snapshot_diff(spark, table_path, ver).select(
         "_change", "url", "warc_ts", "_seq", "text", "lang", "http_status"
     )
@@ -7586,105 +7436,13 @@ def engine_snapshot_diff(spark, sf_dir):
 # stages (cell pruning + residual codes), so this gate prices the composite
 # — IVF alone (ann_recall_eval_ivf) isolates the pruning loss.
 _IVFPQ_RECALL_SQL = f"""
-    WITH ranked_init AS (
-      SELECT embedding AS cvec,
-             row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-               - 1 AS cid
-      FROM embeddings),
-    init AS (SELECT cid, cvec FROM ranked_init WHERE cid < 8),
-    cvecs AS (
-      SELECT cid, list_transform(cvec, x -> CAST(x AS DOUBLE)) AS cv
-      FROM init),
-    assign AS (
-      SELECT e.vec_id, e.embedding, i.cid,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                               CAST(i.cvec AS DOUBLE[])) DESC,
-                        i.cid) AS rn
-      FROM embeddings e CROSS JOIN init i),
-    resid AS (
-      SELECT a.vec_id, a.cid,
-             list_transform(range(1, 65),
-               i -> CAST(a.embedding[CAST(i AS INT)] AS DOUBLE)
-                    - v.cv[CAST(i AS INT)]) AS r
-      FROM assign a JOIN cvecs v USING (cid) WHERE a.rn = 1),
-    pinned AS (
-      SELECT r.r AS pv, rk.j
-      FROM (SELECT vec_id,
-                   row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                                      vec_id) - 1 AS j
-            FROM embeddings) rk
-      JOIN resid r USING (vec_id)
-      WHERE rk.j < 16),
-    subs AS (SELECT unnest(range(0, 8)) AS s),
-    cb AS (
-      SELECT s, j, list_slice(pv, s*8 + 1, s*8 + 8) AS cvec
-      FROM pinned CROSS JOIN subs),
-    dists AS (
-      SELECT r.vec_id, r.cid, c.s, c.j,
-             list_reduce(
-               [0.0::DOUBLE] || list_transform(range(1, 9),
-                 i -> (r.r[CAST(c.s*8 + i AS INT)] - c.cvec[CAST(i AS INT)])
-                    * (r.r[CAST(c.s*8 + i AS INT)] - c.cvec[CAST(i AS INT)])),
-               (a, b) -> a + b) AS d
-      FROM resid r CROSS JOIN cb c),
-    codes AS (
-      SELECT vec_id, cid, s, j AS code FROM (
-        SELECT vec_id, cid, s, j,
-               row_number() OVER (PARTITION BY vec_id, s ORDER BY d, j) AS rn
-        FROM dists) WHERE rn = 1),
-    probes AS (
-      SELECT vec_id AS query_id, embedding AS qvec, cid
-      FROM assign WHERE vec_id < 32 AND rn <= 2),
-    qresid AS (
-      SELECT p.query_id, p.cid,
-             list_transform(range(1, 65),
-               i -> CAST(p.qvec[CAST(i AS INT)] AS DOUBLE)
-                    - v.cv[CAST(i AS INT)]) AS qr
-      FROM probes p JOIN cvecs v USING (cid)),
-    qdists AS (
-      SELECT q.query_id, q.cid, c.s, c.j,
-             list_reduce(
-               [0.0::DOUBLE] || list_transform(range(1, 9),
-                 i -> (q.qr[CAST(c.s*8 + i AS INT)] - c.cvec[CAST(i AS INT)])
-                    * (q.qr[CAST(c.s*8 + i AS INT)] - c.cvec[CAST(i AS INT)])),
-               (a, b) -> a + b) AS d
-      FROM qresid q CROSS JOIN cb c),
-    terms AS (
-      SELECT q.query_id, co.vec_id, q.s, q.d
-      FROM qdists q
-      JOIN codes co ON co.cid = q.cid AND co.s = q.s AND co.code = q.j
-      WHERE co.vec_id <> q.query_id),
-    adc AS (
-      SELECT query_id, vec_id,
-             list_reduce([0.0::DOUBLE] || list(d ORDER BY s),
-                         (a, b) -> a + b) AS a
-      FROM terms GROUP BY query_id, vec_id),
+    WITH {_ivfpq_adc_ctes(32)},
     approx AS (
       SELECT query_id, vec_id FROM adc
       QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY a, vec_id)
         <= {_RECALL_K}),
-    q AS (SELECT vec_id AS query_id, embedding AS qvec
-          FROM embeddings WHERE vec_id < 32),
-    exact AS (
-      SELECT query_id, vec_id
-      FROM q, embeddings
-      WHERE vec_id <> query_id
-      QUALIFY row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY list_cosine_similarity(CAST(qvec AS DOUBLE[]),
-                                        CAST(embedding AS DOUBLE[])) DESC,
-                 vec_id) <= {_RECALL_K}),
-    hits AS (
-      SELECT e.query_id, count(*) AS n
-      FROM exact e JOIN approx a
-        ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-      GROUP BY e.query_id)
-    SELECT q.query_id,
-           CAST(coalesce(h.n, 0) AS BIGINT) AS n_hits,
-           round(coalesce(h.n, 0) / {_RECALL_K}.0, 4) AS recall
-    FROM q LEFT JOIN hits h USING (query_id)
+    {_RECALL_EXACT_CTES},
+    {_RECALL_HITS_SQL}
     """
 
 
@@ -7701,34 +7459,13 @@ def ann_recall_eval_ivfpq(spark, sf_dir):
     from .functions.similarity import ivfpq_residual_codebooks, ivfpq_topk
 
     emb = T(spark, sf_dir, "embeddings")
-    cents_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(8)
-        .collect()
-    )
-    centroids = [[float(x) for x in r["embedding"]] for r in cents_rows]
+    centroids = _pinned_centroids(emb)
     cbs = ivfpq_residual_codebooks(emb, centroids, m=8, n_codes=16)
     q = emb.filter(F.col("vec_id") < 32)
     approx = ivfpq_topk(
         emb, q, centroids, cbs, k=_RECALL_K, nprobe=2
     ).select("query_id", "vec_id")
-    exact = S.brute_force_topk(emb, q, k=_RECALL_K).select("query_id", "vec_id")
-    hits = (
-        exact.join(approx, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n"))
-    )
-    return (
-        q.select(F.col("vec_id").alias("query_id"))
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_hits"),
-            F.round(F.coalesce(F.col("n"), F.lit(0)) / float(_RECALL_K), 4)
-            .alias("recall"),
-        )
-    )
+    return _recall_per_query(emb, q, approx)
 
 
 _BPE_MERGES = 8
@@ -7943,8 +7680,7 @@ _STREAM_ENRICH_SQL = f"""
       SELECT * FROM read_parquet(['{_REPLAY_EVENTS}/events-00000.parquet',
                                   '{_REPLAY_EVENTS}/events-00001.parquet',
                                   '{_REPLAY_EVENTS}/events-00002.parquet'])
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     dim AS (
       SELECT url, text AS dim_text, lang AS dim_lang FROM (
         SELECT url, text, lang, op,
@@ -7954,8 +7690,7 @@ _STREAM_ENRICH_SQL = f"""
     facts AS (
       SELECT url, seq AS fact_seq
       FROM read_parquet('{_REPLAY_EVENTS}/events-00003.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL)
+      WHERE {_COMMITTED_DML})
     SELECT f.url, f.fact_seq, d.dim_text, d.dim_lang
     FROM facts f LEFT JOIN dim d ON f.url = d.url
     """
@@ -7975,34 +7710,19 @@ def engine_stream_enrich(spark, sf_dir):
     snapshot version (cached across epochs), broadcasts under the
     manifest-row-count budget (free bound, no count job), and falls back to
     a key-shuffle join above it; fact volume never feeds the decision."""
-    from .lake.table import LakeTable
-    from .operators.decode import EVENTS_DDL
     from .streaming.enrich import DimensionLookup
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table_path, _marks, _metrics = _shared_mor_replay(spark)
-    cur = LakeTable.load(spark, table_path)
-    ver = max(
-        v
-        for v in cur.versions()
-        if LakeTable.load(spark, table_path, version=v).last_epoch()
-        == (2, True)
-    )
+    ver = _confirmed_version(spark, table_path, 2)
     look = DimensionLookup(
         spark, table_path,
         dim_cols={"dim_text": "text", "dim_lang": "lang"},
         pin_version=ver,
     )
     ev = _ensure_replay_events()
-    facts = (
-        spark.read.schema(EVENTS_DDL)
-        .parquet(os.path.join(ev, "events-00003.parquet"))
-        .filter(
-            F.col("op").isNotNull() & (F.col("op") != "ddl")
-            & ~F.col("rolled_back")
-            & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-        )
-        .select("url", F.col("seq").alias("fact_seq"))
+    facts = _committed_dml(spark, os.path.join(ev, "events-00003.parquet")).select(
+        "url", F.col("seq").alias("fact_seq")
     )
     return look.enrich(facts).select(
         "url", "fact_seq", "dim_text", "dim_lang"
@@ -8293,25 +8013,9 @@ def engine_delete_where(spark, sf_dir):
 # whose newest version violates must fall back to its newest CONFORMING
 # version (or disappear, or keep a delete tombstone): filtering after the
 # window would be the wrong semantics and hash-fails. Built once per process.
-_CONSTRAINT_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL
-        AND NOT coalesce(op IN ('c', 'u') AND NOT (lang <> 'ja'), FALSE)),
-    projected AS (
-      SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
-             CASE WHEN schema_ver >= 4
-                    THEN CAST(extras['http_status'][1] AS BIGINT)
-                  WHEN schema_ver >= 2
-                    THEN CAST(extras['fetch_status'][1] AS BIGINT)
-                  ELSE NULL END AS http_status,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev)
-    SELECT url, warc_ts, _seq, text, lang, http_status
-    FROM projected WHERE rn = 1 AND _op <> 'd'
-    """
+_CONSTRAINT_SQL = _replay_state_sql(
+    ev_where=" AND NOT coalesce(op IN ('c', 'u') AND NOT (lang <> 'ja'), FALSE)"
+)
 
 
 @register("engine_constraint_replay", _CONSTRAINT_SQL)
@@ -8543,13 +8247,7 @@ def docs_top_terms_per_doc(spark, sf_dir):
 # the existing entries' spellings, so this gate moves with them.
 _METHOD_AGREE_SQL = f"""
     WITH {_MINHASH_CAND_SQL},
-    sizes AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-    inter AS (
-      SELECT c.a, c.b, count(*) AS n_inter
-      FROM cand c
-      JOIN tok ta ON ta.doc_id = c.a
-      JOIN tok tb ON tb.doc_id = c.b AND tb.token = ta.token
-      GROUP BY c.a, c.b),
+    {_MINHASH_INTER_CTES},
     mh AS (
       SELECT a, b
       FROM inter
@@ -8729,15 +8427,7 @@ def events_props_schema_infer(spark, sf_dir):
 # — the three delta terms are disjoint and complete. The DuckDB twin joins
 # the two replayed final states from scratch; incremental must net to it.
 _INC_JOIN_SQL = f"""
-    WITH ev AS (
-      SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
-    projected AS (
-      SELECT url, op AS _op,
-             row_number() OVER (PARTITION BY url
-                                ORDER BY warc_ts DESC, seq DESC) AS rn
-      FROM ev),
+    WITH {_lww_ctes("url, op AS _op")},
     state AS (SELECT url FROM projected WHERE rn = 1 AND _op <> 'd'),
     sided AS (
       SELECT url,
@@ -9229,17 +8919,8 @@ def events_cohort_ltv(spark, sf_dir):
     )
 
 
-_SIL_SQL = """
-    WITH comp AS (
-      SELECT label, pos, round(avg(val), 6) AS c
-      FROM (SELECT label,
-                   unnest(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-                     AS val,
-                   unnest(generate_series(1, len(embedding))) AS pos
-            FROM embeddings)
-      GROUP BY label, pos),
-    cent AS (SELECT label, list(c ORDER BY pos) AS centroid
-             FROM comp GROUP BY label),
+_SIL_SQL = f"""
+    WITH {_LABEL_CENTROID_CTES},
     scored AS (
       SELECT e.vec_id, e.label AS own, c.label AS other,
              round(CAST(list_cosine_similarity(
@@ -9609,32 +9290,8 @@ def docs_c4_clean(spark, sf_dir):
     )
 
 
-_DSIR_SAMPLE_SQL = """
-    WITH base AS (
-      SELECT doc_id, lang,
-             regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-      FROM documents WHERE length(trim(text)) > 0),
-    bg AS (
-      SELECT doc_id, lang = 'en' AS is_target,
-             unnest(list_transform(range(1, len(toks)),
-                    i -> toks[i] || ' ' || toks[i+1])) AS bigram
-      FROM base WHERE len(toks) >= 2),
-    hashed AS (
-      SELECT doc_id, is_target,
-             CAST('0x' || substr(md5(bigram), 1, 8) AS BIGINT) % 1024 AS bucket
-      FROM bg),
-    bstat AS (
-      SELECT bucket, CAST(count(*) AS BIGINT) AS r,
-             CAST(count(*) FILTER (WHERE is_target) AS BIGINT) AS t
-      FROM hashed GROUP BY bucket),
-    tot AS (SELECT CAST(sum(r) AS BIGINT) AS rn, CAST(sum(t) AS BIGINT) AS tn
-            FROM bstat),
-    lr AS (
-      SELECT bucket,
-             CAST(round((ln((t + 0.5) / (tn + 512.0))
-                         - ln((r + 0.5) / (rn + 512.0))) * 1e6) AS BIGINT)
-               AS lr_micros
-      FROM bstat CROSS JOIN tot),
+_DSIR_SAMPLE_SQL = f"""
+    WITH {_DSIR_LR_CTES},
     weights AS (
       SELECT h.doc_id, CAST(sum(lr_micros) AS BIGINT) AS logw_micro_nats
       FROM hashed h JOIN lr USING (bucket)
@@ -9795,8 +9452,7 @@ _FIRST_SEEN_SQL = f"""
     WITH ev AS (
       SELECT url, warc_ts, seq, text, filename
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet', filename=true)
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     w AS (
       SELECT url, warc_ts, seq AS _seq, text,
              row_number() OVER (PARTITION BY url
@@ -11745,12 +11401,7 @@ docs_host_hits.__doc__ = docs_host_hits.__doc__.replace(
 # kNN-graph CTE prefix shared by emb_knn_graph and emb_knn_label_accuracy —
 # ONE spelling of the LSH-candidate top-k so the accuracy gate moves with
 # the graph (the contrastive-pairs/survivor-CTE sharing rule)
-_KNN_RANKED_CTES = f"""b AS ({_lsh_tables_sql("(SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500)")}),
-    cand AS (
-      SELECT DISTINCT l.vec_id AS a, r.vec_id AS b
-      FROM b l JOIN b r
-        ON l.table_id = r.table_id AND l.bucket = r.bucket
-       AND l.vec_id < r.vec_id),
+_KNN_SCORED_CTES = f"""{_LSH_SAMPLE_CAND_CTES},
     sym AS (SELECT a AS vec_id, b AS neighbor_id FROM cand
             UNION ALL SELECT b, a FROM cand),
     scored AS (
@@ -11759,13 +11410,47 @@ _KNN_RANKED_CTES = f"""b AS ({_lsh_tables_sql("(SELECT vec_id, embedding FROM em
                      CAST(ea.embedding AS DOUBLE[]),
                      CAST(eb.embedding AS DOUBLE[])) AS DOUBLE), 4) AS cosine
       FROM sym s JOIN embeddings ea ON s.vec_id = ea.vec_id
-                 JOIN embeddings eb ON s.neighbor_id = eb.vec_id),
+                 JOIN embeddings eb ON s.neighbor_id = eb.vec_id)"""
+_KNN_RANKED_CTES = f"""{_KNN_SCORED_CTES},
     ranked AS (
       SELECT vec_id, neighbor_id, cosine,
              CAST(row_number() OVER (PARTITION BY vec_id
                                      ORDER BY cosine DESC, neighbor_id)
                   AS INTEGER) AS rank
       FROM scored)"""
+
+
+def _symmetric_pairs(cand: DataFrame) -> DataFrame:
+    """Both directions of each candidate pair (a, b) as (vec_id,
+    neighbor_id): the oracles' ``sym`` CTE."""
+    return cand.select(
+        F.col("a").alias("vec_id"), F.col("b").alias("neighbor_id")
+    ).unionAll(
+        cand.select(
+            F.col("b").alias("vec_id"), F.col("a").alias("neighbor_id")
+        )
+    )
+
+
+def _lsh_sample_scored(spark, sf_dir) -> DataFrame:
+    """The Spark side of ``_KNN_SCORED_CTES``: every LSH candidate pair of
+    the 500-vector sample in both directions (vec_id, neighbor_id) with
+    its 4-dp cosine."""
+    from .functions.similarity import cosine
+
+    emb, cand = _lsh_sample(spark, sf_dir)
+    sym = _symmetric_pairs(cand)
+    ea = emb.select(F.col("vec_id").alias("_i"), F.col("embedding").alias("ea"))
+    eb = emb.select(F.col("vec_id").alias("_j"), F.col("embedding").alias("eb"))
+    return (
+        sym.join(ea, sym.vec_id == ea._i)
+        .join(eb, sym.neighbor_id == eb._j)
+        .select(
+            "vec_id",
+            "neighbor_id",
+            F.round(cosine(F.col("ea"), F.col("eb")), 4).alias("cosine"),
+        )
+    )
 
 
 @register(
@@ -11787,34 +11472,7 @@ def emb_knn_graph(spark, sf_dir):
     bounded-keyspace bucket equi-join (never all-pairs), symmetrization is
     a union, and the top-k is a per-key window over candidate-sized input.
     Reference analogue: none — training-data pipeline extension."""
-    from .functions.similarity import cosine, lsh_candidate_pairs
-
-    emb = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 500)
-        .select("vec_id", "embedding")
-    )
-    cand = lsh_candidate_pairs(
-        emb, n_bits=_LSH_BITS, n_tables=_LSH_TABLES, dim=_EMB_DIM
-    )
-    sym = cand.select(
-        F.col("a").alias("vec_id"), F.col("b").alias("neighbor_id")
-    ).unionAll(
-        cand.select(
-            F.col("b").alias("vec_id"), F.col("a").alias("neighbor_id")
-        )
-    )
-    ea = emb.select(F.col("vec_id").alias("_i"), F.col("embedding").alias("ea"))
-    eb = emb.select(F.col("vec_id").alias("_j"), F.col("embedding").alias("eb"))
-    scored = (
-        sym.join(ea, sym.vec_id == ea._i)
-        .join(eb, sym.neighbor_id == eb._j)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round(cosine(F.col("ea"), F.col("eb")), 4).alias("cosine"),
-        )
-    )
+    scored = _lsh_sample_scored(spark, sf_dir)
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), "neighbor_id")
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= 3
@@ -12443,25 +12101,6 @@ def events_user_gini(spark, sf_dir):
     )
 
 
-# DF-capped 3-token-shingle candidate generation — ONE spelling shared by
-# docs_containment_dups and docs_weighted_jaccard_dups (the [2, 64] DF cap
-# is the quadratic hot-shingle guard from docs_ngram_jaccard_near_dup).
-_SHINGLE_CAND_CTES = """arr AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS a
-      FROM documents WHERE doc_id < 2000),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             array_to_string(list_slice(a, CAST(i AS INTEGER),
-                                        CAST(i AS INTEGER) + 2), ' ') AS shingle
-      FROM arr, unnest(generate_series(1, len(a) - 2)) AS t(i)),
-    rare AS (
-      SELECT shingle FROM sh GROUP BY shingle
-      HAVING count(*) BETWEEN 2 AND 64),
-    cs AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN rare USING (shingle)),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM cs l JOIN cs r ON l.shingle = r.shingle AND l.doc_id < r.doc_id)"""
-
 _CONTAINMENT_SQL = f"""
     WITH {_SHINGLE_CAND_CTES},
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
@@ -12481,6 +12120,26 @@ _CONTAINMENT_SQL = f"""
     """
 
 
+def _shingle_candidates(sh: DataFrame) -> DataFrame:
+    """The Spark side of ``_SHINGLE_CAND_CTES``' rare/cs/cand: doc pairs
+    (a < b) sharing a 3-token shingle whose document frequency is in
+    [2, 64]."""
+    rare = (
+        sh.groupBy("shingle")
+        .agg(F.count("*").alias("_df"))
+        .filter((F.col("_df") >= 2) & (F.col("_df") <= 64))
+        .select("shingle")
+    )
+    cs = sh.join(rare, "shingle")
+    return (
+        cs.select(F.col("doc_id").alias("a"), "shingle")
+        .join(cs.select(F.col("doc_id").alias("b"), "shingle"), "shingle")
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+        .distinct()
+    )
+
+
 @register("docs_containment_dups", _CONTAINMENT_SQL)
 def docs_containment_dups(spark, sf_dir):
     """Directional CONTAINMENT near-dups (Broder 1997's resemblance twin) —
@@ -12498,20 +12157,7 @@ def docs_containment_dups(spark, sf_dir):
     Reference analogue: none — training-data pipeline extension."""
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
     sh = S.token_ngrams(d, "doc_id", "text", n=3)
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("_df"))
-        .filter((F.col("_df") >= 2) & (F.col("_df") <= 64))
-        .select("shingle")
-    )
-    cs = sh.join(rare, "shingle")
-    cands = (
-        cs.select(F.col("doc_id").alias("a"), "shingle")
-        .join(cs.select(F.col("doc_id").alias("b"), "shingle"), "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    cands = _shingle_candidates(sh)
     pairs = S.containment_pairs(sh, cands, "doc_id", "shingle")
     return pairs.filter(
         F.greatest(F.col("c_ab"), F.col("c_ba")) >= 0.7
@@ -12815,21 +12461,7 @@ def docs_heaps_fit(spark, sf_dir):
 
 
 _TWONN_SQL = f"""
-    WITH b AS ({{tables}}),
-    cand AS (
-      SELECT DISTINCT l.vec_id AS a, r.vec_id AS b
-      FROM b l JOIN b r
-        ON l.table_id = r.table_id AND l.bucket = r.bucket
-       AND l.vec_id < r.vec_id),
-    sym AS (SELECT a AS vec_id, b AS neighbor_id FROM cand
-            UNION ALL SELECT b, a FROM cand),
-    scored AS (
-      SELECT s.vec_id, s.neighbor_id,
-             round(CAST(list_cosine_similarity(
-                     CAST(ea.embedding AS DOUBLE[]),
-                     CAST(eb.embedding AS DOUBLE[])) AS DOUBLE), 4) AS cosine
-      FROM sym s JOIN embeddings ea ON s.vec_id = ea.vec_id
-                 JOIN embeddings eb ON s.neighbor_id = eb.vec_id),
+    WITH {_KNN_SCORED_CTES},
     ranked AS (
       SELECT vec_id, cosine,
              row_number() OVER (PARTITION BY vec_id
@@ -12852,11 +12484,7 @@ _TWONN_SQL = f"""
 
 @register(
     "emb_intrinsic_dim",
-    _TWONN_SQL.format(
-        tables=_lsh_tables_sql(
-            "(SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500)"
-        )
-    ),
+    _TWONN_SQL,
 )
 def emb_intrinsic_dim(spark, sf_dir):
     """TwoNN intrinsic-dimension estimate (Facco et al. 2017): per vector,
@@ -12874,36 +12502,7 @@ def emb_intrinsic_dim(spark, sf_dir):
     bucket equi-join (never all-pairs), top-2 via WindowGroupLimit
     (partial per-partition top-k before the shuffle), one scalar reduce.
     Reference analogue: none — training-data pipeline extension."""
-    from .functions.similarity import cosine, lsh_candidate_pairs
-
-    emb = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 500)
-        .select("vec_id", "embedding")
-    )
-    cand = lsh_candidate_pairs(
-        emb, n_bits=_LSH_BITS, n_tables=_LSH_TABLES, dim=_EMB_DIM
-    )
-    sym = cand.select(
-        F.col("a").alias("vec_id"), F.col("b").alias("neighbor_id")
-    ).unionAll(
-        cand.select(
-            F.col("b").alias("vec_id"), F.col("a").alias("neighbor_id")
-        )
-    )
-    ea = emb.select(F.col("vec_id").alias("_i"), F.col("embedding").alias("ea"))
-    eb = emb.select(
-        F.col("vec_id").alias("_j"), F.col("embedding").alias("eb")
-    )
-    scored = (
-        sym.join(ea, sym.vec_id == ea._i)
-        .join(eb, sym.neighbor_id == eb._j)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round(cosine(F.col("ea"), F.col("eb")), 4).alias("cosine"),
-        )
-    )
+    scored = _lsh_sample_scored(spark, sf_dir)
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), "neighbor_id")
     ranked = scored.select(
         "vec_id", "cosine", F.row_number().over(w).alias("rank")
@@ -13660,6 +13259,31 @@ def tpch_q4_order_priority(spark, sf_dir):
     )
 
 
+def _party_regions(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
+    """Suppliers (s_suppkey, supp_region) and customers (c_custkey,
+    cust_region): the 25-row nation→region map (the oracles' ``nr``)
+    broadcast into both sides."""
+    nr = (
+        T(spark, sf_dir, "nation")
+        .join(
+            F.broadcast(T(spark, sf_dir, "region")),
+            F.col("n_regionkey") == F.col("r_regionkey"),
+        )
+        .select("n_nationkey", "r_name")
+    )
+    s = (
+        T(spark, sf_dir, "supplier")
+        .join(F.broadcast(nr), F.col("s_nationkey") == F.col("n_nationkey"))
+        .select("s_suppkey", F.col("r_name").alias("supp_region"))
+    )
+    c = (
+        T(spark, sf_dir, "customer")
+        .join(F.broadcast(nr), F.col("c_nationkey") == F.col("n_nationkey"))
+        .select("c_custkey", F.col("r_name").alias("cust_region"))
+    )
+    return s, c
+
+
 @register(
     "tpch_q7_volume_shipping",
     """
@@ -13698,24 +13322,7 @@ def tpch_q7_volume_shipping(spark, sf_dir):
     date filter prunes the lineitem scan; the only wide shuffles are the
     orderkey join and the final 2×2×years rollup. Reference analogue:
     none — relational coverage (SURVEY §2.6)."""
-    nr = (
-        T(spark, sf_dir, "nation")
-        .join(
-            F.broadcast(T(spark, sf_dir, "region")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("n_nationkey", "r_name")
-    )
-    s = (
-        T(spark, sf_dir, "supplier")
-        .join(F.broadcast(nr), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("r_name").alias("supp_region"))
-    )
-    c = (
-        T(spark, sf_dir, "customer")
-        .join(F.broadcast(nr), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", F.col("r_name").alias("cust_region"))
-    )
+    s, c = _party_regions(spark, sf_dir)
     li = T(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -13787,25 +13394,8 @@ def tpch_q8_market_share(spark, sf_dir):
     wide shuffle is lineitem⋈orders on orderkey, then a years-sized
     rollup. Reference analogue: none — relational coverage (SURVEY
     §2.6)."""
-    nr = (
-        T(spark, sf_dir, "nation")
-        .join(
-            F.broadcast(T(spark, sf_dir, "region")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("n_nationkey", "r_name")
-    )
-    s = (
-        T(spark, sf_dir, "supplier")
-        .join(F.broadcast(nr), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("r_name").alias("supp_region"))
-    )
-    c = (
-        T(spark, sf_dir, "customer")
-        .join(F.broadcast(nr), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", F.col("r_name").alias("cust_region"))
-        .filter(F.col("cust_region") == "ASIA")
-    )
+    s, c = _party_regions(spark, sf_dir)
+    c = c.filter(F.col("cust_region") == "ASIA")
     p = T(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
     li = T(spark, sf_dir, "lineitem")
     o = T(spark, sf_dir, "orders")
@@ -14176,6 +13766,49 @@ _KM_PERIOD_US = 2_592_000_000_000      # 30-day "month"
 _KM_CENSOR_US = 15_552_000_000_000     # 180-day censoring window
 
 
+def _km_curve(ex: DataFrame, t: str, n: str) -> DataFrame:
+    """Kaplan–Meier product-limit curve over the exit table ``ex`` (one row
+    per period ``t`` with n_exits, n_deaths and the population ``n``): per
+    period with deaths, the at-risk count, the hazard (6 dp) and the
+    survival product, folded over a ``t``-sorted factor array seeded
+    with 1.0 (6 dp)."""
+    cum = Window.orderBy(t).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    ar = ex.select(
+        t,
+        "n_deaths",
+        (
+            F.col(n) - (F.sum("n_exits").over(cum) - F.col("n_exits"))
+        ).alias("at_risk"),
+    )
+    d = ar.filter(F.col("n_deaths") > 0).withColumn(
+        "hazard",
+        F.round(F.col("n_deaths").cast("double") / F.col("at_risk"), 6),
+    )
+    fs = d.agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct(t, "hazard"))),
+            lambda x: F.lit(1.0) - x["hazard"],
+        ).alias("fctrs")
+    )
+    return (
+        d.withColumn("i", F.row_number().over(Window.orderBy(t)))
+        .crossJoin(F.broadcast(fs))
+        .select(
+            t, "at_risk", "n_deaths", "hazard",
+            F.round(
+                F.aggregate(
+                    F.slice(F.col("fctrs"), F.lit(1), F.col("i")),
+                    F.lit(1.0),
+                    lambda acc, x: acc * x,
+                ),
+                6,
+            ).alias("survival"),
+        )
+    )
+
+
 @register(
     "customer_survival_km",
     f"""
@@ -14254,42 +13887,7 @@ def customer_survival_km(spark, sf_dir):
         F.count("*").alias("n_exits"),
         F.count(F.when(~F.col("censored"), F.lit(1))).alias("n_deaths"),
     )
-    cum = Window.orderBy("month").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ar = ex.select(
-        "month",
-        "n_deaths",
-        (
-            F.col("n_users") - (F.sum("n_exits").over(cum) - F.col("n_exits"))
-        ).alias("at_risk"),
-    )
-    d = ar.filter(F.col("n_deaths") > 0).withColumn(
-        "hazard",
-        F.round(F.col("n_deaths").cast("double") / F.col("at_risk"), 6),
-    )
-    fs = d.agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("month", "hazard"))),
-            lambda x: F.lit(1.0) - x["hazard"],
-        ).alias("fctrs")
-    )
-    rk = Window.orderBy("month")
-    return (
-        d.withColumn("i", F.row_number().over(rk))
-        .crossJoin(F.broadcast(fs))
-        .select(
-            "month", "at_risk", "n_deaths", "hazard",
-            F.round(
-                F.aggregate(
-                    F.slice(F.col("fctrs"), F.lit(1), F.col("i")),
-                    F.lit(1.0),
-                    lambda acc, x: acc * x,
-                ),
-                6,
-            ).alias("survival"),
-        )
-    )
+    return _km_curve(ex, "month", "n_users")
 
 
 @register(
@@ -14851,32 +14449,10 @@ def _ivf_nprobe_sweep_sql() -> str:
         for np in _NPROBE_SWEEP
     )
     return f"""
-    WITH ranked_init AS (
-      SELECT embedding AS cvec,
-             row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-               - 1 AS cid
-      FROM embeddings),
-    init AS (SELECT cid, cvec FROM ranked_init WHERE cid < 8),
-    assign AS (
-      SELECT e.vec_id, e.embedding, i.cid,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                               CAST(i.cvec AS DOUBLE[])) DESC,
-                        i.cid) AS rn
-      FROM embeddings e CROSS JOIN init i),
+    WITH {_IVF_INIT_CTES},
+    {_IVF_ASSIGN_CTE},
     cells AS (SELECT vec_id, embedding, cid FROM assign WHERE rn = 1),
-    q AS (SELECT vec_id AS query_id, embedding AS qvec
-          FROM embeddings WHERE vec_id < 32),
-    exact AS (
-      SELECT query_id, vec_id
-      FROM q, embeddings
-      WHERE vec_id <> query_id
-      QUALIFY row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY list_cosine_similarity(CAST(qvec AS DOUBLE[]),
-                                        CAST(embedding AS DOUBLE[])) DESC,
-                 vec_id) <= {_RECALL_K}),
+    {_RECALL_EXACT_CTES},
     nq AS (SELECT CAST(count(*) AS BIGINT) AS n_queries FROM q),
     sweep AS ({per_np})
     SELECT nprobe, n_queries, n_hits,
@@ -14903,13 +14479,7 @@ def ann_recall_vs_nprobe(spark, sf_dir):
     from .functions.similarity import ivf_topk
 
     emb = T(spark, sf_dir, "embeddings")
-    cents_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(8)
-        .collect()
-    )
-    centroids = [[float(x) for x in r["embedding"]] for r in cents_rows]
+    centroids = _pinned_centroids(emb)
     q = emb.filter(F.col("vec_id") < 32)
     nq = q.agg(F.count("*").alias("n_queries"))
     exact = S.brute_force_topk(emb, q, k=_RECALL_K).select("query_id", "vec_id")
@@ -14969,15 +14539,7 @@ _INT8_RECALL_SQL = f"""
         PARTITION BY query_id
         ORDER BY list_cosine_similarity(qvec, demb) DESC, vec_id)
         <= {_RECALL_K}),
-    hits AS (
-      SELECT e.query_id, count(*) AS n
-      FROM exact e JOIN approx a
-        ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-      GROUP BY e.query_id)
-    SELECT q.query_id,
-           CAST(coalesce(h.n, 0) AS BIGINT) AS n_hits,
-           round(coalesce(h.n, 0) / {_RECALL_K}.0, 4) AS recall
-    FROM q LEFT JOIN hits h USING (query_id)
+    {_RECALL_HITS_SQL}
     """
 
 
@@ -15003,23 +14565,8 @@ def ann_recall_eval_int8(spark, sf_dir):
         ),
     )
     q = emb.filter(F.col("vec_id") < 32)
-    exact = S.brute_force_topk(emb, q, k=_RECALL_K).select("query_id", "vec_id")
     approx = S.brute_force_topk(dq, q, k=_RECALL_K).select("query_id", "vec_id")
-    hits = (
-        exact.join(approx, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n"))
-    )
-    return (
-        q.select(F.col("vec_id").alias("query_id"))
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_hits"),
-            F.round(F.coalesce(F.col("n"), F.lit(0)) / float(_RECALL_K), 4)
-            .alias("recall"),
-        )
-    )
+    return _recall_per_query(emb, q, approx)
 
 
 @register(
@@ -15352,8 +14899,7 @@ def docs_dup_cluster_size_hist(spark, sf_dir):
     WITH ev AS (
       SELECT op, octet_length(html) AS n_bytes
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL AND html IS NOT NULL)
+      WHERE {_COMMITTED_DML} AND html IS NOT NULL)
     SELECT op, CAST(count(*) AS BIGINT) AS n_events,
            CAST(min(n_bytes) AS BIGINT) AS min_bytes,
            CAST(CAST(quantile_disc(n_bytes, 0.5) AS BIGINT) AS BIGINT)
@@ -15591,59 +15137,21 @@ def docs_host_cocitation(spark, sf_dir):
     )
 
 
-@register("engine_network_replay", _REPLAY_SQL)
-def engine_network_replay(spark, sf_dir):
-    """The network client-confirm transport through the VALUE gate: per
-    epoch, committed DML becomes JSON change messages (the F12 builder)
-    streamed per-partition over the length-prefixed confirm protocol to
-    the in-process reference consumer (sinks.network.ReferenceConsumer —
-    the SAME consumer spelling the transport pytest suite drives); the
-    state REASSEMBLED FROM THE RECEIVED FRAMES (parse → per-event
-    schema-field resolution → LWW → tombstone exclusion) must hash
-    against the full DuckDB replay. This closes the last sink surface
-    that had only transport-level tests: a framing bug, a dropped
-    partition, a double-delivered frame, or a field lost in the JSON
-    round trip all change the reassembled state. In-flight asserts pin
-    idempotent re-delivery (a confirmed epoch re-sent adds no frames)
-    and the per-partition delivery slots. Reference analogue:
-    WriterStream.cpp:185-192 — the client's confirm drives the
-    watermark; the consumer is the system of record."""
-    from .operators.decode import EVENTS_DDL
+def _json_messages_of(spark, path: str) -> DataFrame:
+    """The JSON change messages (the F12 builder) of one change-log file's
+    committed DML — what the transport gates deliver per epoch."""
     from .sinks.builders import build_json_messages
-    from .sinks.network import NetworkConfirmSink, ReferenceConsumer
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    files = _event_files(_ensure_replay_events())
-    committed_of = lambda f: (
-        spark.read.schema(EVENTS_DDL).parquet(f)
-        .filter(
-            F.col("op").isNotNull() & (F.col("op") != "ddl")
-            & ~F.col("rolled_back")
-            & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-        )
+    return build_json_messages(
+        _committed_dml(spark, path)
         .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
     )
-    srv = ReferenceConsumer()
-    try:
-        d = _gate_scratch("net")
-        sink = NetworkConfirmSink(
-            "127.0.0.1", srv.port, confirmed_path=os.path.join(d, "wm")
-        )
-        for i, f in enumerate(files):
-            assert sink.send_epoch(build_json_messages(committed_of(f)), i)
-        n0 = sum(len(v) for v in srv.redo[0].values())
-        assert sink.send_epoch(build_json_messages(committed_of(files[0])), 0)
-        assert sum(len(v) for v in srv.redo[0].values()) == n0, (
-            "re-delivery of a confirmed epoch must add no frames"
-        )
-        payloads = [
-            m.decode("utf-8")
-            for ep in sorted(srv.redo)
-            for part in srv.redo[ep].values()
-            for m in part
-        ]
-    finally:
-        srv.close()
+
+
+def _state_from_json_messages(spark, payloads: list[str]) -> DataFrame:
+    """The live state reassembled from delivered JSON change messages:
+    parse → per-event schema-field resolution → LWW → tombstone exclusion
+    (the DuckDB twin is ``_REPLAY_SQL``)."""
     raw = spark.createDataFrame([(s,) for s in payloads], "message string")
     schema = (
         "scn long, seq long, payload array<struct<op string, rid string, "
@@ -15674,6 +15182,51 @@ def engine_network_replay(spark, sf_dir):
         .filter((F.col("rn") == 1) & (F.col("_op") != "d"))
         .select("url", "warc_ts", "_seq", "text", "lang", "http_status")
     )
+
+
+@register("engine_network_replay", _REPLAY_SQL)
+def engine_network_replay(spark, sf_dir):
+    """The network client-confirm transport through the VALUE gate: per
+    epoch, committed DML becomes JSON change messages (the F12 builder)
+    streamed per-partition over the length-prefixed confirm protocol to
+    the in-process reference consumer (sinks.network.ReferenceConsumer —
+    the SAME consumer spelling the transport pytest suite drives); the
+    state REASSEMBLED FROM THE RECEIVED FRAMES (parse → per-event
+    schema-field resolution → LWW → tombstone exclusion) must hash
+    against the full DuckDB replay. This closes the last sink surface
+    that had only transport-level tests: a framing bug, a dropped
+    partition, a double-delivered frame, or a field lost in the JSON
+    round trip all change the reassembled state. In-flight asserts pin
+    idempotent re-delivery (a confirmed epoch re-sent adds no frames)
+    and the per-partition delivery slots. Reference analogue:
+    WriterStream.cpp:185-192 — the client's confirm drives the
+    watermark; the consumer is the system of record."""
+    from .sinks.network import NetworkConfirmSink, ReferenceConsumer
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    files = _event_files(_ensure_replay_events())
+    srv = ReferenceConsumer()
+    try:
+        d = _gate_scratch("net")
+        sink = NetworkConfirmSink(
+            "127.0.0.1", srv.port, confirmed_path=os.path.join(d, "wm")
+        )
+        for i, f in enumerate(files):
+            assert sink.send_epoch(_json_messages_of(spark, f), i)
+        n0 = sum(len(v) for v in srv.redo[0].values())
+        assert sink.send_epoch(_json_messages_of(spark, files[0]), 0)
+        assert sum(len(v) for v in srv.redo[0].values()) == n0, (
+            "re-delivery of a confirmed epoch must add no frames"
+        )
+        payloads = [
+            m.decode("utf-8")
+            for ep in sorted(srv.redo)
+            for part in srv.redo[ep].values()
+            for m in part
+        ]
+    finally:
+        srv.close()
+    return _state_from_json_messages(spark, payloads)
 
 
 @register("engine_kafka_replay", _REPLAY_SQL)
@@ -15694,21 +15247,10 @@ def engine_kafka_replay(spark, sf_dir):
     epoch adds no messages. LWW reassembly is duplicate-immune by
     construction, which is exactly Kafka's at-least-once contract: the
     consumer, not the producer, dedupes."""
-    from .operators.decode import EVENTS_DDL
-    from .sinks.builders import build_json_messages
     from .sinks.kafka_wire import KafkaBrokerStub, KafkaConfirmSink
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     files = _event_files(_ensure_replay_events())
-    committed_of = lambda f: (
-        spark.read.schema(EVENTS_DDL).parquet(f)
-        .filter(
-            F.col("op").isNotNull() & (F.col("op") != "ddl")
-            & ~F.col("rolled_back")
-            & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-        )
-        .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    )
     srv = KafkaBrokerStub({"olr-changes": 4}, refuse_produces=10_000)
     try:
         d = _gate_scratch("kafka")
@@ -15716,49 +15258,20 @@ def engine_kafka_replay(spark, sf_dir):
             "127.0.0.1", srv.port, confirmed_path=os.path.join(d, "wm")
         )
         # delivery-failed path: refused produce ⇒ unconfirmed + no append
-        assert not sink.send_epoch(build_json_messages(committed_of(files[0])), 0)
+        assert not sink.send_epoch(_json_messages_of(spark, files[0]), 0)
         assert sink.last_confirmed_epoch() == -1
         assert srv.values("olr-changes") == []
         srv.refuse_produces = 0
         for i, f in enumerate(files):
-            assert sink.send_epoch(build_json_messages(committed_of(f)), i)
+            assert sink.send_epoch(_json_messages_of(spark, f), i)
         n0 = len(srv.values("olr-changes"))
         # idempotent re-delivery of a confirmed epoch: no new messages
-        assert sink.send_epoch(build_json_messages(committed_of(files[0])), 0)
+        assert sink.send_epoch(_json_messages_of(spark, files[0]), 0)
         assert len(srv.values("olr-changes")) == n0
         payloads = [m.decode("utf-8") for m in srv.values("olr-changes")]
     finally:
         srv.close()
-    raw = spark.createDataFrame([(s,) for s in payloads], "message string")
-    schema = (
-        "scn long, seq long, payload array<struct<op string, rid string, "
-        "after struct<url string, text string, lang string, "
-        "http_status string, fetch_status string>>>"
-    )
-    p = raw.select(F.from_json("message", schema).alias("m")).select(
-        F.element_at(F.col("m.payload"), 1).alias("p"),
-        F.col("m.scn").alias("scn"),
-        F.col("m.seq").alias("_seq"),
-    )
-    rows = p.select(
-        F.col("p.rid").alias("url"),
-        F.timestamp_micros(F.col("scn")).alias("warc_ts"),
-        "_seq",
-        F.col("p.op").alias("_op"),
-        F.col("p.after.text").alias("text"),
-        F.col("p.after.lang").alias("lang"),
-        F.coalesce(
-            F.col("p.after.http_status"), F.col("p.after.fetch_status")
-        ).cast("long").alias("http_status"),
-    )
-    w = Window.partitionBy("url").orderBy(
-        F.desc("warc_ts"), F.desc("_seq")
-    )
-    return (
-        rows.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("_op") != "d"))
-        .select("url", "warc_ts", "_seq", "text", "lang", "http_status")
-    )
+    return _state_from_json_messages(spark, payloads)
 
 
 @register("engine_stream_suppressed_replay", _REPLAY_SQL)
@@ -16408,20 +15921,7 @@ def docs_weighted_jaccard_dups(spark, sf_dir):
     )
     sizes = tf.groupBy("doc_id").agg(F.sum("tf").alias("n"))
     sh = S.token_ngrams(d, "doc_id", "text", n=3)
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("_df"))
-        .filter((F.col("_df") >= 2) & (F.col("_df") <= 64))
-        .select("shingle")
-    )
-    cs = sh.join(rare, "shingle")
-    cand = (
-        cs.select(F.col("doc_id").alias("a"), "shingle")
-        .join(cs.select(F.col("doc_id").alias("b"), "shingle"), "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    cand = _shingle_candidates(sh)
     ta = tf.select(F.col("doc_id").alias("_a"), "token",
                    F.col("tf").alias("tfa"))
     tb = tf.select(F.col("doc_id").alias("_b"),
@@ -16490,23 +15990,10 @@ def emb_hard_negatives(spark, sf_dir):
     per-key window ranks on the candidate-sized relation — never a
     corpus×corpus similarity. Reference analogue: none — training-data
     pipeline extension."""
-    from .functions.similarity import cosine, lsh_candidate_pairs
+    from .functions.similarity import cosine
 
-    emb = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 500)
-        .select("vec_id", "embedding", "label")
-    )
-    cand = lsh_candidate_pairs(
-        emb, n_bits=_LSH_BITS, n_tables=_LSH_TABLES, dim=_EMB_DIM
-    )
-    sym = cand.select(
-        F.col("a").alias("vec_id"), F.col("b").alias("neighbor_id")
-    ).unionAll(
-        cand.select(
-            F.col("b").alias("vec_id"), F.col("a").alias("neighbor_id")
-        )
-    )
+    emb, cand = _lsh_sample(spark, sf_dir, "label")
+    sym = _symmetric_pairs(cand)
     ea = emb.select(F.col("vec_id").alias("_i"),
                     F.col("embedding").alias("ea"),
                     F.col("label").alias("a_label"))
@@ -16674,8 +16161,7 @@ _POSDELETE_SQL = f"""
     WITH ev AS (
       SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet',
                                  filename = true)
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     raw AS (
       SELECT url, warc_ts, seq AS _seq, op AS _op, text, lang,
              CASE WHEN schema_ver >= 4
@@ -16879,23 +16365,7 @@ def events_retention_decay_fit(spark, sf_dir):
     off the cohort×offset relation events_retention already builds; the
     regression is one reduce over ≤4 points. Reference analogue: none —
     training-data pipeline extension."""
-    ev = T(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id")
-    act = (
-        ev.withColumn("first_ts", F.min("ts").over(w))
-        .select(
-            "user_id",
-            F.date_trunc("week", "first_ts").alias("cohort_week"),
-            F.floor(
-                F.datediff(
-                    F.date_trunc("week", F.col("ts")).cast("date"),
-                    F.date_trunc("week", F.col("first_ts")).cast("date"),
-                )
-                / 7.0
-            ).cast("long").alias("week_offset"),
-        )
-        .distinct()
-    )
+    act = _cohort_activity(T(spark, sf_dir, "events"))
     ret = act.groupBy("cohort_week", "week_offset").agg(
         F.count("*").alias("n_active_users")
     )
@@ -17048,33 +16518,8 @@ def events_funnel_stage_lags(spark, sf_dir):
     to hours only at the rounded output. Shape at 100 TB: the funnel
     relation is users-sized; the percentile runs per 2-row group.
     Reference analogue: none — training-data pipeline extension."""
-    ev = T(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id")
     staged = (
-        ev.withColumn(
-            "first_view",
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-        )
-        .withColumn(
-            "first_click",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click")
-                    & (F.col("ts") > F.col("first_view")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "first_purchase",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") > F.col("first_click")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
+        _funnel_firsts(T(spark, sf_dir, "events"))
         .select("user_id", "first_view", "first_click", "first_purchase")
         .distinct()
     )
@@ -17561,8 +17006,7 @@ _KEYKM_PERIOD_US = 21_600_000_000  # 6-hour periods over the ~3-day fixture
     f"""
     WITH ev AS (
       SELECT * FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     pk AS (
       SELECT url, min(epoch_us(warc_ts)) AS f,
              min(CASE WHEN op = 'd' THEN epoch_us(warc_ts) END) AS death
@@ -17615,15 +17059,8 @@ def cdc_key_survival_km(spark, sf_dir):
     fold). Shape at 100 TB: one url-keyed partial agg, then everything
     runs on ~dozens of period rows. Reference analogue: none —
     training-data pipeline extension over the committed change log."""
-    from .operators.decode import EVENTS_DDL
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = spark.read.schema(EVENTS_DDL).parquet(_ensure_replay_events())
-    ev = raw.filter(
-        F.col("op").isNotNull() & (F.col("op") != "ddl")
-        & ~F.col("rolled_back")
-        & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-    )
+    ev = _committed_dml(spark)
     us = F.unix_micros(F.col("warc_ts").cast("timestamp"))
     pk = ev.groupBy("url").agg(
         F.min(us).alias("f"),
@@ -17642,41 +17079,7 @@ def cdc_key_survival_km(spark, sf_dir):
         F.count("*").alias("n_exits"),
         F.count(F.when(F.col("died"), F.lit(1))).alias("n_deaths"),
     )
-    cum = Window.orderBy("period").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ar = ex.select(
-        "period",
-        "n_deaths",
-        (
-            F.col("n_keys") - (F.sum("n_exits").over(cum) - F.col("n_exits"))
-        ).alias("at_risk"),
-    )
-    d = ar.filter(F.col("n_deaths") > 0).withColumn(
-        "hazard",
-        F.round(F.col("n_deaths").cast("double") / F.col("at_risk"), 6),
-    )
-    fs = d.agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("period", "hazard"))),
-            lambda x: F.lit(1.0) - x["hazard"],
-        ).alias("fctrs")
-    )
-    return (
-        d.withColumn("i", F.row_number().over(Window.orderBy("period")))
-        .crossJoin(F.broadcast(fs))
-        .select(
-            "period", "at_risk", "n_deaths", "hazard",
-            F.round(
-                F.aggregate(
-                    F.slice(F.col("fctrs"), F.lit(1), F.col("i")),
-                    F.lit(1.0),
-                    lambda acc, x: acc * x,
-                ),
-                6,
-            ).alias("survival"),
-        )
-    )
+    return _km_curve(ex, "period", "n_keys")
 
 
 @register(
@@ -18075,8 +17478,7 @@ def docs_vocab_coverage_curve(spark, sf_dir):
     WITH ev AS (
       SELECT url, op, warc_ts, seq
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     o AS (
       SELECT url, op, warc_ts,
              lag(op) OVER (PARTITION BY url
@@ -18115,15 +17517,8 @@ def cdc_key_reactivation(spark, sf_dir):
     exchange, then the reactivation relation is tiny. Reference
     analogue: delete+insert handling in the transaction buffer
     (SURVEY §2.2 P7) — this is its corpus-level statistics twin."""
-    from .operators.decode import EVENTS_DDL
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = spark.read.schema(EVENTS_DDL).parquet(_ensure_replay_events())
-    ev = raw.filter(
-        F.col("op").isNotNull() & (F.col("op") != "ddl")
-        & ~F.col("rolled_back")
-        & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-    ).select("url", "op", "warc_ts", "seq")
+    ev = _committed_dml(spark).select("url", "op", "warc_ts", "seq")
     w = Window.partitionBy("url").orderBy("warc_ts", "seq")
     o = ev.select(
         "url", "op", "warc_ts",
@@ -18327,8 +17722,7 @@ def events_attribution_agreement(spark, sf_dir):
     f"""
     WITH ev AS (
       SELECT url, op FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     per_url AS (
       SELECT url, CAST(count(*) AS BIGINT) AS n_changes FROM ev
       GROUP BY url),
@@ -18358,15 +17752,8 @@ def cdc_url_depth_profile(spark, sf_dir):
     rounded share. Shape at 100 TB: one url-keyed partial agg, then a
     depths-sized rollup. Reference analogue: none — training-data
     pipeline extension over the committed change log."""
-    from .operators.decode import EVENTS_DDL
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = spark.read.schema(EVENTS_DDL).parquet(_ensure_replay_events())
-    ev = raw.filter(
-        F.col("op").isNotNull() & (F.col("op") != "ddl")
-        & ~F.col("rolled_back")
-        & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-    )
+    ev = _committed_dml(spark)
     per_url = ev.groupBy("url").agg(F.count("*").alias("n_changes"))
     path = F.regexp_replace("url", "^https?://[^/]*", "")
     depth = (
@@ -18396,8 +17783,7 @@ def cdc_url_depth_profile(spark, sf_dir):
     WITH ev AS (
       SELECT url, op, warc_ts, seq, schema_ver
       FROM read_parquet('{_REPLAY_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     w AS (
       SELECT url, schema_ver FROM (
         SELECT url, schema_ver, op,
@@ -18424,15 +17810,8 @@ def cdc_schema_adoption(spark, sf_dir):
     (the LWW exchange) into a versions-sized rollup. Reference analogue:
     schema_ver stamping per record (SystemTransaction dictionary replay,
     SURVEY §2.9) — this is its state-side statistics twin."""
-    from .operators.decode import EVENTS_DDL
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = spark.read.schema(EVENTS_DDL).parquet(_ensure_replay_events())
-    ev = raw.filter(
-        F.col("op").isNotNull() & (F.col("op") != "ddl")
-        & ~F.col("rolled_back")
-        & F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
-    )
+    ev = _committed_dml(spark)
     w = Window.partitionBy("url").orderBy(
         F.desc("warc_ts"), F.desc("seq")
     )
@@ -18739,8 +18118,7 @@ _ensure_rewound_events()
     WITH ev AS (
       SELECT seq, url, warc_ts
       FROM read_parquet('{_REWOUND_EVENTS}/*.parquet')
-      WHERE op IS NOT NULL AND op <> 'ddl' AND NOT rolled_back
-        AND url IS NOT NULL AND warc_ts IS NOT NULL),
+      WHERE {_COMMITTED_DML}),
     conf AS (
       SELECT seq,
              CAST(count(*) AS BIGINT) AS n_rows,
@@ -18768,20 +18146,12 @@ def cdc_incarnation_conflicts(spark, sf_dir):
     partial-agg groupBy(seq) + a HAVING on distinct binding count, then a
     4-column roll-up — the cdc_seq_gaps family shape. Reference analogue:
     OracleIncarnation.cpp incarnation scan (SURVEY §2.1 S3)."""
-    from .operators.decode import EVENTS_DDL
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = (
-        spark.read.schema(EVENTS_DDL).parquet(_ensure_rewound_events())
-        .filter(
-            # warc_ts NOT NULL on BOTH sides: Spark's concat_ws would count a
-            # null-ts binding as 'url|' while the SQL twin's || propagates
-            # NULL and drops it — keep the binding universe identical
-            F.col("op").isNotNull() & (F.col("op") != "ddl")
-            & ~F.col("rolled_back") & F.col("url").isNotNull()
-            & F.col("warc_ts").isNotNull()
-        )
-        .select("seq", "url", "warc_ts")
+    # warc_ts NOT NULL on BOTH sides: Spark's concat_ws would count a
+    # null-ts binding as 'url|' while the SQL twin's || propagates
+    # NULL and drops it — keep the binding universe identical
+    ev = _committed_dml(spark, _ensure_rewound_events()).select(
+        "seq", "url", "warc_ts"
     )
     conf = (
         ev.groupBy("seq")

@@ -17,7 +17,8 @@ and per epoch (apply_epoch):
       out a bad row)
     → split ddl / dml (P4), drop rolled-back (A2, Transaction.cpp:71-187)
     → replay DDL rows in (warc_ts, seq) order     # §2.9 ordered evolution
-      (LakeTable.evolve — metadata only)
+      (LakeTable.evolve — metadata only; a version the dictionary cannot
+      reach refuses the epoch with SchemaVersionError)
     → project ALL dml in one pass (P3-P9 decode; per-row schema_ver resolves
       the versioned column name, so one merge per epoch, not one per version)
     → LWW compaction (A3; plan picked from the footer row count)
@@ -154,6 +155,14 @@ def _observed_counts(lineage: Observation, source: DataFrame) -> dict:
     return source.agg(*_lineage_exprs()).collect()[0].asDict()
 
 
+class SchemaVersionError(RuntimeError):
+    """An epoch holds changes at a schema version the table's dictionary
+    cannot reach: a DDL row more than one version above the dictionary (the
+    DDLs in between were never delivered), or committed DML above the
+    dictionary with no DDL that evolves it. Applying it would drop the
+    evolved columns or fail mid-replay; deliver the missing DDL first."""
+
+
 def replay_ddl(batch_df: DataFrame, tables: Iterable[LakeTable]) -> None:
     """Replay the batch's DDL rows into each table's dictionary in
     (warc_ts, seq) order, exactly as the reference's system transactions do
@@ -161,10 +170,22 @@ def replay_ddl(batch_df: DataFrame, tables: Iterable[LakeTable]) -> None:
     Raw-DDL rows (action NULL, statement in ``text``) are parsed from their
     SQL (reference OpCode1801 path), fetched in a second pass filtered to
     those few rows, so the common narrow ddl collect never reads the text
-    column (plan test pins the pruned scan)."""
+    column (plan test pins the pruned scan). A chain with a gap raises
+    ``SchemaVersionError`` before any table evolves."""
     ddl_rows = sorted(
         ddl_events(batch_df).collect(), key=lambda r: (r["warc_ts"], r["seq"])
     )
+    tables = list(tables)
+    for t in tables:
+        ver = t.current_schema_ver
+        for d in ddl_rows:
+            if d["schema_ver"] > ver + 1:
+                raise SchemaVersionError(
+                    f"DDL at schema_ver {d['schema_ver']} (seq {d['seq']}) "
+                    f"but {t.path} is at schema_ver {ver}: versions "
+                    f"{ver + 1}..{d['schema_ver'] - 1} were never delivered"
+                )
+            ver = max(ver, d["schema_ver"])
     sql_texts: dict[int, str] = {}
     if any(d["action"] is None for d in ddl_rows):
         sql_texts = {
@@ -476,6 +497,20 @@ class CdcPipeline:
         batch_df = batch_df.filter(~bad)
         if max_ver is not None and max_ver > table.current_schema_ver:
             replay_ddl(batch_df, [table])
+        if max_ver is not None and max_ver > table.current_schema_ver:
+            # the footer max is an upper bound over every row; only
+            # committed DML above the evolved dictionary is refused (read
+            # from the unobserved plan: the lineage counts the merge's jobs)
+            dml_ver = (
+                dml_events(unobserved.filter(~bad))
+                .agg(F.max("schema_ver")).collect()[0][0]
+            )
+            if dml_ver is not None and dml_ver > table.current_schema_ver:
+                raise SchemaVersionError(
+                    f"epoch {epoch_id}: DML at schema_ver {dml_ver} but the "
+                    f"dictionary of {table.path} stops at "
+                    f"{table.current_schema_ver} (no DDL evolves it)"
+                )
 
         dml = project_dml(dml_events(batch_df), table)
         if self.partial_updates:
@@ -786,14 +821,20 @@ class CdcPipeline:
         """The micro-batch's source-file set from the checkpoint's
         FileStreamSource offset log (``sources/0/<batchId>`` — one JSON
         entry per file, written durably BEFORE the epoch executes, replayed
-        on restart). [] when the entry is missing/unreadable (direct
-        apply_epoch calls, foreign checkpoints)."""
+        on restart). Every 10th batch (``(batchId + 1) % 10 == 0``, Spark's
+        default compact interval) is written as ``<batchId>.compact``
+        instead, holding the entries of all batches so far; the ``batchId``
+        filter keeps this epoch's. [] when the entry is missing/unreadable
+        (direct apply_epoch calls, foreign checkpoints)."""
         import json
 
-        src = os.path.join(
+        base = os.path.join(
             self.checkpoint_path, "sources", "0", str(int(epoch_id))
         )
-        if not os.path.exists(src):
+        src = next(
+            (p for p in (base, base + ".compact") if os.path.exists(p)), None
+        )
+        if src is None:
             return []
         paths: list[str] = []
         try:
@@ -810,14 +851,15 @@ class CdcPipeline:
 
     def _reread_epoch_as_batch(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
         """Swap the foreachBatch DataFrame for a plain batch scan of the SAME
-        files. Plans derived from a streaming source run with AQE disabled
-        (Spark hard-disables it on streaming queries), costing this pipeline
-        a measured ~25-40% per epoch vs the identical work planned as batch.
-        The micro-batch's file set is already pinned durably in the
-        checkpoint's FileStreamSource log (sources/0/<batchId> — written
-        before the epoch runs, replayed on restart), so re-reading exactly
-        those paths is deterministic and preserves exactly-once. Falls back
-        to the streaming batch_df if the log entry is missing."""
+        files. The foreachBatch DataFrame is a ``Scan ExistingRDD`` over rows
+        the streaming source already read: it runs under AQE, but gets no
+        column pruning, no filter pushdown and no ``inputFiles()`` (so no
+        footer walk). The micro-batch's file set is already pinned durably
+        in the checkpoint's FileStreamSource log (sources/0/<batchId> or its
+        ``.compact`` — written before the epoch runs, replayed on restart),
+        so re-reading exactly those paths is deterministic and preserves
+        exactly-once. Falls back to the streaming batch_df if the log entry
+        is missing."""
         paths = self._epoch_source_files(epoch_id)
         if not paths:
             return batch_df

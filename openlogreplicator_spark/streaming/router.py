@@ -129,9 +129,12 @@ class TableRouter:
     # ------------------------------------------------------------- drivers
     def run_available_now(self, max_files_per_trigger: int = 1) -> None:
         """Checkpointed streaming replay fanning each epoch out to every route.
-        (The single-table pipeline's batch re-read AQE recovery applies here
-        unchanged if needed; the router keeps the plain foreachBatch form —
-        the fan-out itself adds no streaming-derived jobs beyond it.)"""
+        (The single-table pipeline re-reads each epoch's files as a plain
+        batch scan, because the foreachBatch DataFrame is a ``Scan
+        ExistingRDD`` with no column pruning or filter pushdown; that re-read
+        would apply here unchanged if needed. The router keeps the plain
+        foreachBatch form — the fan-out itself adds no streaming-derived jobs
+        beyond it.)"""
         stream = (
             self.spark.readStream.schema(EVENTS_DDL)
             .option("maxFilesPerTrigger", max_files_per_trigger)

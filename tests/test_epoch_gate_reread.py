@@ -124,3 +124,33 @@ def test_schema_gate_offset_log_bound_is_conservative(
     assert derived.inputFiles() == []
     assert p._schema_gate(derived, epoch_id=3)[1] >= true_max
     assert p._schema_gate_stats["agg"] == 0
+
+
+def test_compact_offset_log_entry_is_read(spark, events_dir, tmp_path):
+    """Spark writes every 10th FileStreamSource batch as ``<id>.compact``,
+    holding the entries of every batch so far. The re-read and the footer
+    walk of that epoch must open it and keep only the epoch's own files."""
+    p = _pipeline(spark, events_dir, tmp_path, "cp")
+    src_dir = os.path.join(p.checkpoint_path, "sources", "0")
+    os.makedirs(src_dir)
+    files = sorted(
+        os.path.join(str(events_dir), f)
+        for f in os.listdir(str(events_dir))
+        if f.endswith(".parquet")
+    )
+    batches = {b: [files[b % len(files)]] for b in range(9)}
+    batches[9] = [files[1], files[4]]
+    with open(os.path.join(src_dir, "9.compact"), "w") as f:
+        f.write("v1\n")
+        for b, paths in batches.items():
+            for path in paths:
+                f.write(json.dumps({"path": "file://" + path, "batchId": b}) + "\n")
+
+    assert p._epoch_source_files(9) == ["file://" + x for x in batches[9]]
+    marker = spark.createDataFrame([(1,)], ["sentinel"])
+    out = p._reread_epoch_as_batch(marker, 9)
+    got = sorted(u[7:] if u.startswith("file://") else u for u in out.inputFiles())
+    assert got == batches[9]
+    stats = p._epoch_footer_stats(marker, 9)
+    assert stats is not None
+    assert stats["rows"] == spark.read.schema(EVENTS_DDL).parquet(*batches[9]).count()

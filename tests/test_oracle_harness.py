@@ -38,3 +38,25 @@ def test_int_width_divergence_fails():
     b = pd.DataFrame({"n": pd.array([1, 2], dtype="int64")})
     ok, msg = frames_equal(normalize(a), normalize(b))
     assert not ok and "dtypes differ" in msg
+
+
+def test_check_oracle_selects_by_name_or_prefix():
+    import os
+    import sys
+
+    import pytest
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+    from check_oracle import select_entries
+
+    names = ["engine_replay_state", "ann_ivf_topk", "engine_replay_state_asof",
+             "docs_bpe_learn"]
+    assert select_entries(names, []) == names
+    # an exact name picks only itself, even where it prefixes another entry
+    assert select_entries(names, ["engine_replay_state"]) == ["engine_replay_state"]
+    # prefixes pick whole families, in registration order
+    assert select_entries(names, ["engine_", "ann_"]) == [
+        "engine_replay_state", "ann_ivf_topk", "engine_replay_state_asof"
+    ]
+    with pytest.raises(SystemExit):
+        select_entries(names, ["nope_"])

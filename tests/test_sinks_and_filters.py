@@ -306,12 +306,17 @@ def test_dead_letter_fixture_state_and_idempotence(spark, tmp_path):
     # idempotent re-delivery of the poison epoch: a FRESH pipeline (the
     # finalized-epoch early return must not swallow the re-run — this is
     # the checkpoint-replay shape) sharing the dead-letter dir re-executes
-    # the side write; the per-epoch overwrite keeps the count flat
+    # the side write; the per-epoch overwrite keeps the count flat. The
+    # fresh table first applies the earlier epochs, so its dictionary
+    # reaches the poison epoch's schema version (an unreachable version is
+    # refused with SchemaVersionError).
     p2 = CdcPipeline(
         spark, ev, str(tmp_path / "t2"), str(tmp_path / "c2"),
         max_html_bytes=_DL_MAX_HTML,
         dead_letter_path=str(tmp_path / "dead"),
     )
+    for i, f in enumerate(files[:-1]):
+        p2.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), epoch_id=i)
     p2.apply_epoch(
         spark.read.schema(EVENTS_DDL).parquet(files[-1]),
         epoch_id=len(files) - 1,

@@ -1,5 +1,6 @@
 """Non-file sources + schema-evolution edge cases."""
 
+import os
 import time
 
 import pytest
@@ -265,3 +266,43 @@ def test_jsonl_source_replays_identically(spark, events_dir, tmp_path):
     # the streaming flavor exposes the identical schema
     s = jsonl_events(spark, jl_dir, streaming=True)
     assert s.isStreaming and s.schema == jsonl_events(spark, jl_dir).schema
+
+
+def test_unreachable_schema_version_is_refused(spark, events_dir, events_pdf, tmp_path):
+    """An epoch the dictionary cannot reach is refused before any data
+    commit: committed DML above the dictionary with no DDL evolving it, and a
+    DDL chain with a gap. The last fixture file holds the v4 DDL and DML at
+    v3/v4, so on a fresh (v1) table both shapes occur."""
+    from openlogreplicator_spark.replayer import replay
+    from openlogreplicator_spark.streaming.pipeline import SchemaVersionError
+
+    files = sorted(
+        os.path.join(events_dir, f) for f in os.listdir(events_dir)
+        if f.endswith(".parquet")
+    )
+    last = spark.read.schema(EVENTS_DDL).parquet(files[-1])
+    assert last.filter(F.col("op") == "ddl").agg(F.min("schema_ver")).first()[0] > 2
+
+    def fresh(name):
+        return CdcPipeline(spark, events_dir, str(tmp_path / name / "t"),
+                           str(tmp_path / name / "c"), n_buckets=4)
+
+    for name, df in (("dml", last.filter(F.col("op") != "ddl")), ("gap", last)):
+        p = fresh(name)
+        with pytest.raises(SchemaVersionError):
+            p.apply_epoch(df, 0)
+        t = LakeTable.load(spark, p.table_path)
+        assert t.current_schema_ver == 1
+        assert t.last_epoch()[0] < 0
+        assert p.target_state().count() == 0
+
+    p = fresh("ordered")
+    for i, f in enumerate(files):
+        p.apply_epoch(spark.read.schema(EVENTS_DDL).parquet(f), i)
+    got = p.target_state().toPandas().sort_values("url").reset_index(drop=True)
+    want = replay(events_pdf)
+    assert list(got["url"]) == list(want["url"])
+    assert list(got["text"]) == list(want["text"])
+    assert got["http_status"].astype("Int64").equals(
+        want["http_status"].astype("Int64")
+    )
